@@ -393,7 +393,7 @@ def kcore_peel(
     per-round shuffle budget as PageRank, with the edge frame SHRINKING
     monotonically. State hygiene matches the other fixed-point loops:
     eager localCheckpoint per round cuts lineage, superseded frames are
-    unpersisted immediately."""
+    dereferenced immediately."""
     with _loop_shuffle_partitions(edges):
         cur = (
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -457,12 +457,15 @@ def kcore_peel(
             out = census if out is None else out.unionByName(census)
             # Pin the census rows accumulated so far (≤ r tiny rows) so
             # nothing downstream references superseded `ann` frames,
-            # then drop the PREVIOUS round's O(edges) checkpoint — the
-            # current `ann` is still `cur`'s source for the next round.
-            # (r15 ADVICE: holding every round's ann for the whole loop
-            # grows peak block-manager storage to the SUM of all
-            # rounds' surviving edge sets; with the per-round census
-            # checkpoint the high-water mark is two rounds' edges.)
+            # then let go of the PREVIOUS round's O(edges) checkpoint —
+            # the current `ann` is still `cur`'s source for the next
+            # round. Superseded checkpoint blocks are freed by
+            # dereferencing (rebinding `prev_ann`) plus Spark's
+            # ContextCleaner, not by unpersist(), which only drops
+            # SQL-cache entries and a localCheckpoint'd frame has none.
+            # Holding every round's ann would keep the SUM of all
+            # rounds' surviving edge sets reachable; this keeps at most
+            # two rounds' edges referenced.
             out = out.localCheckpoint(eager=True)
             if r == 1:
                 cur.unpersist()

@@ -210,13 +210,12 @@ _NONDET_PLAN_MARKERS = (
     "localtablescan",
     # r15 ADVICE: plans whose toString does not pin their ROWS even
     # though inputFiles() is non-empty — an RDD-backed leaf (e.g. a
-    # localCheckpoint'd frame joined to a file scan) or a cached
-    # relation can hold different data under a structurally identical
-    # plan, and monotonically_increasing_id() is partitioning-dependent
+    # localCheckpoint'd frame joined to a file scan) can hold different
+    # data under a structurally identical plan, and
+    # monotonically_increasing_id() is partitioning-dependent
     "logicalrdd",
     "existingrdd",
     "scanexistingrdd",
-    "inmemoryrelation",
     "monotonically_increasing_id",
 )
 
@@ -543,18 +542,20 @@ class TableLog:
                     dst = self.data_dir / f"{tag}-{token}-{i:05d}.parquet"
                     _link_or_copy(p, dst)
                     out.append(str(dst))
-                return out
+                if out:
+                    return out
             except OSError:
-                # r15 ADVICE (TOCTOU): the staged dir vanished between
-                # the is_dir() check and the relink (tmp cleaner). Evict
-                # the key, unlink whatever partially landed, and fall
-                # through to a fresh Spark write.
-                _LAND_STAGE_CACHE.pop(key, None)
                 for f in out:
                     try:
                         _os.unlink(f)
                     except OSError:
                         pass
+            # TOCTOU: the staged dir vanished between the is_dir() check
+            # and the relink (tmp cleaner) — a failed link, or a glob
+            # over the missing dir that yields nothing. Either way it is
+            # a cache miss: evict the key and fall through to a fresh
+            # Spark write, never an empty landing.
+            _LAND_STAGE_CACHE.pop(key, None)
         scratch = Path(tempfile.mkdtemp(prefix="crs_tablelog_"))
         keep_scratch = False
         try:

@@ -19,8 +19,11 @@ compare is exact):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,374 +41,83 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-#: Driver-facing emission order. The driver oracle-checks exactly the
-#: FIRST 50 names in ``queries()`` iteration order (a fixed 50, not
-#: proportional — established rounds 8-9).
-#:
-#: Rotation-freshness policy v2 (v1 adopted round 9, v2 round 14;
-#: enforced by tests/test_contract.py::test_survey2_evidence_freshness):
-#: no SURVEY §2 operator's latest driver CORRECTNESS row may be older
-#: than 5 rounds, and no OTHER registered query's older than 10 — every
-#: query now has a deadline (latest row + floor + 1 = the round it must
-#: re-enter the window by). Each round's window fronts the queries whose
-#: deadline arrives, and spare slots go to new registrations, re-checks
-#: of operators whose behavior changed, then earliest-deadline-first
-#: pre-emptions (two-round feasibility enforced by
-#: test_next_round_cohort_fits_window).
-#:
-#: Why the v2 floors: the round-13 verdict asked for a non-§2 floor of
-#: ~8 on top of the §2 floor of 4. That combination is over capacity —
-#: steady-state §2 demand at floor 4 is 214/5 ≈ 42.8 of the ~48 usable
-#: slots/round, leaving ~5.2 for 94 depth queries (needs floor ≥ 17,
-#: and even 17/18 die on the 50-wide r13 §2 cohort transient; EDF
-#: simulations in DESIGN.md's round-14 log). Trading §2 to floor 5
-#: (214/6 ≈ 35.7) funds non-§2 at floor 10 (94/11 ≈ 8.5): ≈ 44 of 48,
-#: feasible through round 29 by simulation — the uniform-coverage
-#: outcome the verdict item actually wanted.
-#:
-#: ================= ROUND-16 WINDOW (slots 1-50) =================
-#: Pure EDF rotation again (scripts/plan_rotation.py is the derivation
-#: of record), ZERO new registrations — the registry has been frozen at
-#: 308 since round 14; rounds 15-16 are optimization rounds. Tuple in
-#: (deadline, name) order — deadline = latest green CORRECTNESS row +
-#: class floor (v2: §2 5 / non-§2 10) + 1 — so the window IS the head
-#: and the tail documents the coming rounds' cohorts in order.
-#:   1-28  the r16 MANDATORY cohort (deadline 16): the 28 dl-16 names
-#:         the round-15 header predicted — the r10-evidence §2 cohort
-#:         remainder plus the r5-evidence depth remainder (the exact
-#:         list the round-15 test_survey2_evidence_freshness failure
-#:         named at this HEAD).
-#:  29-50  22 pre-empts from the 48-wide r17-deadline cohort,
-#:         earliest-deadline-first, alphabetical within the tie.
-#: RESERVE 8 → 7 this round (plan_rotation.py + test_contract.py): the
-#: dl≤18 demand at r16 HEAD is 28+48+59 = 135 refreshes against
-#: 50 + 2×(50−RESERVE) slots — with reserve 8 that is 134, infeasible
-#: by exactly one for EVERY window choice (EDF is optimal, so no
-#: rotation fixes it); with reserve 7 it is 136 and the two-round
-#: simulation passes (r17 = 26 ≤ 43, r18 = 42 ≤ 43). Holding 8 slots
-#: for new registrations was sized when registrations landed every
-#: round; the registry is frozen, so 7 still funds re-checks while
-#: unstarving the refresh schedule. Re-verified every HEAD by
-#: test_next_round_cohort_fits_window.
-DRIVER_ORDER: tuple[str, ...] = (
-    "scan_partition_pruning",
-    "select_project",
-    "sim_pq_adc",
-    "sink_parquet",
-    "sql_cte_surface",
-    "sql_scripting",
-    "src_listing",
-    "stream_checkpoint",
-    "stream_dedup",
-    "stream_foreach_merge",
-    "stream_interval_join_outer",
-    "stream_join_then_window",
-    "stream_semi_join",
-    "stream_session",
-    "stream_sliding",
-    "stream_state_timeout",
-    "stream_stateful",
-    "stream_tumbling",
-    "stream_watermark_late",
-    "text_ngram_topk",
-    "ts_changepoint",
-    "ts_downsample_ltob",
-    "ts_max_drawdown",
-    "ts_resample_ohlc",
-    "ts_seasonal_decompose",
-    "win_lag_delta",
-    "win_skyline_2d",
-    "win_time_rolling",
-    "agg_histogram_2d",
-    "agg_mad_outliers",
-    "agg_sketch_quantiles",
-    "corpus_prepare",
-    "corpus_prepare_v2",
-    "dedup_cc_twostar",
-    "dedup_connected_components",
-    "dedup_embedding_cosine",
-    "dedup_incremental_digest",
-    "dedup_incremental_minhash",
-    "dedup_keep_representatives",
-    "dedup_lines_corpus",
-    "dedup_substring_spans",
-    "dedup_url_canonical",
-    "filter_gopher_rules",
-    "filter_pred",
-    "geo_grid_join",
-    "geo_knn_join",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "join_fuzzy_editdistance",
-    "join_interval_binned",
-    "lake_merge_mor",
-    "lake_optimize_sharded",
-    "lake_update_cow",
-    "lake_update_mor",
-    "ml_linear_trend_exact",
-    "mm_scalar_quantize",
-    "pipeline_backfill",
-    "pipeline_incremental",
-    "quality_classifier_score",
-    "sample_balanced_classes",
-    "sample_global_shuffle",
-    "sample_poisson_bootstrap",
-    "sample_quality_buckets",
-    "scan_schema_evolution",
-    "sim_maxsim_multivector",
-    "sink_parquet_partitioned",
-    "src_http_zip_xml",
-    "stream_sink_optimize",
-    "text_keywords_tfidf",
-    "tier_r_preprocess",
-    "ts_ewma_forecast",
-    "udf_grouped_trend",
-    "val_constraints",
-    "val_distribution_drift",
-    "win_event_pattern",
-    "win_gap_islands",
-    "agg_approx_topk",
-    "agg_collect_list",
-    "agg_countmin_heavyhitters",
-    "agg_distribution_shape",
-    "agg_grouping_sets",
-    "agg_hll_setops",
-    "agg_stats",
-    "fn_collation",
-    "fn_conditional",
-    "fn_date_arith",
-    "fn_format_string",
-    "fn_map_ops",
-    "fn_month_code",
-    "fn_recode_map",
-    "fn_string_suite",
-    "fn_struct_array",
-    "fn_try_arith",
-    "fn_variant_json",
-    "funnel_sessionized",
-    "graph_label_propagation",
-    "join_asof_forward",
-    "join_full_outer",
-    "lake_clone_shallow",
-    "lake_delete_mor",
-    "lake_merge_full",
-    "lake_optimize_commit",
-    "lake_partition_evolution",
-    "lake_stats_prune",
-    "lake_time_travel",
-    "lake_vacuum_retention",
-    "lake_zorder_locality",
-    "lakehouse_lifecycle",
-    "mm_audio_energy",
-    "mm_video_scene_stats",
-    "pipeline_cdc_apply",
-    "profile_table",
-    "scalar_subquery",
-    "scan_csv_permissive",
-    "scd2_history",
-    "sim_ann_ivf",
-    "sim_containment_join",
-    "sink_manifest_atomic",
-    "sql_pipe_syntax",
-    "sql_recursive_cte",
-    "stream_progress_metrics",
-    "stream_sink_tablelog",
-    "stream_state_reader",
-    "stream_stateful_tws",
-    "text_bpe_merges",
-    "text_idf_topk",
-    "text_perplexity_filter",
-    "text_repetition_stats",
-    "ts_holt_linear",
-    "udtf_analyze_polymorphic",
-    "udtf_doc_chunks",
-    "unpivot_stack",
-    "win_first_last",
-    "win_percent_cume",
-    "win_range_frame",
-    "agg_distinct",
-    "agg_hash_group",
-    "agg_kll_quantile_merge",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_rollup_cube",
-    "agg_theta_setops",
-    "agg_unique_check",
-    "dedup_exact",
-    "dedup_near_minhash",
-    "fn_array_ops",
-    "fn_cast_datetime_year",
-    "fn_date_range",
-    "fn_math_std",
-    "fn_regex_match",
-    "fn_replace_null",
-    "join_aqe_skew",
-    "join_broadcast",
-    "join_cross_params",
-    "join_equi_inner",
-    "join_outer",
-    "join_semi_anti",
-    "join_similarity",
-    "join_theta_range",
-    "lake_changes_between",
-    "lake_merge_cdf",
-    "limit_topk_global",
-    "ml_gd_classifier",
-    "mm_embedding_col",
-    "scan_metadata_columns",
-    "set_except",
-    "set_intersect",
-    "set_union",
-    "sim_join_threshold",
-    "sim_topk_cosine",
-    "sink_pyds_streamwriter",
-    "sink_pyds_twophase",
-    "sort_order",
-    "src_parquet_scan",
-    "src_url_gen",
-    "stream_cdf_source",
-    "stream_ivm_groupby",
-    "stream_replicate_tablelog",
-    "stream_state_changefeed",
-    "stream_state_reader_join",
-    "text_tokenize_stats",
-    "udf_map_in_arrow",
-    "win_ntile_rank",
-    "win_rank_topk",
-    "win_running",
-    "agg_approx_distinct",
-    "agg_autocorr",
-    "agg_benford_deviation",
-    "agg_bitmap_distinct",
-    "agg_entropy_gini",
-    "agg_ks_test",
-    "agg_weighted_percentile",
-    "dedup_semdedup",
-    "fn_interval_arith",
-    "fn_tz_convert",
-    "fn_xml_parse",
-    "graph_jaccard_neighbors",
-    "join_asof_nearest",
-    "join_lateral_topk",
-    "lake_bloom_prune",
-    "lake_branch_wap",
-    "lake_constraints_enforce",
-    "lake_manifest_shard",
-    "lake_restore_version",
-    "lake_table_history",
-    "ml_normal_equations",
-    "plan_cache_reuse",
-    "sample_epoch_reshuffle",
-    "scan_pyds_pushdown",
-    "sink_overwrite_dynamic",
-    "sql_analyze_cbo",
-    "sql_ctas_insert",
-    "sql_exec_immediate",
-    "sql_merge_evolution",
-    "sql_session_variables",
-    "sql_udf_create_function",
-    "src_binaryfile",
-    "src_tablelog_format",
-    "stream_state_ttl",
-    "stream_stateful_rocksdb",
-    "stream_static_join",
-    "text_bpe_encode",
-    "train_collate_batches",
-    "train_pack_sequences",
-    "ts_gapfill_interpolate",
-    "udf_arrow_scalar",
-    "win_cumulative_distinct",
-    "win_median_rolling",
-    "agg_decayed_counts",
-    "agg_gini_concentration",
-    "agg_markov_transitions",
-    "agg_retention_cohorts",
-    "fn_hash_suite",
-    "fn_json_get",
-    "graph_bfs_layers",
-    "graph_kcore",
-    "join_asof",
-    "lake_checkpoint",
-    "ml_kmedians_embed",
-    "ml_pca_power",
-    "mm_phash_near_dup",
-    "proj_add_missing",
-    "proj_lit",
-    "proj_rename",
-    "sample_weighted_mix",
-    "stream_interval_join",
-    "stream_session_live",
-    "stream_sliding_live",
-    "stream_tumbling_live",
-    "contamination_ngram",
-    "doc_chunk_split",
-    "doc_pack_tokens",
-    "join_skew_salted",
-    "merge_upsert",
-    "sample_hash_split",
-    "sample_stratified",
-    "text_normalize",
-    "text_pii_scrub",
-    "udf_vector_norm",
-    "dedup_exact_hash",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "src_csv_roundtrip",
-    "src_json_roundtrip",
-    "src_orc_roundtrip",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality_score",
-    "text_token_count",
-    "agg_corr_cov",
-    "agg_histogram",
-    "agg_hll_merge",
-    "agg_mode",
-    "anomaly_zscore",
-    "compact_small_files",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "fn_bitwise_ops",
-    "fn_edit_distance",
-    "fn_url_parse",
-    "join_bucketed",
-    "join_dynamic_pruning",
-    "join_runtime_bloom",
-    "mm_binary_decode",
-    "mm_frame_sample",
-    "mm_image_resize",
-    "observe_metrics",
-    "q10_returned_items",
-    "q11_important_values",
-    "q12_shipmode_priority",
-    "q13_customer_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_parts_supplier_count",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q19_disjunctive_revenue",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    "q2_min_cost_supplier",
-    "sample_bottomk",
-)
+#: Driver-window policy: SURVEY.md §2 operators' evidence floor, every
+#: other query's floor, the window the driver checks, and the slots per
+#: future round held for new registrations and re-checks.
+S2_FLOOR, DEPTH_FLOOR, WINDOW, RESERVE = 5, 10, 50, 7
+ROOT = Path(__file__).resolve().parents[1]
+
+
+@dataclass(frozen=True)
+class Rotation:
+    current: int  # the round being built: one past the newest evidence
+    latest: dict[str, int]  # name -> latest round with a green row
+    survey2: frozenset[str]
+
+    def deadline(self, name: str, evidence: dict[str, int] | None = None) -> int:
+        """The round by which ``name`` must be back in the window."""
+        floor = S2_FLOOR if name in self.survey2 else DEPTH_FLOOR
+        return (self.latest if evidence is None else evidence)[name] + floor + 1
+
+    @property
+    def order(self) -> list[str]:
+        """Every registered name: never-checked first, then EDF."""
+        names = sorted(REGISTRY)
+        never = [n for n in names if n not in self.latest]
+        checked = [n for n in names if n in self.latest]
+        return never + sorted(checked, key=lambda n: (self.deadline(n), n))
+
+    @property
+    def window(self) -> list[str]:
+        return self.order[:WINDOW]
+
+    def cohorts(
+        self, window: list[str], rounds: int = 2, fill: int = WINDOW - RESERVE
+    ) -> list[list[str]]:
+        """The mandatory cohort of each of the next ``rounds`` rounds,
+        assuming ``window`` goes green now and each later round
+        refreshes its ``fill`` earliest-deadline names."""
+        sim = dict(self.latest)
+        sim.update(dict.fromkeys(window, self.current))
+        out = []
+        for future in range(self.current + 1, self.current + rounds + 1):
+            out.append(sorted(n for n in sim if self.deadline(n, sim) <= future))
+            edf = sorted(sim, key=lambda n: (self.deadline(n, sim), n))
+            sim.update(dict.fromkeys(edf[:fill], future))
+        return out
+
+
+def survey2_ids(root: Path = ROOT) -> frozenset[str]:
+    src = (root / "SURVEY.md").read_text()
+    sec2 = src[src.index("## 2. Operator inventory") : src.index("## 3. Query lifecycle")]
+    ids = set(re.findall(r"^\| `([a-z0-9_]+)`", sec2, re.M))
+    ids.add("val_constraints")  # declared in §2.7 prose, not a table row
+    return frozenset(ids)
+
+
+def rotation(root: Path = ROOT) -> Rotation:
+    """The driver window as a pure function of the evidence under ``root``.
+
+    The driver oracle-checks the first WINDOW names of ``queries()``. A
+    name's deadline is its latest green round in ``CORRECTNESS_r*.json``
+    plus its floor (S2_FLOOR for SURVEY.md §2 operators, DEPTH_FLOOR for
+    the rest) plus one; names are emitted earliest-deadline-first, never-
+    checked names first, alphabetical within a tie. Each future round
+    holds RESERVE slots back. Evidence and SURVEY.md are read per call,
+    never at import: Python workers get the package without them."""
+    latest: dict[str, int] = {}
+    newest = 0
+    for p in root.glob("CORRECTNESS_r*.json"):
+        rn = int(p.stem.split("_r")[1])
+        newest = max(newest, rn)
+        for name, row in json.loads(p.read_text()).items():
+            if row.get("hash_match"):
+                latest[name] = max(latest.get(name, 0), rn)
+    return Rotation(newest + 1, latest, survey2_ids(root))
 
 
 def _ordered() -> list[Query]:
-    missing = [n for n in DRIVER_ORDER if n not in REGISTRY]
-    if missing:
-        raise ValueError(f"DRIVER_ORDER names not registered: {missing}")
-    head = [REGISTRY[n] for n in DRIVER_ORDER]
-    seen = set(DRIVER_ORDER)
-    return head + [q for q in REGISTRY.values() if q.name not in seen]
+    return [REGISTRY[n] for n in rotation().order]
 
 
 def register(

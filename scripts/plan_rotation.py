@@ -1,134 +1,60 @@
-"""Rotation planner: compute the next driver window and the capacity
-horizon from the real CORRECTNESS_r*.json evidence state.
-
-Every round's DRIVER_ORDER head has been derived by hand from the same
-three inputs (SURVEY §2 IDs, latest green evidence, the v2 freshness
-floors); this script is that derivation, committed, so the round-N+1
-builder runs it instead of re-deriving the policy — and so the policy
-itself has one executable statement of record.
+"""Print the driver window that ``chess_ratings_spark.registry.rotation``
+derives from the committed CORRECTNESS_r*.json evidence, and its
+two-round feasibility check.
 
 Usage:
     python scripts/plan_rotation.py            # window + 2-round check
-    python scripts/plan_rotation.py --horizon  # EDF simulation to +15
+    python scripts/plan_rotation.py --horizon  # + EDF simulation to +15
 
-Policy (v2, round 14; enforced by tests/test_contract.py):
-- SURVEY §2 operators: evidence floor 5 rounds; other registered
-  queries: floor 10. deadline = latest green row + floor + 1.
-- The window is the first 50 names of queries(); the driver checks
-  exactly those. Mandatory = deadline <= current round; spare slots
-  fill earliest-deadline-first (EDF — optimal for deadline
-  feasibility), alphabetical within a tie.
-- Capacity law (round-15 measurement, DESIGN.md): with 308 queries and
-  these floors, at most ~2 new registrations per round keep every
-  future cohort under the window; the --horizon table shows where it
-  breaks for a given fill width.
+Exits 1 when a mandatory cohort of the next two rounds does not fit the
+window minus the reserve.
 """
 
 from __future__ import annotations
 
-import json
 import pathlib
-import re
 import sys
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
-
-# RESERVE 8 → 7 at round 16: registry frozen at 308 since r14, and the
-# r16-HEAD dl≤18 demand (135) exceeds 50 + 2×(50−8) by one — EDF-proof
-# infeasible at reserve 8; see tests/test_contract.py for the full note.
-S2_FLOOR, NON_S2_FLOOR, WINDOW, RESERVE = 5, 10, 50, 7
-
-
-def survey2_ids() -> set[str]:
-    src = (ROOT / "SURVEY.md").read_text()
-    sec2 = src[
-        src.index("## 2. Operator inventory") : src.index("## 3. Query lifecycle")
-    ]
-    ids = set(re.findall(r"^\| `([a-z0-9_]+)`", sec2, re.M))
-    ids.add("val_constraints")  # §2.7 prose declaration
-    return ids
-
-
-def evidence() -> tuple[dict[str, int], int]:
-    latest: dict[str, int] = {}
-    rounds = [0]
-    for p in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        rn = int(p.stem.split("_r")[1])
-        rounds.append(rn)
-        for name, row in json.loads(p.read_text()).items():
-            if row.get("hash_match"):
-                latest[name] = max(latest.get(name, 0), rn)
-    return latest, max(rounds) + 1
 
 
 def main() -> None:
     import chess_ratings_spark.plans  # noqa: F401  (registration import)
     from chess_ratings_spark import registry
 
-    ids = survey2_ids()
-    latest, current = evidence()
-    allq = sorted(registry.REGISTRY)
-
-    def floor(n: str) -> int:
-        return S2_FLOOR if n in ids else NON_S2_FLOOR
-
-    def deadline(n: str) -> int:
-        return latest[n] + floor(n) + 1
-
-    never = [n for n in allq if n not in latest]
-    checked = [n for n in allq if n in latest]
-    edf = sorted(checked, key=lambda n: (deadline(n), n))
-    # never-checked names are mandatory window members (contract:
-    # never-checked ⊆ window), fronted before the EDF fill
-    window = never + edf[: WINDOW - len(never)]
-
-    print(f"round being built: r{current}  registry: {len(allq)} queries")
+    rot = registry.rotation()
+    window = rot.window
+    print(f"round being built: r{rot.current}  registry: {len(registry.REGISTRY)} queries")
+    never = [n for n in rot.order if n not in rot.latest]
     if never:
         print(f"never-checked (must be in window): {never}")
-    mand = [n for n in window if n in latest and deadline(n) <= current]
-    print(f"mandatory this round (deadline <= {current}): {len(mand)}")
+    mand = [n for n in window if n in rot.latest and rot.deadline(n) <= rot.current]
+    print(f"mandatory this round (deadline <= {rot.current}): {len(mand)}")
     print(f"window ({len(window)} slots, EDF order):")
     for n in window:
-        tag = "NEW" if n not in latest else f"dl{deadline(n)}"
-        kind = "S2" if n in ids else "depth"
-        ev = "-" if n not in latest else f"r{latest[n]}"
+        tag = "NEW" if n not in rot.latest else f"dl{rot.deadline(n)}"
+        kind = "S2" if n in rot.survey2 else "depth"
+        ev = "-" if n not in rot.latest else f"r{rot.latest[n]}"
         print(f"  {n:40s} {tag:6s} {kind:5s} ev={ev}")
 
-    # two-round feasibility, the contract test's exact simulation
-    sim = dict(latest)
-    for n in window:
-        sim[n] = current
+    cap = registry.WINDOW - registry.RESERVE
     ok = True
-    for fut in (current + 1, current + 2):
-        m = sorted(n for n in sim if sim[n] + floor(n) + 1 <= fut)
-        fits = len(m) <= WINDOW - RESERVE
+    for future, cohort in enumerate(rot.cohorts(window), start=rot.current + 1):
+        fits = len(cohort) <= cap
         ok &= fits
         print(
-            f"r{fut} mandatory cohort: {len(m)} "
-            f"(cap {WINDOW - RESERVE}) {'OK' if fits else 'INFEASIBLE'}"
+            f"r{future} mandatory cohort: {len(cohort)} "
+            f"(cap {cap}) {'OK' if fits else 'INFEASIBLE'}"
         )
-        fill = sorted(sim, key=lambda n: (sim[n] + floor(n) + 1, n))
-        for n in fill[: WINDOW - RESERVE]:
-            sim[n] = fut
 
     if "--horizon" in sys.argv:
         print("\nEDF horizon (15 rounds) by slots refreshed per round:")
         for width in (50, 48, 46, 44):
-            sim = dict(latest)
-            for n in window:
-                sim[n] = current
-            worst, bad = 0, []
-            for fut in range(current + 1, current + 16):
-                m = [n for n in sim if sim[n] + floor(n) + 1 <= fut]
-                worst = max(worst, len(m))
-                if len(m) > width:
-                    bad.append(fut)
-                fill = sorted(sim, key=lambda n: (sim[n] + floor(n) + 1, n))
-                for n in fill[:width]:
-                    sim[n] = fut
+            sizes = [len(c) for c in rot.cohorts(window, rounds=15, fill=width)]
+            bad = [rot.current + 1 + i for i, s in enumerate(sizes) if s > width]
             verdict = "feasible" if not bad else f"breaks at r{bad}"
-            print(f"  fill={width}: max cohort {worst} -> {verdict}")
+            print(f"  fill={width}: max cohort {max(sizes)} -> {verdict}")
 
     sys.exit(0 if ok else 1)
 

@@ -1,63 +1,38 @@
-"""Evidence-freshness contract (round-9 verdict item 6; policy v2 in
-round 14): the rotation policy in registry.py must not silently decay.
+"""Evidence-freshness contract: the driver window that
+``registry.rotation()`` derives must keep every query's evidence fresh.
 For every SURVEY.md §2 operator ID, the latest driver CORRECTNESS row
-may be at most 5 rounds old; for every other registered query, at most
-10 — or the query must be scheduled in the current driver window (the
-first 50 names of queries()), which is how an aging row gets its
-refresh. A never-checked query must likewise be scheduled."""
+may be at most ``S2_FLOOR`` rounds old; for every other registered
+query, at most ``DEPTH_FLOOR`` — or the query must be scheduled in the
+current driver window (the first ``WINDOW`` names of queries()), which
+is how an aging row gets its refresh. A never-checked query must
+likewise be scheduled."""
 
 from __future__ import annotations
 
 import json
-import pathlib
 import re
+import shutil
 
 import chess_ratings_spark.plans  # noqa: F401
 from chess_ratings_spark import registry
+from chess_ratings_spark.registry import DEPTH_FLOOR, RESERVE, S2_FLOOR, WINDOW
 
-ROOT = pathlib.Path(__file__).resolve().parents[1]
-#: Policy v2 (round 14): §2 floor traded 4 → 5 to fund an enforced
-#: floor for the 94 depth queries (see test_survey2_evidence_freshness
-#: docstring for the capacity math).
-MAX_EVIDENCE_AGE = 5
-NON_S2_MAX_AGE = 10
-
-
-def _survey2_ids() -> set[str]:
-    src = (ROOT / "SURVEY.md").read_text()
-    sec2 = src[src.index("## 2. Operator inventory") : src.index("## 3. Query lifecycle")]
-    ids = set(re.findall(r"^\| `([a-z0-9_]+)`", sec2, re.M))
-    ids.add("val_constraints")  # declared in §2.7 prose, not a table row
-    return ids
-
-
-def _latest_green() -> tuple[dict[str, int], int]:
-    latest: dict[str, int] = {}
-    rounds = [0]
-    for p in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        rn = int(p.stem.split("_r")[1])
-        rounds.append(rn)
-        for name, row in json.loads(p.read_text()).items():
-            if row.get("hash_match"):
-                latest[name] = max(latest.get(name, 0), rn)
-    # the round being built is one past the newest recorded evidence
-    return latest, max(rounds) + 1
+ROOT = registry.ROOT
 
 
 def test_survey2_ids_all_registered():
-    ids = _survey2_ids()
+    ids = registry.survey2_ids()
     missing = sorted(ids - set(registry.REGISTRY))
     assert not missing, f"SURVEY §2 IDs without a registered query: {missing}"
 
 
 def test_new_registrations_land_survey2_rows_same_round():
-    """Round-11 verdict #7: the §2 inventory table must not lag the
-    registry. The registry legitimately carries depth queries beyond
-    §2 (TPC-H, plan-proofs, format round-trips) — that backlog is
-    PINNED here by count; a new registration must either add a §2
-    table row (the default for a new operator) or consciously bump
-    this pin (a deliberate depth query)."""
-    ids = _survey2_ids()
+    """The §2 inventory table must not lag the registry. The registry
+    legitimately carries depth queries beyond §2 (TPC-H, plan-proofs,
+    format round-trips) — that backlog is PINNED here by count; a new
+    registration must either add a §2 table row (the default for a new
+    operator) or consciously bump this pin (a deliberate depth query)."""
+    ids = registry.survey2_ids()
     non_survey2 = sorted(set(registry.REGISTRY) - ids)
     assert len(non_survey2) == 94, (
         f"registry has {len(non_survey2)} non-§2 queries (pinned: 94) — "
@@ -66,31 +41,17 @@ def test_new_registrations_land_survey2_rows_same_round():
     )
 
 
-def test_survey2_evidence_freshness():
-    """Policy v2 (round 14, round-13 verdict #3): EVERY registered
-    query now carries an enforced freshness floor, not just SURVEY §2.
-    The verdict suggested adding a non-§2 floor of ~8 on top of the
-    §2 floor of 4; that combination is over window capacity for ANY
-    non-§2 floor — steady-state demand is 214/(4+1) ≈ 42.8 §2 slots
-    per round out of ~48 usable, leaving ~5.2 for 94 depth queries
-    (needs floor ≥ 17, and even 17/18 die on the 50-wide r13 cohort
-    transient — measured by the EDF simulation in DESIGN.md's round-14
-    log). So the floors are traded: §2 relaxes 4 → 5 (214/6 ≈ 35.7
-    slots/round) which funds a REAL non-§2 floor of 10 (94/11 ≈ 8.5);
-    total ≈ 44 of 48 — feasible, verified by earliest-deadline-first
-    simulation through round 29. Depth evidence can no longer rot
-    silently, which is the verdict item's actual intent."""
-    ids = _survey2_ids()
-    latest, current_round = _latest_green()
-    window = set(list(registry.queries())[:50])
+def _assert_fresh(rot: registry.Rotation, window: set[str]) -> None:
+    ids = rot.survey2
+    latest, current_round = rot.latest, rot.current
     stale = sorted(
         n
         for n in ids
         if n not in window
-        and current_round - latest.get(n, current_round) > MAX_EVIDENCE_AGE
+        and current_round - latest.get(n, current_round) > S2_FLOOR
     )
     assert not stale, (
-        f"SURVEY §2 evidence older than {MAX_EVIDENCE_AGE} rounds and not "
+        f"SURVEY §2 evidence older than {S2_FLOOR} rounds and not "
         f"scheduled in the driver window: {stale}"
     )
     non_s2_stale = sorted(
@@ -98,10 +59,10 @@ def test_survey2_evidence_freshness():
         for n in registry.REGISTRY
         if n not in ids
         and n not in window
-        and current_round - latest.get(n, current_round) > NON_S2_MAX_AGE
+        and current_round - latest.get(n, current_round) > DEPTH_FLOOR
     )
     assert not non_s2_stale, (
-        f"non-§2 depth evidence older than {NON_S2_MAX_AGE} rounds and "
+        f"non-§2 depth evidence older than {DEPTH_FLOOR} rounds and "
         f"not scheduled in the driver window: {non_s2_stale}"
     )
     never = sorted(
@@ -110,58 +71,66 @@ def test_survey2_evidence_freshness():
     assert not never, f"never-driver-checked queries not scheduled: {never}"
 
 
-def _deadline(ids: set[str], evidence: dict[str, int], name: str) -> int:
-    """Last round in which `name`'s current evidence is still valid +1,
-    i.e. the round by which it MUST be in the driver window."""
-    floor = MAX_EVIDENCE_AGE if name in ids else NON_S2_MAX_AGE
-    return evidence[name] + floor + 1
+def test_survey2_evidence_freshness():
+    """EVERY registered query carries an enforced freshness floor, not
+    just SURVEY §2. A §2 floor of 4 with any depth floor is over window
+    capacity: steady-state §2 demand is 214/(4+1) ≈ 42.8 slots per round
+    out of ~48 usable, leaving ~5.2 for 94 depth queries (needs a depth
+    floor ≥ 17, and even that dies on a 50-wide cohort transient — EDF
+    simulations in DESIGN.md). So the floors are traded: §2 at 5
+    (214/6 ≈ 35.7 slots/round) funds a REAL depth floor of 10
+    (94/11 ≈ 8.5); total ≈ 44 of 48, feasible by EDF simulation. Depth
+    evidence can no longer rot silently."""
+    _assert_fresh(registry.rotation(), set(list(registry.queries())[:WINDOW]))
+
+
+def _assert_cohorts_fit(rot: registry.Rotation, window: list[str]) -> None:
+    for future, mandatory in enumerate(rot.cohorts(window), start=rot.current + 1):
+        assert len(mandatory) <= WINDOW - RESERVE, (
+            f"round-{future} mandatory cohort is {len(mandatory)} wide "
+            f"(window {WINDOW} minus reserve {RESERVE}) — pre-empt some of "
+            f"it into an earlier round's spare slots: {mandatory}"
+        )
 
 
 def test_next_round_cohort_fits_window():
-    """Round-11 verdict #2 + round-12 verdict #2: manage the cohort
-    squeeze BEFORE it lands, TWO rounds out — extended in round 14 to
-    BOTH freshness classes (§2 floor 5, non-§2 floor 10). Simulate the
-    current window going green, then roll the policy forward two
-    rounds: each future round must fit its mandatory cohort — every
-    query whose evidence hits its floor — in a 50-slot window with
-    RESERVE slots held for new registrations, spending spare slots
-    earliest-deadline-first (the discipline the registry comment
-    prescribes; EDF is the optimal preemption order for deadline
-    feasibility). Without the N+2 leg a round could pass while leaving
-    the round after next infeasible — the r13/r14 §2 squeeze (43- and
-    46-wide cohorts back to back) is the measured case."""
-    ids = _survey2_ids()
-    latest, current_round = _latest_green()
-    window = list(registry.queries())[:50]
-    simulated = dict(latest)
-    for n in window:
-        simulated[n] = current_round  # assume the driver refreshes the window
-    # Slots held for new registrations + re-checks. 8 → 7 at round 16:
-    # the registry has been frozen at 308 since round 14 (rounds 15-16
-    # are optimization rounds, zero registrations), and at the r16
-    # evidence state the dl≤18 demand is 135 refreshes vs
-    # 50 + 2×42 = 134 slots under reserve 8 — infeasible by one for
-    # EVERY window (EDF is deadline-optimal, so no rotation can fix
-    # it). Reserve 7 (43-slot fill) restores feasibility (r17 = 26,
-    # r18 = 42) while still funding re-checks; revisit upward only if
-    # registrations resume.
-    RESERVE = 7
-    for future in (current_round + 1, current_round + 2):
-        mandatory = sorted(
-            n for n in simulated if _deadline(ids, simulated, n) <= future
-        )
-        assert len(mandatory) <= 50 - RESERVE, (
-            f"round-{future} mandatory cohort is {len(mandatory)} wide "
-            f"(window 50 minus reserve {RESERVE}) — pre-empt some of it "
-            f"into an earlier round's spare slots: {mandatory}"
-        )
-        # that future round's simulated window: the mandatory cohort
-        # plus earliest-deadline pre-empts filling the non-reserved spare
-        edf = sorted(
-            simulated, key=lambda n: (_deadline(ids, simulated, n), n)
-        )[: 50 - RESERVE]
-        for n in edf:
-            simulated[n] = future
+    """Manage the cohort squeeze BEFORE it lands, TWO rounds out, for
+    BOTH freshness classes. Simulate the current window going green,
+    then roll the policy forward two rounds: each future round must fit
+    its mandatory cohort — every query whose evidence hits its floor —
+    in the window with RESERVE slots held for new registrations and
+    re-checks, spending spare slots earliest-deadline-first (the optimal
+    preemption order for deadline feasibility). Without the N+2 leg a
+    round could pass while leaving the round after next infeasible, as
+    two back-to-back 43- and 46-wide §2 cohorts once did. RESERVE is 7,
+    not 8, because with the registry frozen at 308 the two-round demand
+    exceeds 50 + 2×(50−8) slots by one for EVERY window choice (EDF is
+    deadline-optimal, so no rotation can fix it); revisit upward only if
+    registrations resume."""
+    _assert_cohorts_fit(registry.rotation(), list(registry.queries())[:WINDOW])
+
+
+def test_window_advances_with_next_round_evidence(tmp_path):
+    """A new evidence file must never turn the contract red: mark the
+    current derived window green in a synthetic next-round file, and
+    the derivation over that evidence must move to the next round's
+    cohort while still passing the freshness and two-round checks."""
+    for p in ROOT.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, tmp_path)
+    shutil.copy(ROOT / "SURVEY.md", tmp_path)
+    rot = registry.rotation(tmp_path)
+    predicted = rot.cohorts(rot.window)[0]
+    (tmp_path / f"CORRECTNESS_r{rot.current:02d}.json").write_text(
+        json.dumps({n: {"hash_match": True} for n in rot.window})
+    )
+
+    nxt = registry.rotation(tmp_path)
+    assert nxt.current == rot.current + 1
+    assert nxt.window != rot.window
+    # the predicted mandatory cohort is exactly the new window's head
+    assert set(nxt.window[: len(predicted)]) == set(predicted)
+    _assert_fresh(nxt, set(nxt.window))
+    _assert_cohorts_fit(nxt, nxt.window)
 
 
 def test_registry_coverage_survey_counts_in_lockstep():
@@ -318,3 +287,24 @@ def test_bench_probe_reference_survives_degraded_run(monkeypatch, tmp_path):
     assert out2["attempts"] == 2  # first attempt read 3.0 → flagged vs 1.0
     assert out2["degraded"] is False
     assert out2["reference"] == {"compute_sec": 1.01, "io_sec": 1.0}
+
+
+def test_bench_full_keeps_families_when_line_is_trimmed(monkeypatch, tmp_path, capsys):
+    """An over-long stdout line drops its per-family rollup to stay
+    parseable in a 2000-char tail; BENCH_FULL.json must still carry it,
+    together with the complete per-query maps."""
+    import bench
+
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    timings = {f"query_{i:03d}": 1.0 for i in range(300)}
+    families = {f"family_{i:03d}": 1.0 for i in range(100)}
+    line = {"metric": "total_query_wall_clock", "families": families}
+    assert len(json.dumps(line)) > 1900
+    bench._publish(line, {"queries": timings})
+
+    printed = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(printed) <= 1900
+    assert "families" not in json.loads(printed)
+    full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
+    assert full["families"] == families
+    assert full["queries"] == timings

@@ -91,68 +91,33 @@ def test_sketch_quantiles_within_certified_bounds(spark):
 
 
 def test_driver_order_contract():
-    """The driver oracle-checks the first 50 names in queries() order
-    (fixed cap, observed rounds 1+2). Window contract, stated as the
-    POLICY rather than any one round's instance (the round-12-pinned
-    version of this test went stale the moment the round-13 rotation
-    landed): every front-50 slot must be JUSTIFIED — (a) never
-    driver-checked (a new registration), (b) its evidence DEADLINE
-    (latest green row + its class's freshness floor + 1, policy v2:
-    §2 floor 5, non-§2 floor 10 — see tests/test_contract.py) falls
-    within two rounds of the round being built (mandatory now, or a
-    pre-emption from the next two rounds' mandatory cohorts — the
-    horizon test_next_round_cohort_fits_window simulates), (c) an
-    explicit re-check of an operator whose plan/verb changed after its
-    latest driver row (REWRITTEN_RECHECKS below), or (d) a
-    verdict-prescribed refresh (VERDICT_PRESCRIBED below — empty this
-    round: the round-15 window is pure EDF, 13 mandatory TPC-H depth
-    queries + 37 deadline-16 pre-empts, all justified by (b)). And the
-    never-checked backlog must ALL be in the window."""
-    import json
-    import pathlib
-
+    """The driver oracle-checks the first WINDOW names in queries()
+    order, and queries() must emit exactly the order the registry
+    derives. Window contract, stated as the POLICY rather than any one
+    round's instance: every window slot must be JUSTIFIED — (a) never
+    driver-checked (a new registration), or (b) its evidence DEADLINE
+    (latest green row + its class's freshness floor + 1) falls within
+    two rounds of the round being built (mandatory now, or a pre-emption
+    from the next two rounds' mandatory cohorts — the horizon
+    test_next_round_cohort_fits_window simulates). And the never-checked
+    backlog must ALL be in the window."""
     import chess_ratings_spark.plans  # noqa: F401
     from chess_ratings_spark import registry
-    from .test_contract import MAX_EVIDENCE_AGE, NON_S2_MAX_AGE, _survey2_ids
 
-    REWRITTEN_RECHECKS: set[str] = set()
-    VERDICT_PRESCRIBED: set[str] = set()
-
+    rot = registry.rotation()
     names = list(registry.queries())
-    order = list(registry.DRIVER_ORDER)
-    assert len(set(order)) == len(order)
-    assert names[: len(order)] == order
-    assert set(order) <= set(names)
+    assert len(set(names)) == len(names)
+    assert names == rot.order
 
-    root = pathlib.Path(__file__).resolve().parents[1]
-    latest_green: dict[str, int] = {}
-    rounds = [0]
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rn = int(p.stem.split("_r")[1])
-        rounds.append(rn)
-        for name, row in json.loads(p.read_text()).items():
-            if row.get("hash_match"):
-                latest_green[name] = max(latest_green.get(name, 0), rn)
-    current_round = max(rounds) + 1  # the round being built
-
-    s2_ids = _survey2_ids()
-
-    def deadline(n: str) -> int:
-        floor = MAX_EVIDENCE_AGE if n in s2_ids else NON_S2_MAX_AGE
-        return latest_green[n] + floor + 1
-
-    window = names[:50]
+    window = names[: registry.WINDOW]
     unjustified = [
         n
         for n in window
-        if n in latest_green
-        and n not in REWRITTEN_RECHECKS
-        and n not in VERDICT_PRESCRIBED
-        and deadline(n) > current_round + 2
+        if n in rot.latest and rot.deadline(n) > rot.current + 2
     ]
     assert not unjustified, f"window slots wasted: {unjustified}"
 
-    never_checked = [n for n in names if n not in latest_green]
+    never_checked = [n for n in names if n not in rot.latest]
     missing = [n for n in never_checked if n not in window]
     assert not missing, f"never-driver-checked names left out of window: {missing}"
 

@@ -2405,3 +2405,45 @@ def test_land_stage_links_fixture_slices(base, spark):
         os.unlink(p)
     still = sorted(r.k for r in b.snapshot(spark).filter("m = 0").collect())
     assert still == want
+
+
+def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch):
+    """A staged dir that loses its files between the is_dir() check and
+    the relink (a tmp cleaner racing the session) must fall back to a
+    fresh Spark write: the glob over it yields nothing, and an empty
+    relink committed as-is would publish a version with no rows."""
+    import os
+    import pathlib
+
+    from chess_ratings_spark.operators import tablelog as tl
+
+    monkeypatch.setattr(tl, "_USE_LAND_STAGING", True)
+    src_dir = base + "/fixture"
+    spark.range(40).selectExpr("id AS k", "id % 2 AS m").write.mode(
+        "overwrite"
+    ).parquet(src_dir)
+    sl = spark.read.parquet(src_dir).filter(F.col("m") == 0)
+
+    TableLog(base + "/a").append(sl, n_files=2, tag="s0")  # stages the slice
+    key = tl._land_stage_key(sl, 2)
+    staged = tl._LAND_STAGE_CACHE[key]
+
+    real_is_dir = pathlib.Path.is_dir
+
+    def is_dir_then_sweep(self):
+        ok = real_is_dir(self)
+        if str(self) == staged:
+            for f in os.listdir(staged):
+                if f.endswith(".parquet"):
+                    os.unlink(os.path.join(staged, f))
+        return ok
+
+    monkeypatch.setattr(pathlib.Path, "is_dir", is_dir_then_sweep)
+    b = TableLog(base + "/b")
+    b.append(sl, n_files=2, tag="s0")
+    monkeypatch.undo()
+
+    want = sorted(r.k for r in sl.collect())
+    assert sorted(r.k for r in b.snapshot(spark).collect()) == want
+    assert b.read_manifest(0)["files"], "an empty landing was committed"
+    assert tl._LAND_STAGE_CACHE.get(key) != staged, "stale key kept"
