@@ -289,7 +289,7 @@ def main() -> None:
 
     # Warm the stream-source staging cache: live-streaming queries
     # replay the events fixture through a parquet stream source via
-    # stream_ops._stage(reuse=True) (one shared staged copy per
+    # stream_ops._stage (one shared staged copy per
     # session). Without this warmup the one-time ~2-3 s staging write
     # lands on whichever stateful/live query happens to run FIRST and
     # reads as a plan regression on that query (round 7's
@@ -298,12 +298,12 @@ def main() -> None:
     try:
         from chess_ratings_spark.streaming import stream_ops
 
-        stream_ops._stage(tables.load(spark, sf_dir, "events"), reuse=True)
+        stream_ops._stage(tables.load(spark, sf_dir, "events"))
     except Exception as exc:
         print(f"# BENCH WARMUP ERROR stage: {exc}", file=sys.stderr)
 
     # Warm the MOR fixture cache: the four MOR-verb lake queries share
-    # one bucketized staging (plans/lakehouse._MOR_FIXTURE_CACHE); the
+    # one bucketized staging (plans/lakehouse._mor_base_prestaged); the
     # ~1.5-2 s build otherwise lands on whichever of them runs first
     # (alphabetically lake_merge_full) and reads as a plan regression.
     try:

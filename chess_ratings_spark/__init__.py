@@ -11,6 +11,7 @@ Layout
 ------
 - ``tables``      : fixture table loaders (schema-aware, incl. nanos ts)
 - ``registry``    : the query/oracle registry driving the driver contract
+- ``staging``     : session reuse (memos, staged parquet dirs, one purge)
 - ``functions/``  : scalar/array/JSON column expressions
 - ``operators/``  : relational operators (joins, aggs, windows, set ops,
                     validation, text, similarity)

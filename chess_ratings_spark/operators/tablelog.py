@@ -58,6 +58,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from chess_ratings_spark import staging
+
 #: Commit ops that add/remove ROWS (vs rewriting the same rows into
 #: different files). OPTIMIZE-style ops are excluded from the change
 #: feed: they change the file layout, never the logical table.
@@ -155,137 +157,6 @@ def _unlink_all(paths: list[str]) -> None:
             os.unlink(paths.pop())
         except FileNotFoundError:
             pass
-
-
-#: (session id, analyzed-plan md5, sorted input files, n_files) ->
-#: session-staged parquet dir for that landing. Only frames that READ
-#: FILES get keys (a LocalRelation's analyzed plan does not pin its
-#: rows, so purely local frames must never alias), and any plan
-#: containing a nondeterministic source is excluded — staging would
-#: freeze one sample of it. CRS_TABLELOG_LINK_STAGING=0 restores the
-#: per-landing Spark write (A/B toggle; also the right setting on a
-#: filesystem without hardlinks, though _link_or_copy degrades to a
-#: byte copy on its own).
-_LAND_STAGE_CACHE: dict[tuple, str] = {}
-
-
-def _purge_land_stage_cache() -> None:
-    """r15 ADVICE: staged slice dirs (tempfile.mkdtemp, kept for the
-    process lifetime as the hardlink source) would otherwise leak one
-    /tmp dir per distinct slice; registered atexit so a clean exit
-    removes them (an unclean exit leaves them to the OS tmp cleaner,
-    same as before)."""
-    import shutil
-
-    while _LAND_STAGE_CACHE:
-        _, d = _LAND_STAGE_CACHE.popitem()
-        # the staged copy IS the scratch dir's w/ subdir — remove the
-        # whole scratch root (parent) that mkdtemp created
-        shutil.rmtree(Path(d).parent, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_purge_land_stage_cache)
-
-import os as _os
-
-_USE_LAND_STAGING = (
-    _os.environ.get("CRS_TABLELOG_LINK_STAGING", "1") != "0"
-)
-
-#: markers that disqualify a plan from staging: nondeterministic
-#: sources (staging would freeze one sample) and local relations
-#: (their toString does not pin their ROWS, so two different local
-#: frames with one schema would alias a single staged dir)
-_NONDET_PLAN_MARKERS = (
-    "rand(",
-    "randn(",
-    "uuid()",
-    "current_timestamp",
-    "current_date",
-    "now()",
-    "shuffle(",
-    "localrelation",
-    "localtablescan",
-    # r15 ADVICE: plans whose toString does not pin their ROWS even
-    # though inputFiles() is non-empty — an RDD-backed leaf (e.g. a
-    # localCheckpoint'd frame joined to a file scan) can hold different
-    # data under a structurally identical plan, and
-    # monotonically_increasing_id() is partitioning-dependent
-    "logicalrdd",
-    "existingrdd",
-    "scanexistingrdd",
-    "monotonically_increasing_id",
-)
-
-
-def _land_stage_key(df: DataFrame, n_files: int) -> tuple | None:
-    if not _USE_LAND_STAGING:
-        return None
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        if not files:
-            return None
-        plan = df._jdf.queryExecution().analyzed().toString()
-        low = plan.lower()
-        if any(m in low for m in _NONDET_PLAN_MARKERS):
-            return None
-        import hashlib
-        import re
-
-        # expression IDs (#NNN) are minted fresh every time a query
-        # function rebuilds the same slice, so the raw analyzed string
-        # never repeats across queries — strip them. Attribute NAMES,
-        # literals, operator structure, the full schema and the sorted
-        # input-file list all stay in the key; with local relations and
-        # nondeterministic sources already excluded, two different
-        # landings cannot collapse to one fingerprint.
-        # r15 ADVICE: confs that can change row CONTENT between two
-        # landings of one session (timestamp parsing/rendering, ANSI
-        # cast behavior, datetime rebase) ride in the key — same plan +
-        # files under a flipped conf must not alias the staged bytes.
-        conf = df.sparkSession.conf
-        confs = "|".join(
-            str(conf.get(k, None))
-            for k in (
-                "spark.sql.session.timeZone",
-                "spark.sql.ansi.enabled",
-                "spark.sql.parquet.datetimeRebaseModeInRead",
-                "spark.sql.parquet.int96RebaseModeInRead",
-            )
-        )
-        fp = hashlib.md5(
-            (
-                df.schema.simpleString()
-                + "\n"
-                + re.sub(r"#\d+", "#", plan)
-                + "\n"
-                + confs
-            ).encode()
-        ).hexdigest()
-        return (id(df.sparkSession), fp, files, n_files)
-    except Exception:
-        return None
-
-
-def _link_or_copy(src, dst) -> None:
-    """Land an immutable data file by HARDLINK when the filesystem
-    allows it, byte-copy otherwise. TableLog data files are never
-    modified in place (appends, DV sidecars and OPTIMIZE all write NEW
-    files; vacuum only unlinks), so a link is semantically identical to
-    a copy — and turns the per-landing cost from O(bytes) into one
-    inode. Matters twice: scratch→table landing on every append, and
-    the shared prestaged MOR fixture→table landing that four MOR-verb
-    queries each pay per run (guide §1.2: harness cost, not the
-    operator under test)."""
-    import os
-    import shutil
-
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy(src, dst)
 
 
 def _apply_delete_vectors(spark: SparkSession, df: DataFrame, dvs) -> DataFrame:
@@ -514,65 +385,14 @@ class TableLog:
         names each landing owns its paths outright; losers only orphan
         files, which snapshot isolation already ignores.
 
-        Deterministic FIXTURE slices are staged once per session and
-        re-landed by hardlink: many table-protocol queries append the
-        same immutable-fixture projections (ev.filter(user_id % 3 = m)
-        and friends), and the Spark write of those slices is harness
-        cost, not the protocol under test (guide §1.2 — the same
-        argument, mechanism and safety case as the streaming harness's
-        _land_slice). Per-run DERIVED frames (OPTIMIZE/MERGE rewrites
-        over the run's own tmp table) key on their run-private input
-        files and therefore never alias or reuse. Landed files stay
-        immutable either way, so vacuum's unlink and the manifest
-        fchmod path are unaffected by shared inodes."""
-        import shutil
-        import tempfile
+        Fixture slices are staged once per session and re-landed by
+        hardlink (:func:`staging.land`; guide §1.2)."""
         import uuid
 
         token = uuid.uuid4().hex[:12]
-        key = _land_stage_key(df, n_files)
-        staged = _LAND_STAGE_CACHE.get(key) if key is not None else None
-        if staged is not None and not Path(staged).is_dir():
-            del _LAND_STAGE_CACHE[key]  # tmp cleaner raced us
-            staged = None
-        if staged is not None:
-            out = []
-            try:
-                for i, p in enumerate(sorted(Path(staged).glob("*.parquet"))):
-                    dst = self.data_dir / f"{tag}-{token}-{i:05d}.parquet"
-                    _link_or_copy(p, dst)
-                    out.append(str(dst))
-                if out:
-                    return out
-            except OSError:
-                for f in out:
-                    try:
-                        _os.unlink(f)
-                    except OSError:
-                        pass
-            # TOCTOU: the staged dir vanished between the is_dir() check
-            # and the relink (tmp cleaner) — a failed link, or a glob
-            # over the missing dir that yields nothing. Either way it is
-            # a cache miss: evict the key and fall through to a fresh
-            # Spark write, never an empty landing.
-            _LAND_STAGE_CACHE.pop(key, None)
-        scratch = Path(tempfile.mkdtemp(prefix="crs_tablelog_"))
-        keep_scratch = False
-        try:
-            df.repartition(n_files).write.mode("overwrite").parquet(str(scratch / "w"))
-            out = []
-            parts = sorted((scratch / "w").glob("*.parquet"))
-            for i, p in enumerate(parts):
-                dst = self.data_dir / f"{tag}-{token}-{i:05d}.parquet"
-                _link_or_copy(p, dst)
-                out.append(str(dst))
-            if key is not None:
-                _LAND_STAGE_CACHE[key] = str(scratch / "w")
-                keep_scratch = True  # the staged copy IS the scratch dir
-            return out
-        finally:
-            if not keep_scratch:
-                shutil.rmtree(scratch, ignore_errors=True)
+        return staging.land(
+            df, self.data_dir, n_files, name=lambda i: f"{tag}-{token}-{i:05d}.parquet"
+        )
 
     def append(self, df: DataFrame, n_files: int, tag: str) -> int:
         """Land new data files, then commit (latest snapshot at commit
@@ -1234,8 +1054,6 @@ class TableLog:
         ``(scratch_dir, {bucket: (min, max)})``; the caller owns the
         scratch dir's lifetime when it passes it back as
         ``prestaged``."""
-        import tempfile
-
         from pyspark.sql import functions as F
 
         b = df.withColumn(
@@ -1247,7 +1065,7 @@ class TableLog:
             .agg(F.min(bucket_col).alias("mn"), F.max(bucket_col).alias("mx"))
             .collect()
         }
-        scratch = Path(tempfile.mkdtemp(prefix="crs_tablelog_"))
+        scratch = Path(staging.new_dir("crs_tablelog_"))
         if stats:
             (
                 b.repartition(len(stats), "__bucket")
@@ -1302,7 +1120,7 @@ class TableLog:
                     parts = sorted((scratch / "w" / f"__bucket={i}").glob("*.parquet"))
                     assert len(parts) == 1, f"bucket {i}: {len(parts)} files"
                     dst = self.data_dir / f"{tag}-{token}-b{i:04d}.parquet"
-                    _link_or_copy(parts[0], dst)
+                    staging.link_or_copy(parts[0], dst)
                     files.append(str(dst))
                     mn, mx = stats[i]
                     entries.append({"path": str(dst), "stats": {bucket_col: [mn, mx]}})

@@ -9,20 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators import maintenance
 from chess_ratings_spark.registry import register
-
-#: (session id, sf_dir) -> (scratch_dir, stats) from
-#: TableLog.bucketize_range over the shared MOR fixture projection
-#: (events keyed user_id/width-25). The four MOR-verb queries
-#: (update_cow / update_mor / merge_mor / merge_full) each stage an
-#: IDENTICAL base table — ~1.5 s of Spark write apiece inside ~5 s
-#: queries (round-12 verdict #5). The bucketized scratch is computed
-#: once per session+sf and every query lands its own private COPIES
-#: into its own TableLog, so table mutations never touch the cache.
-#: Same lifetime/serial-driver assumptions as stream_ops._STAGE_CACHE.
-_MOR_FIXTURE_CACHE: dict[tuple[int, str], tuple[str, dict]] = {}
 
 
 def _mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,34 +23,19 @@ def _mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@staging.per_session
 def _mor_base_prestaged(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
-    import os
-
+    """The bucketized fixture the four MOR-verb queries land copies of."""
     from chess_ratings_spark.operators.tablelog import TableLog
 
-    key = (id(spark), sf_dir)
-    hit = _MOR_FIXTURE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit[0]):  # tmp-cleaner guard
-        return hit
-    staged = TableLog.bucketize_range(_mor_events(spark, sf_dir), "user_id", 25)
-    _MOR_FIXTURE_CACHE[key] = staged
-    return staged
+    return TableLog.bucketize_range(_mor_events(spark, sf_dir), "user_id", 25)
 
 
-#: (session id, sf_dir) -> max(event_id), the collision-free offset
-#: base both MERGE queries derive synthetic insert keys from (round-12
-#: ADVICE). One bounded 1-row census per session+sf instead of one per
-#: query run.
-_MOR_MAXID_CACHE: dict[tuple[int, str], int] = {}
-
-
-def _mor_max_event_id(spark: SparkSession, sf_dir: str, ev: DataFrame) -> int:
-    key = (id(spark), sf_dir)
-    if key not in _MOR_MAXID_CACHE:
-        _MOR_MAXID_CACHE[key] = int(
-            ev.agg(F.max("event_id").alias("m")).collect()[0]["m"]
-        )
-    return _MOR_MAXID_CACHE[key]
+@staging.per_session
+def _mor_max_event_id(spark: SparkSession, sf_dir: str) -> int:
+    """max(event_id): the base of both MERGE queries' insert keys."""
+    ev = _mor_events(spark, sf_dir)
+    return int(ev.agg(F.max("event_id").alias("m")).collect()[0]["m"])
 
 
 @register(
@@ -3022,7 +2996,7 @@ def lake_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         # diverge from the oracle (round-12 ADVICE): derive the offset
         # from max(event_id) — a bounded 1-row census, cached per
         # session+sf — instead of a constant that sf could outgrow.
-        key_offset = _mor_max_event_id(spark, sf_dir, ev) + 1
+        key_offset = _mor_max_event_id(spark, sf_dir) + 1
         updates = ev.filter(
             "event_type = 'view' AND user_id % 15 = 2"
         ).withColumn("vc", F.col("vc") + 5000)
@@ -3177,7 +3151,7 @@ def lake_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Same collision guard as lake_merge_mor (round-12 ADVICE):
         # synthetic insert keys start past max(event_id) so no sf can
         # flip an insert into an update behind the oracle's back.
-        key_offset = _mor_max_event_id(spark, sf_dir, ev) + 1
+        key_offset = _mor_max_event_id(spark, sf_dir) + 1
         updates = ev.filter(
             "event_type = 'view' AND user_id % 15 = 2"
         ).withColumn("vc", F.col("vc") + 5000)

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators import similarity, text
 from chess_ratings_spark.operators.aggregates import money
 from chess_ratings_spark.registry import register
@@ -185,33 +185,13 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-duplicate detection
 # ---------------------------------------------------------------------------
 
-#: One cached shingle-set frame per (session, sf_dir): the three dedup
-#: queries (dedup_near_minhash, dedup_ngram_jaccard, join_similarity)
-#: all start from the same O(corpus) shingle materialization — sharing
-#: it cuts the repeated ~1.5-2 s expansion per query at bench time and
-#: is exactly what a production pipeline does (shingle once, reuse for
-#: every dedup pass). Keyed by applicationId so a restarted session
-#: can't see stale frames.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staging.per_session
 def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        d = tables.load(spark, sf_dir, "documents")
-        _SHINGLE_CACHE[key] = similarity.shingle_sets(d).cache()
-    return _SHINGLE_CACHE[key]
+    """Shingle sets over the corpus, shared by the whole dedup family."""
+    return similarity.shingle_sets(tables.load(spark, sf_dir, "documents")).cache()
 
 
-_SIGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-#: path of the persisted history LSH index per (session, sf): the
-#: artifact dedup_incremental_minhash writes once and every batch
-#: probes (value is a parquet dir under tmp standing in for the lake
-#: path; left for the OS tmp cleaner like staged dirs)
-_LSH_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
+@staging.per_session
 def shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures over the whole corpus, cached per session —
     the Arrow-batched signature UDF is the one non-trivial compute in
@@ -219,43 +199,37 @@ def shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared_minhash_cands) and the incremental index/probe path
     (dedup_incremental_minhash: filter by batch/history split) consume
     the SAME frame."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIGS_CACHE:
-        _SIGS_CACHE[key] = similarity.minhash_signatures(
-            shared_shingles(spark, sf_dir)
-        ).cache()
-    return _SIGS_CACHE[key]
+    return similarity.minhash_signatures(shared_shingles(spark, sf_dir)).cache()
 
 
+@staging.per_session
 def shared_minhash_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """τ-independent MinHash-LSH candidate pairs, cached per session —
     shared by every verified-jaccard query over the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CANDS_CACHE:
-        _CANDS_CACHE[key] = similarity.lsh_candidate_pairs(
-            shared_minhash_sigs(spark, sf_dir)
-        ).cache()
-    return _CANDS_CACHE[key]
+    return similarity.lsh_candidate_pairs(shared_minhash_sigs(spark, sf_dir)).cache()
 
 
-_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
+@staging.per_session
 def shared_verified_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
     """Verified jaccard pairs at a given τ, cached per session: the
     pair list is both a query result (dedup_near_minhash) and the input
     graph of the clustering step (dedup_connected_components) — one
     verify join serves both."""
-    key = (spark.sparkContext.applicationId, sf_dir, tau)
-    if key not in _PAIRS_CACHE:
-        d = tables.load(spark, sf_dir, "documents")
-        _PAIRS_CACHE[key] = similarity.verified_jaccard_pairs(
-            d,
-            tau=tau,
-            sh=shared_shingles(spark, sf_dir),
-            cands=shared_minhash_cands(spark, sf_dir),
-        ).cache()
-    return _PAIRS_CACHE[key]
+    return similarity.verified_jaccard_pairs(
+        tables.load(spark, sf_dir, "documents"),
+        tau=tau,
+        sh=shared_shingles(spark, sf_dir),
+        cands=shared_minhash_cands(spark, sf_dir),
+    ).cache()
+
+
+@staging.per_session
+def _history_lsh_index(spark: SparkSession, sf_dir: str) -> str:
+    """Band keys of the HISTORICAL corpus: the index every batch probes."""
+    idx_dir = staging.new_dir("crs_lshidx_") + "/index"
+    sigs = shared_minhash_sigs(spark, sf_dir)
+    similarity.band_keys(sigs.filter(F.col("doc_id") % 4 != 0)).write.parquet(idx_dir)
+    return idx_dir
 
 
 _EXACT_JACCARD_ORACLE = """
@@ -336,22 +310,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_sh = sh.filter(F.col("doc_id") % 4 != 0)
     batch_sh = sh.filter(F.col("doc_id") % 4 == 0)
 
-    # the stored index artifact: band keys of the HISTORICAL corpus,
-    # written ONCE per (session, sf) and probed by every subsequent
-    # batch — cached like _SIGS_CACHE so repeat invocations (bench,
-    # driver re-runs) reuse one artifact instead of leaking a fresh
-    # mkdtemp per call (round-10 ADVICE), and so the plan matches the
-    # doc's write-once claim
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LSH_INDEX_CACHE:
-        import tempfile
-
-        idx_dir = tempfile.mkdtemp(prefix="crs_lshidx_") + "/index"
-        similarity.band_keys(
-            sigs.filter(F.col("doc_id") % 4 != 0)
-        ).write.mode("overwrite").parquet(idx_dir)
-        _LSH_INDEX_CACHE[key] = idx_dir
-    index = spark.read.parquet(_LSH_INDEX_CACHE[key])
+    index = spark.read.parquet(_history_lsh_index(spark, sf_dir))
 
     probe = similarity.band_keys(sigs.filter(F.col("doc_id") % 4 == 0))
     cands = (

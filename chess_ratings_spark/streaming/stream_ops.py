@@ -22,6 +22,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chess_ratings_spark import staging
+
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
     " value double, props string"
@@ -38,167 +40,32 @@ def _ntz_lit(ts_value) -> "F.Column":
     return F.lit(ts_value.isoformat(sep=" ")).cast("timestamp_ntz")
 
 
-#: (session id, analyzed-plan hash, sorted source files) -> staged
-#: parquet dir. The local replay harness stages the SAME events frame
-#: for every streaming query; the write is ~1.4 s at sf0.1 (60% of each
-#: query's fixed cost), so one staging per (session, plan, source) is
-#: reused. Safe: staged dirs are read-only inputs drained with
-#: availableNow, the driver runs queries serially, and the key folds in
-#: a hash of the ANALYZED logical plan — inputFiles() alone cannot
-#: distinguish ev.filter(...) or ev.union(ev) from ev, so two derived
-#: frames over the same files would otherwise alias one staged dir.
-_STAGE_CACHE: dict[tuple[int, str, tuple[str, ...]], str] = {}
+_EVENT_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
-def _plan_fingerprint(df: DataFrame) -> str:
-    import hashlib
-
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return hashlib.md5(
-        (df.schema.simpleString() + "\n" + plan).encode()
-    ).hexdigest()
-
-
-def _stage(ev: DataFrame, subdir: str | None = None, reuse: bool = False) -> str:
-    key = None
-    if reuse:
-        try:
-            key = (
-                id(ev.sparkSession),
-                _plan_fingerprint(ev),
-                tuple(sorted(ev.inputFiles())),
-            )
-        except Exception:
-            key = None
-        if key is not None and key in _STAGE_CACHE:
-            import os
-
-            cached = _STAGE_CACHE[key]
-            if os.path.isdir(cached):  # tmp cleaner / id-reuse guard
-                return cached
-            del _STAGE_CACHE[key]
-    path = tempfile.mkdtemp(prefix="crs_stream_") + "/" + (subdir or "in")
-    ev.select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    ).write.mode("overwrite").parquet(path)
-    if key is not None:
-        _STAGE_CACHE[key] = path
-    return path
-
-
-#: (session id, plan fingerprint, input files) -> staged slice dir.
-#: Same lifetime/serial-driver assumptions as _STAGE_CACHE.
-_SLICE_CACHE: dict[tuple, str] = {}
-
-#: Escape hatch / A-B toggle: CRS_STREAM_LINK_STAGING=0 restores the
-#: direct per-run Spark writes for every slice landing (used by the
-#: round-15 paired-sample probe; also the right setting on a filesystem
-#: without hardlinks).
-import os as _os
-
-_USE_LINKS = _os.environ.get("CRS_STREAM_LINK_STAGING", "1") != "0"
+def _stage(ev: DataFrame) -> str:
+    """The staged event projection every replay harness reads; never
+    write into it (:func:`_stage_mutable` makes a private copy)."""
+    return staging.stage_dir(ev.select(*_EVENT_COLS))
 
 
 def _slice_stage(df: DataFrame) -> str:
-    """Session-cached parquet landing of a deterministic harness slice
-    (same contract as _stage's reuse path, but for any projection): the
-    first run of a query stages the slice, every later run — including
-    the bench's min-of-2 resample for live queries — reuses the files.
-    The key pins the full analyzed plan + input files, so two different
-    slices can never alias."""
-    import os
-
-    key = None
-    if _USE_LINKS:
-        try:
-            key = (
-                id(df.sparkSession),
-                _plan_fingerprint(df),
-                tuple(sorted(df.inputFiles())),
-            )
-        except Exception:
-            key = None
-    if key is not None:
-        cached = _SLICE_CACHE.get(key)
-        if cached is not None and os.path.isdir(cached):
-            return cached
-        if cached is not None:
-            del _SLICE_CACHE[key]
-    path = tempfile.mkdtemp(prefix="crs_slice_") + "/in"
-    df.write.mode("overwrite").parquet(path)
-    if key is not None:
-        _SLICE_CACHE[key] = path
-    return path
+    """The session-staged copy of a harness slice."""
+    return staging.stage_dir(df)
 
 
 def _land_slice(df: DataFrame, dest_dir: str) -> None:
-    """Land `df` into `dest_dir` by HARDLINKING its session-cached
-    staged files: (re)landing a slice into a run-private streaming
-    source dir costs one inode per file instead of a Spark write job
-    (guide §1.2 — the staging writes, not the operator under test,
-    were the bulk of several streaming harnesses). Append-safe: part
-    file names carry the writing job's UUID so a second slice linked
-    into the same dir only ever collides on metadata files (_SUCCESS),
-    which are skipped; the streaming file source discovers the linked
-    paths exactly as it would freshly written ones. Hadoop writers
-    commit via rename and never modify files in place, so the shared
-    staged copies cannot be corrupted through the links. Falls back to
-    a byte copy when linking is unavailable (e.g. cross-device tmp)."""
-    import os
-    import shutil
-
-    if not _USE_LINKS:
-        df.write.mode("append").parquet(dest_dir)
-        return
-    shared = _slice_stage(df)
-    os.makedirs(dest_dir, exist_ok=True)
-    for f in sorted(os.listdir(shared)):
-        s = os.path.join(shared, f)
-        if not os.path.isfile(s):
-            continue
-        d = os.path.join(dest_dir, f)
-        try:
-            os.link(s, d)
-        except FileExistsError:
-            continue
-        except OSError:
-            shutil.copy2(s, d)
+    """Hardlink `df`'s staged files into a run-private source dir; staged
+    names are unique per write job, so two slices never collide."""
+    staging.land(df, dest_dir)
 
 
 def _stage_mutable(ev: DataFrame, prefix: str) -> str:
-    """A PRIVATE staged copy of the standard event projection, for
-    harnesses that append sentinel/late files mid-run (the shared
-    `_stage(reuse=True)` dir must never be mutated — every other
-    streaming query reads it). Populated by HARDLINKING the shared
-    staged files into a fresh dir: the marginal cost is one inode per
-    file instead of a full Spark write job of the events table
-    (guide §1.2: the staging write was the measured bulk of the
-    harness, not the streaming operator under test). Falls back to a
-    real write if linking fails (e.g. cross-device tmp)."""
-    import os
-    import shutil
-
-    if not _USE_LINKS:
-        path = tempfile.mkdtemp(prefix=prefix) + "/in"
-        ev.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).write.mode("overwrite").parquet(path)
-        return path
-    shared = _stage(ev, reuse=True)
+    """A PRIVATE hardlinked copy of :func:`_stage`, for harnesses that
+    append sentinel/late files mid-run."""
     path = tempfile.mkdtemp(prefix=prefix) + "/in"
-    os.makedirs(path, exist_ok=True)
-    try:
-        for f in os.listdir(shared):
-            src = os.path.join(shared, f)
-            if os.path.isfile(src):
-                os.link(src, os.path.join(path, f))
-        return path
-    except OSError:
-        shutil.rmtree(path, ignore_errors=True)
-        ev.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).write.mode("overwrite").parquet(path)
-        return path
+    staging.land(ev.select(*_EVENT_COLS), path)
+    return path
 
 
 STATE_PARTITIONS = 4
@@ -332,7 +199,7 @@ def _wall_fmt(col: "F.Column | str", micros: bool = False) -> "F.Column":
 
 def tumbling_stream(spark: SparkSession, ev: DataFrame, width: str = "1 hour") -> DataFrame:
     """Watermarked tumbling-window agg, run as a real streaming query."""
-    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True)))
+    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev)))
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", width), "event_type")
@@ -360,7 +227,7 @@ def dedup_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     staged dir twice makes the harness's marginal staging cost zero
     and was the bulk of the round-9 bench line (5.2 s → the state op
     itself)."""
-    base = _stage(ev, reuse=True)
+    base = _stage(ev)
     twice = spark.readStream.schema(EVENT_SCHEMA).parquet(base).unionByName(
         spark.readStream.schema(EVENT_SCHEMA).parquet(base)
     )
@@ -430,7 +297,7 @@ def stateful_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True))
+    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
 
     def track(key, pdf_iter, state: GroupState):
         total, n, n_over = state.get if state.exists else (0.0, 0, 0)
@@ -513,7 +380,7 @@ def stateful_stream_rocksdb(
     global last_rocksdb_proof
     last_rocksdb_proof = None
 
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True))
+    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
 
     def track(key, pdf_iter, state: GroupState):
         total, n, n_over = state.get if state.exists else (0.0, 0, 0)
@@ -584,7 +451,7 @@ def static_join_stream(spark: SparkSession, ev: DataFrame, weights: DataFrame) -
     the query), needs no watermark and holds no join state — unlike
     stream-stream joins, the static side is simply a broadcast per
     batch. The aggregate downstream is normal stateful streaming."""
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True))
+    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
     j = src.join(F.broadcast(weights), "event_type")
     agg = j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -597,7 +464,7 @@ def session_stream(spark: SparkSession, ev: DataFrame, gap: str = "30 minutes") 
     """Gap-based session windows as a real streaming query. Append mode
     emits a session once the watermark passes its end; end-of-stream
     sessions stay open (same parity contract as tumbling_stream)."""
-    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True)))
+    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev)))
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy("user_id", F.session_window("ts", gap))
@@ -617,7 +484,7 @@ def sliding_stream(
 ) -> DataFrame:
     """Sliding windows as a real streaming query (each event feeds
     width/slide windows; append emits closed ones)."""
-    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True)))
+    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev)))
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", width, slide), "event_type")
@@ -649,7 +516,7 @@ def interval_join_stream(
     out-delay the arrival skew (here: 35 days vs the fixture span).
     Output is id pairs only — the batch inner join is the exact
     oracle."""
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
 
     def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
         src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(staged))
@@ -943,7 +810,7 @@ def tws_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> 
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True))
+        src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
         out = src.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=Tracker(),
             outputStructType="user_id bigint, total_value double, n_events bigint, n_over bigint",
@@ -1071,7 +938,7 @@ def outer_interval_join_stream(
     have; matched pairs appear in both regions. The boundary band is
     excluded on BOTH engine and oracle sides, making the remaining
     set exactly replayable."""
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
 
     def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
         src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(staged))
@@ -1128,7 +995,7 @@ def progress_metrics_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     drops rows, or state that leaks/loses keys shows up as a
     telemetry-vs-oracle mismatch, exactly how it would page a human.
     Driver state: the bounded progress JSON list (O(batches))."""
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev, reuse=True))
+    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
     agg = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     name = "prog_" + uuid.uuid4().hex[:12]
     with _state_partitions(spark):
@@ -1201,7 +1068,7 @@ def session_timeout_stream(
 
     gap_ms = gap_us // 1000
 
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
         .parquet(staged)
@@ -1382,7 +1249,7 @@ def ttl_state_stream(
 
     ttl_ms = ttl_us // 1000
 
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
     ckpt = tempfile.mkdtemp(prefix="crs_ttlstate_") + "/ckpt"
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
@@ -1501,7 +1368,7 @@ def semi_join_stream(
     must know when a purchase can stop waiting for a view); state stays
     range-bounded. Emits purchase ids only; the batch EXISTS is the
     exact oracle."""
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
 
     def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
         src = _with_event_time(
@@ -1802,7 +1669,7 @@ def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
     census rows plus the emitted-pair census the memory sink saw."""
     import tempfile
 
-    staged = _stage(ev, reuse=True)
+    staged = _stage(ev)
     ckpt = tempfile.mkdtemp(prefix="crs_jstate_") + "/ckpt"
 
     def side(name: str, pfx: str) -> DataFrame:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chess_ratings_spark import staging
+
 TABLES = (
     "region",
     "nation",
@@ -46,9 +48,7 @@ def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-
+@staging.per_session
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Make `chess_ratings_spark` importable on Python workers.
 
@@ -60,9 +60,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     root. (On a real cluster this is --py-files/pip-installed envs;
     addPyFile is the runtime equivalent.)
     """
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
-        return
     import shutil
     import tempfile
     from pathlib import Path
@@ -71,31 +68,15 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     zip_base = Path(tempfile.mkdtemp(prefix="crs_pkg_")) / "chess_ratings_spark_pkg"
     archive = shutil.make_archive(str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name)
     spark.sparkContext.addPyFile(archive)
-    _SHIPPED_SESSIONS.add(key)
 
 
-#: analyzed-frame memo per (session, sf dir, table): every
-#: ``spark.read.parquet`` call pays driver-side file listing + footer
-#: schema inference (~80-120 ms measured at local[32]) — pure metadata
-#: work that is identical on every call for an immutable fixture file.
-#: Reusing the lazy DataFrame object skips that tax fleet-wide (~2-3
-#: load calls per query x 308 queries) while every action still scans
-#: the parquet itself: this memoizes the PLAN, never data or results.
-_FRAME_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
+@staging.per_session
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table by name; `events` gets ts normalization."""
     ensure_package_shipped(spark)
-    key = (id(spark), sf_dir.rstrip("/"), name)
-    got = _FRAME_CACHE.get(key)
-    if got is None:
-        if name == "events":
-            got = load_events(spark, sf_dir)
-        else:
-            got = spark.read.parquet(path_of(sf_dir, name))
-        _FRAME_CACHE[key] = got
-    return got
+    if name == "events":
+        return load_events(spark, sf_dir)
+    return spark.read.parquet(path_of(sf_dir, name))
 
 
 #: TIMESTAMP_NTZ -> epoch micros, timezone-proof — built purely from

@@ -80,10 +80,10 @@ def main() -> None:
 
     # staging cost: cold write vs stage-cache reuse
     t0 = time.perf_counter()
-    path = so._stage(ev, reuse=True)
+    path = so._stage(ev)
     print(json.dumps({"probe": "stage_cold", "wall_s": round(time.perf_counter() - t0, 2)}))
     t0 = time.perf_counter()
-    so._stage(ev, reuse=True)
+    so._stage(ev)
     print(json.dumps({"probe": "stage_reuse", "wall_s": round(time.perf_counter() - t0, 2)}))
 
     src = so._with_event_time(

@@ -1239,10 +1239,13 @@ def test_land_slice_links_equal_direct_write_and_never_mutate_shared(spark, tmp_
 
     from chess_ratings_spark.streaming import stream_ops
 
-    df_a = spark.range(0, 100).select(
+    src = str(tmp_path / "src")
+    spark.range(0, 150).write.parquet(src)
+    ids = spark.read.parquet(src)
+    df_a = ids.filter(F.col("id") < 100).select(
         F.col("id").alias("event_id"), (F.col("id") % 7).alias("vc")
     )
-    df_b = spark.range(100, 150).select(
+    df_b = ids.filter(F.col("id") >= 100).select(
         F.col("id").alias("event_id"), (F.col("id") % 7).alias("vc")
     )
 

@@ -2372,8 +2372,6 @@ def test_land_stage_links_fixture_slices(base, spark):
     and unlinking one table's copy (vacuum) leaves the other intact."""
     import os
 
-    from chess_ratings_spark.operators import tablelog as tl
-
     src_dir = base + "/fixture"
     spark.range(60).selectExpr(
         "id AS k", "id % 3 AS m", "id * 7 AS v"
@@ -2391,8 +2389,7 @@ def test_land_stage_links_fixture_slices(base, spark):
     ia = {os.stat(p).st_ino for p in fa}
     ib0 = {os.stat(p).st_ino for p in fb if "s0" in p.name}
     ib1 = {os.stat(p).st_ino for p in fb if "s1" in p.name}
-    if tl._USE_LAND_STAGING:
-        assert ia == ib0, "identical slices should share staged inodes"
+    assert ia == ib0, "identical slices should share staged inodes"
     assert not (ib0 & ib1), "different slices must never alias"
 
     # linked content == direct content (slice definition replayed)
@@ -2407,43 +2404,68 @@ def test_land_stage_links_fixture_slices(base, spark):
     assert still == want
 
 
-def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch):
-    """A staged dir that loses its files between the is_dir() check and
-    the relink (a tmp cleaner racing the session) must fall back to a
-    fresh Spark write: the glob over it yields nothing, and an empty
-    relink committed as-is would publish a version with no rows."""
+@pytest.mark.parametrize("path", ["tablelog", "stream"])
+def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch, path):
+    """A staged dir that a tmp cleaner empties must fall back to a fresh
+    Spark write, both when it is emptied before the next landing checks
+    it and when it is emptied between that check and the relink.
+    Relinking from the emptied dir would land nothing: an empty
+    committed TableLog version, or a stream source that drains 0
+    rows."""
     import os
-    import pathlib
 
-    from chess_ratings_spark.operators import tablelog as tl
+    from chess_ratings_spark import staging
+    from chess_ratings_spark.streaming import stream_ops
 
-    monkeypatch.setattr(tl, "_USE_LAND_STAGING", True)
     src_dir = base + "/fixture"
     spark.range(40).selectExpr("id AS k", "id % 2 AS m").write.mode(
         "overwrite"
     ).parquet(src_dir)
     sl = spark.read.parquet(src_dir).filter(F.col("m") == 0)
+    want = sorted(r.k for r in sl.collect())
 
-    TableLog(base + "/a").append(sl, n_files=2, tag="s0")  # stages the slice
-    key = tl._land_stage_key(sl, 2)
-    staged = tl._LAND_STAGE_CACHE[key]
+    if path == "tablelog":
 
-    real_is_dir = pathlib.Path.is_dir
+        def staged():
+            return staging.stage_dir(sl, 2)
 
-    def is_dir_then_sweep(self):
-        ok = real_is_dir(self)
-        if str(self) == staged:
-            for f in os.listdir(staged):
-                if f.endswith(".parquet"):
-                    os.unlink(os.path.join(staged, f))
+        def land_and_read(dest):
+            log = TableLog(dest)
+            log.append(sl, n_files=2, tag="s0")
+            assert log.read_manifest(0)["files"], "an empty landing was committed"
+            return sorted(r.k for r in log.snapshot(spark).collect())
+
+    else:
+
+        def staged():
+            return stream_ops._slice_stage(sl)
+
+        def land_and_read(dest):
+            stream_ops._land_slice(sl, dest)
+            src = spark.readStream.schema("k bigint, m bigint").parquet(dest)
+            return sorted(r.k for r in stream_ops._drain(spark, src, "append").collect())
+
+    def sweep(d):
+        for f in os.listdir(d):
+            if f.endswith(".parquet"):
+                os.unlink(os.path.join(d, f))
+
+    assert land_and_read(base + "/a") == want  # stages the slice
+    first = staged()
+    sweep(first)
+    assert land_and_read(base + "/b") == want
+    second = staged()
+    assert second != first, "stale key kept"
+
+    real_live = staging._live
+
+    def live_then_sweep(value):
+        ok = real_live(value)
+        if ok and value == second:
+            sweep(second)
         return ok
 
-    monkeypatch.setattr(pathlib.Path, "is_dir", is_dir_then_sweep)
-    b = TableLog(base + "/b")
-    b.append(sl, n_files=2, tag="s0")
+    monkeypatch.setattr(staging, "_live", live_then_sweep)
+    assert land_and_read(base + "/c") == want
     monkeypatch.undo()
-
-    want = sorted(r.k for r in sl.collect())
-    assert sorted(r.k for r in b.snapshot(spark).collect()) == want
-    assert b.read_manifest(0)["files"], "an empty landing was committed"
-    assert tl._LAND_STAGE_CACHE.get(key) != staged, "stale key kept"
+    assert staged() != second, "stale key kept"
