@@ -40,13 +40,12 @@ IS the driver, so the distinction is moot.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from chess_ratings_spark.session import conf_scope
 
-@contextmanager
+
 def _loop_shuffle_partitions(df: DataFrame, n: int = 32):
     """Scope spark.sql.shuffle.partitions for the ITERATIVE loop body.
 
@@ -60,13 +59,7 @@ def _loop_shuffle_partitions(df: DataFrame, n: int = 32):
     genuinely huge graphs pass a bigger n. Restored on exit; the loop
     runs driver-side and serially, same contract as the streaming
     state-partitions scope."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return conf_scope(df.sparkSession, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def connected_components(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.registry import register
 
 # Order-independent corpus checksum: each doc's rebuilt text hashes to a
@@ -1767,11 +1767,10 @@ def join_fuzzy_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     ev = tables.load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-    base = tempfile.mkdtemp(prefix="crs_schema_evo_")
+    base = staging.new_dir("crs_schema_evo_")
     try:
         ev.filter(F.col("ts") < cutoff).select(
             "event_id", "event_type", "value"
@@ -2088,13 +2087,12 @@ def corpus_prepare_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_manifest_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import shutil
-    import tempfile
     from pathlib import Path
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = Path(tempfile.mkdtemp(prefix="crs_manifest_"))
+    base = Path(staging.new_dir("crs_manifest_"))
     try:
         committed_dir = str(base / "table")
         ev.filter(F.col("event_type") != "error").repartition(4).write.mode(

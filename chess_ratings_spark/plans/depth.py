@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators.aggregates import money
 from chess_ratings_spark.registry import register
 
@@ -215,8 +215,6 @@ def _backfill_oracle() -> str:
     tags=("tier-r", "pipeline"),
 )
 def pipeline_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from chess_ratings_spark import ingest
     from chess_ratings_spark.operators import validate
     from chess_ratings_spark.plans.tier_r import _raw_fide
@@ -240,7 +238,7 @@ def pipeline_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in batches[1:]:
         lake = lake.unionByName(b)
 
-    out = tempfile.mkdtemp(prefix="crs_backfill_") + "/lake"
+    out = staging.new_dir("crs_backfill_") + "/lake"
     cio.sink_parquet_partitioned(lake, out, mode="overwrite")
     cio.sink_parquet_partitioned(lake, out, mode="ignore")  # idempotent re-run
 

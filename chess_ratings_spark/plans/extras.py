@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators import similarity
 from chess_ratings_spark.registry import register
 
@@ -31,14 +31,12 @@ from chess_ratings_spark.registry import register
     tags=("tier-r", "sink"),
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from chess_ratings_spark.sources import io as cio
 
     o = tables.load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="crs_plain_") + "/orders_slim"
+    path = staging.new_dir("crs_plain_") + "/orders_slim"
     cio.sink_parquet(o, path)
     back = cio.scan_parquet(spark, path)
     return back.agg(
@@ -71,14 +69,12 @@ def _src_listing_oracle() -> str:
     tags=("tier-r", "scan"),
 )
 def src_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from chess_ratings_spark import ingest
     from chess_ratings_spark.plans.tier_r import _raw_fide
     from chess_ratings_spark.sources import io as cio
 
     pre = ingest.preprocess(_raw_fide(spark, sf_dir), 2024, 1, "blitz")
-    path = tempfile.mkdtemp(prefix="crs_list_") + "/lake"
+    path = staging.new_dir("crs_list_") + "/lake"
     cio.sink_parquet_partitioned(pre, path, mode="overwrite")
     listing = cio.list_partitions(spark, path)
     return listing.select(
@@ -507,14 +503,13 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = Path(tempfile.mkdtemp(prefix="crs_csv_perm_"))
+    base = Path(staging.new_dir("crs_csv_perm_"))
     try:
         csv_dir = str(base / "csv")
         ev.repartition(4).write.mode("overwrite").option("header", False).csv(
@@ -738,7 +733,6 @@ def mm_video_scene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_pyds_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.sources.jsonl_sink import (
@@ -754,7 +748,7 @@ def sink_pyds_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_pyds_")
+    base = staging.new_dir("crs_pyds_")
     out = str(Path(base) / "out")
     try:
         (

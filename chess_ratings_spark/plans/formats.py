@@ -10,12 +10,10 @@ TIMESTAMP_NTZ pitfalls each text format has.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators.aggregates import money
 from chess_ratings_spark.registry import register
 
@@ -57,7 +55,7 @@ _SCHEMA = (
     tags=("scan", "sink", "formats"),
 )
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = tempfile.mkdtemp(prefix="crs_csv_") + "/orders"
+    path = staging.new_dir("crs_csv_") + "/orders"
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     _orders_slice(spark, sf_dir).write.mode("overwrite").option("header", True).option(
         "timestampNTZFormat", fmt
@@ -79,7 +77,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan", "sink", "formats"),
 )
 def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = tempfile.mkdtemp(prefix="crs_json_") + "/orders"
+    path = staging.new_dir("crs_json_") + "/orders"
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     _orders_slice(spark, sf_dir).write.mode("overwrite").option(
         "timestampNTZFormat", fmt
@@ -96,7 +94,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan", "sink", "formats"),
 )
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = tempfile.mkdtemp(prefix="crs_orc_") + "/orders"
+    path = staging.new_dir("crs_orc_") + "/orders"
     _orders_slice(spark, sf_dir).write.mode("overwrite").orc(path)
     return _agg(spark.read.orc(path))
 
@@ -130,7 +128,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan", "formats", "documents", "multimodal"),
 )
 def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = tempfile.mkdtemp(prefix="crs_binf_") + "/blobs"
+    path = staging.new_dir("crs_binf_") + "/blobs"
     docs = (
         tables.load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 101 == 0)
@@ -189,7 +187,7 @@ def sink_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    path = tempfile.mkdtemp(prefix="crs_dynow_") + "/t"
+    path = staging.new_dir("crs_dynow_") + "/t"
     ev.write.partitionBy("event_type").mode("overwrite").parquet(path)
     corrected = ev.filter(F.col("event_type") == "click").withColumn(
         "vc", F.col("vc") * 2

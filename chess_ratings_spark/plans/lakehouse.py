@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators import maintenance
 from chess_ratings_spark.registry import register
+from chess_ratings_spark.session import conf_scope
 
 
 def _mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,13 +254,12 @@ def agg_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
     import shutil
-    import tempfile
     from pathlib import Path
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "ts_ns", "user_id", "event_type", "value"
     )
-    base = Path(tempfile.mkdtemp(prefix="crs_compact_"))
+    base = Path(staging.new_dir("crs_compact_"))
     small, big = str(base / "small"), str(base / "big")
     try:
         ev.repartition(64).write.mode("overwrite").parquet(small)
@@ -340,7 +340,6 @@ def sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -348,7 +347,7 @@ def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_timetravel_")
+    base = staging.new_dir("crs_timetravel_")
     try:
         log = TableLog(base)
         for m in (0, 1, 2):
@@ -404,7 +403,6 @@ def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_optimize_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -412,7 +410,7 @@ def lake_optimize_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_optimize_")
+    base = staging.new_dir("crs_optimize_")
     try:
         log = TableLog(base)
         for m in (0, 1, 2):
@@ -487,7 +485,6 @@ def lake_optimize_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_optimize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -495,7 +492,7 @@ def lake_optimize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_optshard_")
+    base = staging.new_dir("crs_optshard_")
     try:
         log = TableLog(base)
         for m in (0, 1, 2):
@@ -610,7 +607,6 @@ def lake_optimize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -621,7 +617,7 @@ def lake_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     mxid = int(ev.agg(F.max("event_id")).collect()[0][0])  # bounded scalar
     width = ((mxid + 1) + 7) // 8
     lo, hi = (mxid + 1) // 4, ((mxid + 1) * 2) // 5
-    base = tempfile.mkdtemp(prefix="crs_statsprune_")
+    base = staging.new_dir("crs_statsprune_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(ev, "event_id", width=width, tag="ev")
@@ -671,7 +667,6 @@ def lake_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -679,7 +674,7 @@ def lake_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_vacuum_")
+    base = staging.new_dir("crs_vacuum_")
     try:
         log = TableLog(base)
         for m in (0, 1, 2):
@@ -830,7 +825,6 @@ def lake_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -839,7 +833,7 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_mor_")
+    base = staging.new_dir("crs_mor_")
     try:
         log = TableLog(base)
         log.append(ev, n_files=8, tag="full")
@@ -943,7 +937,6 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -951,7 +944,7 @@ def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.dayofmonth("ts") - 1).cast("bigint").alias("day"),
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_partevo_")
+    base = staging.new_dir("crs_partevo_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(
@@ -1103,7 +1096,6 @@ def pipeline_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1112,7 +1104,7 @@ def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_lifecycle_")
+    base = staging.new_dir("crs_lifecycle_")
     try:
         log = TableLog(base)
         # v0 + v1: two appends
@@ -1225,7 +1217,6 @@ def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1234,7 +1225,7 @@ def lake_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_cdf_")
+    base = staging.new_dir("crs_cdf_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
@@ -1335,7 +1326,6 @@ def lake_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1344,7 +1334,7 @@ def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_cdfsync_")
+    base = staging.new_dir("crs_cdfsync_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
@@ -1461,7 +1451,6 @@ def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1470,7 +1459,7 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    root = tempfile.mkdtemp(prefix="crs_clone_")
+    root = staging.new_dir("crs_clone_")
     try:
         src = TableLog(Path(root) / "src")
         src.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="a")
@@ -1609,7 +1598,6 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1651,7 +1639,7 @@ def lake_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(m_bits),
         )
 
-    base = tempfile.mkdtemp(prefix="crs_bloom_")
+    base = staging.new_dir("crs_bloom_")
     try:
         log = TableLog(Path(base) / "t")
         log.append_range_bucketed(ev, "user_id", width=width, tag="ev")
@@ -1807,7 +1795,6 @@ def lake_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1826,7 +1813,7 @@ def lake_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_shard_")
+    base = staging.new_dir("crs_shard_")
     try:
         full = TableLog(Path(base) / "full")
         shrd = TableLog(Path(base) / "sharded")
@@ -1897,7 +1884,6 @@ def lake_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.operators.tablelog import TableLog
@@ -1911,7 +1897,7 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_fmt_")
+    base = staging.new_dir("crs_fmt_")
     try:
         log = TableLog(Path(base) / "t")
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
@@ -2019,7 +2005,6 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
@@ -2034,9 +2019,6 @@ def scan_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(TableLogBatchSource)
     except Exception:
         pass
-    # Spark 4.1 gates Python-source pushdown behind a flag (planning
-    # calls into Python); runtime-settable SQL conf
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
@@ -2044,24 +2026,27 @@ def scan_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     mxid = int(ev.agg(F.max("event_id")).collect()[0][0])  # bounded scalar
     width = ((mxid + 1) + 7) // 8
     lo, hi = (mxid + 1) // 4, ((mxid + 1) * 2) // 5
-    base = tempfile.mkdtemp(prefix="crs_push_")
+    base = staging.new_dir("crs_push_")
     try:
         log = TableLog(Path(base) / "t")
         log.append_range_bucketed(ev, "event_id", width=width, tag="ev")
         ddl = "event_id bigint, user_id bigint, vc bigint"
 
-        # end-to-end: the standard reader API with a plain .filter()
-        pruned = (
-            spark.read.format("crs_tablelog")
-            .option("path", str(Path(base) / "t"))
-            .option("schema", ddl)
-            .option("pushdown", "true")
-            .load()
-            .filter(F.col("event_id").between(lo, hi))
-        )
-        got = pruned.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
-        ).collect()[0]
+        # end-to-end: the standard reader API with a plain .filter().
+        # Spark 4.1 gates Python-source pushdown behind a flag (planning
+        # calls into Python); runtime-settable SQL conf
+        with conf_scope(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
+            pruned = (
+                spark.read.format("crs_tablelog")
+                .option("path", str(Path(base) / "t"))
+                .option("schema", ddl)
+                .option("pushdown", "true")
+                .load()
+                .filter(F.col("event_id").between(lo, hi))
+            )
+            got = pruned.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
+            ).collect()[0]
         full = ev.filter(F.col("event_id").between(lo, hi)).agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
         ).collect()[0]
@@ -2130,7 +2115,6 @@ def scan_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import (
         CommitConflict,
@@ -2144,7 +2128,7 @@ def lake_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_wap_")
+    base = staging.new_dir("crs_wap_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 2 == 0), n_files=4, tag="even")
@@ -2235,7 +2219,6 @@ def lake_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -2243,13 +2226,13 @@ def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_hist_")
+    base = staging.new_dir("crs_hist_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 2 == 0), n_files=4, tag="a")
         log.append(ev.filter(F.col("user_id") % 2 == 1), n_files=4, tag="b")
         # MOR delete: drop user_id%5==0 via a delete-vector sidecar
-        dv = tempfile.mkdtemp(prefix="crs_hist_dv_") + "/keys"
+        dv = staging.new_dir("crs_hist_dv_") + "/keys"
         ev.filter(F.col("user_id") % 5 == 0).select("event_id").coalesce(
             1
         ).write.parquet(dv)
@@ -2325,7 +2308,6 @@ def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -2333,7 +2315,7 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_restore_")
+    base = staging.new_dir("crs_restore_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 2 == 0), n_files=4, tag="good")
@@ -2422,7 +2404,6 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_constraints_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -2442,7 +2423,7 @@ def lake_constraints_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()[0]["n_bad"]
         )
 
-    base = tempfile.mkdtemp(prefix="crs_constraints_")
+    base = staging.new_dir("crs_constraints_")
     try:
         log = TableLog(base)
         n_rejected = 0
@@ -2602,7 +2583,6 @@ def sql_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
@@ -2617,7 +2597,7 @@ def lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_ckpt_")
+    base = staging.new_dir("crs_ckpt_")
     try:
         log = TableLog(base)
         for i in range(6):
@@ -2712,14 +2692,13 @@ def lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_update_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
     # shared projection: MUST match the prestaged fixture's base data,
     # so take it from _mor_events instead of re-declaring (r13 ADVICE)
     ev = _mor_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="crs_cow_")
+    base = staging.new_dir("crs_cow_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(
@@ -2832,14 +2811,13 @@ def lake_update_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
     # shared projection: MUST match the prestaged fixture's base data,
     # so take it from _mor_events instead of re-declaring (r13 ADVICE)
     ev = _mor_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="crs_umor_")
+    base = staging.new_dir("crs_umor_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(
@@ -2969,14 +2947,13 @@ def lake_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
     # shared projection: MUST match the prestaged fixture's base data,
     # so take it from _mor_events instead of re-declaring (r13 ADVICE)
     ev = _mor_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="crs_mmor_")
+    base = staging.new_dir("crs_mmor_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(
@@ -3126,14 +3103,13 @@ def lake_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
     # shared projection: MUST match the prestaged fixture's base data,
     # so take it from _mor_events instead of re-declaring (r13 ADVICE)
     ev = _mor_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="crs_mfull_")
+    base = staging.new_dir("crs_mfull_")
     try:
         log = TableLog(base)
         log.append_range_bucketed(

@@ -9,9 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.operators.aggregates import money
 from chess_ratings_spark.registry import register
+from chess_ratings_spark.session import conf_scope
 
 N_SALTS = 8
 
@@ -95,11 +96,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "scale", "sink"),
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     o = tables.load(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="crs_bucket_")
+    base = staging.new_dir("crs_bucket_")
     suffix = uuid.uuid4().hex[:8]
     names = []
     for i, cols in enumerate((["o_orderkey", "o_custkey"], ["o_orderkey", "o_totalprice"])):
@@ -214,14 +214,13 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "ts_ns", "user_id", "event_type", "value",
         F.to_date(F.col("ts")).alias("event_date"),
     )
-    base = Path(tempfile.mkdtemp(prefix="crs_prune_"))
+    base = Path(staging.new_dir("crs_prune_"))
     path = str(base / "events_by_date")
     try:
         ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
@@ -284,70 +283,67 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", F.to_date(F.col("ts")).alias("event_date")
     )
-    base = Path(tempfile.mkdtemp(prefix="crs_dpp_"))
+    base = Path(staging.new_dir("crs_dpp_"))
     path = str(base / "events_by_date")
     # AQE wraps the executed plan in query stages whose collectLeaves()
     # hides the scans' metrics; DPP is independent of AQE, so turn AQE
     # off for this one demo (conf restored; serial-driver assumption as
     # documented for streaming's _state_partitions)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
-        fact = spark.read.parquet(path)
-        total_parts = len({f.rsplit("/", 2)[-2] for f in fact.inputFiles()})
-        # the dim side needs a SELECTIVE predicate (a real Filter node)
-        # for the DPP planner rule to inject the runtime subquery — a
-        # bare distinct+limit is not considered prunable
-        dim = (
-            fact.select(F.col("event_date").alias("d"))
-            .distinct()
-            .filter(F.dayofmonth("d") <= 2)
-        )
-        joined = fact.join(F.broadcast(dim), fact.event_date == dim.d).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
-        n_rows = joined.collect()[0]["n_rows"]
+        with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
+            ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
+            fact = spark.read.parquet(path)
+            total_parts = len({f.rsplit("/", 2)[-2] for f in fact.inputFiles()})
+            # the dim side needs a SELECTIVE predicate (a real Filter node)
+            # for the DPP planner rule to inject the runtime subquery — a
+            # bare distinct+limit is not considered prunable
+            dim = (
+                fact.select(F.col("event_date").alias("d"))
+                .distinct()
+                .filter(F.dayofmonth("d") <= 2)
+            )
+            joined = fact.join(F.broadcast(dim), fact.event_date == dim.d).agg(
+                F.count(F.lit(1)).alias("n_rows")
+            )
+            n_rows = joined.collect()[0]["n_rows"]
 
-        def _extract(qe):
-            leaves = qe.executedPlan().collectLeaves()
-            metrics = {}
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                if "FileSourceScan" not in leaf.getClass().getName():
-                    continue
-                # the fact scan carries the dynamicpruning
-                # PartitionFilter; the dim scan (same table, no
-                # filter) does not
-                if "dynamicpruning" not in leaf.toString().lower():
-                    continue
-                it = leaf.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    metrics[kv._1()] = kv._2().value()
-            return metrics
+            def _extract(qe):
+                leaves = qe.executedPlan().collectLeaves()
+                metrics = {}
+                for i in range(leaves.size()):
+                    leaf = leaves.apply(i)
+                    if "FileSourceScan" not in leaf.getClass().getName():
+                        continue
+                    # the fact scan carries the dynamicpruning
+                    # PartitionFilter; the dim scan (same table, no
+                    # filter) does not
+                    if "dynamicpruning" not in leaf.toString().lower():
+                        continue
+                    it = leaf.metrics().iterator()
+                    while it.hasNext():
+                        kv = it.next()
+                        metrics[kv._1()] = kv._2().value()
+                return metrics
 
-        metrics = _with_query_execution(joined, _extract)
-        proof = metrics is not None
-        metrics = metrics or {}
-        has_dpp = bool(metrics)
-        read_parts = int(metrics.get("numPartitions", -1))
-        return tables.local_row(
-            spark,
-            ("partitions_total", int(total_parts), "int"),
-            ("partitions_read", read_parts, "int"),
-            ("rows_joined", int(n_rows), "bigint"),
-            ("dpp_ok", bool(proof and has_dpp and 0 < read_parts < total_parts), "boolean"),
-            ("proof_available", bool(proof), "boolean"),
-        )
+            metrics = _with_query_execution(joined, _extract)
+            proof = metrics is not None
+            metrics = metrics or {}
+            has_dpp = bool(metrics)
+            read_parts = int(metrics.get("numPartitions", -1))
+            return tables.local_row(
+                spark,
+                ("partitions_total", int(total_parts), "int"),
+                ("partitions_read", read_parts, "int"),
+                ("rows_joined", int(n_rows), "bigint"),
+                ("dpp_ok", bool(proof and has_dpp and 0 < read_parts < total_parts), "boolean"),
+                ("proof_available", bool(proof), "boolean"),
+            )
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -378,10 +374,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         li = tables.load(spark, sf_dir, "lineitem")
         o = tables.load(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -403,12 +396,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("bloom_in_plan", bool(has_bloom), "boolean"),
             ("proof_available", bool(proof), "boolean"),
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(
@@ -462,15 +449,7 @@ def join_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k in tuned:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, tuned):
         a = ev.select(
             "event_type",
             F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
@@ -503,12 +482,4 @@ def join_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("skew_split_applied", bool(applied), "boolean"),
             ("proof_available", bool(proof), "boolean"),
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
+

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.registry import register
 from chess_ratings_spark.streaming import batch_twins, stream_ops
 
@@ -581,8 +581,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import uuid
     from pathlib import Path
 
     from pyspark.sql import functions as F
@@ -598,8 +596,7 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    base = tempfile.mkdtemp(prefix="crs_cdfstream_")
-    name = "cdf_" + uuid.uuid4().hex[:12]
+    base = staging.new_dir("crs_cdfstream_")
     try:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
@@ -636,20 +633,13 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum("vc").cast("bigint").alias("vc_sum"),
         )
-        with stream_ops._state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = stream_ops._run(spark, agg, "complete")
         rows = (
-            spark.table(name)
+            spark.table(q.name)
             .orderBy("_commit_version", "_change_type")
             .collect()
         )  # bounded: one row per (version, change type)
+        spark.catalog.dropTempView(q.name)
         return tables.local_table(
             spark,
             [(int(r[0]), r[1], int(r[2]), int(r[3])) for r in rows],
@@ -662,6 +652,25 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("commit_version", "change_type")
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _cdf_drain(spark: SparkSession, table_dir: str, ckpt: str, apply_batch) -> None:
+    """One availableNow round of the TableLog change feed at
+    ``table_dir`` into the ``foreachBatch`` function ``apply_batch``,
+    resuming ``ckpt``. It runs outside ``stream_ops._run``'s
+    state-partition scope, so the batch plans ``apply_batch`` runs keep
+    the session's shuffle partitions."""
+    (
+        spark.readStream.format("crs_tablelog_cdf")
+        .option("path", table_dir)
+        .option("schema", "event_id bigint, user_id bigint, event_type string, vc bigint")
+        .load()
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 @register(
@@ -707,7 +716,6 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from pyspark.sql import functions as F
@@ -723,7 +731,7 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    root = tempfile.mkdtemp(prefix="crs_repl_")
+    root = staging.new_dir("crs_repl_")
     try:
         a = TableLog(Path(root) / "a")
         b = TableLog(Path(root) / "b")
@@ -768,29 +776,10 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 batch_df.unpersist()
 
-        def drain_round() -> None:
-            src = (
-                spark.readStream.format("crs_tablelog_cdf")
-                .option("path", str(a.base))
-                .option(
-                    "schema",
-                    "event_id bigint, user_id bigint,"
-                    " event_type string, vc bigint",
-                )
-                .load()
-            )
-            q = (
-                src.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
         # round 1: A is two appends deep
         a.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         a.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
-        drain_round()
+        _cdf_drain(spark, str(a.base), ckpt, apply_batch)
         # A moves on: MOR delete, OPTIMIZE (feed must skip), append
         dv_a = str(Path(root) / "a_dv")
         (
@@ -809,7 +798,7 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         a.optimize(spark, target_rows_per_file=100_000)
         a.append(ev.filter(F.col("user_id") % 3 == 2), n_files=4, tag="m2")
-        drain_round()  # round 2: resumes from checkpoint, applies delta
+        _cdf_drain(spark, str(a.base), ckpt, apply_batch)  # round 2: resumes, applies delta
 
         def mor_live(log: TableLog):
             m = log.read_manifest()
@@ -887,7 +876,6 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
     from pathlib import Path
 
     from pyspark.sql import functions as F
@@ -903,7 +891,7 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    root = tempfile.mkdtemp(prefix="crs_ivm_")
+    root = staging.new_dir("crs_ivm_")
     try:
         a = TableLog(Path(root) / "a")
         view = TableLog(Path(root) / "view")
@@ -951,28 +939,9 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
             m = view.read_manifest()
             view.commit(m["files"][-1:], op="replace-view")
 
-        def drain_round() -> None:
-            src = (
-                spark.readStream.format("crs_tablelog_cdf")
-                .option("path", str(a.base))
-                .option(
-                    "schema",
-                    "event_id bigint, user_id bigint,"
-                    " event_type string, vc bigint",
-                )
-                .load()
-            )
-            q = (
-                src.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
         a.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         a.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
-        drain_round()
+        _cdf_drain(spark, str(a.base), ckpt, apply_batch)
         dv_a = str(Path(root) / "a_dv")
         (
             ev.filter(
@@ -990,7 +959,7 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         a.optimize(spark, target_rows_per_file=100_000)
         a.append(ev.filter(F.col("user_id") % 3 == 2), n_files=4, tag="m2")
-        drain_round()
+        _cdf_drain(spark, str(a.base), ckpt, apply_batch)
 
         m = a.read_manifest()
         src = spark.read.parquet(*m["files"])

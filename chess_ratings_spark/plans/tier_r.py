@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import ingest, tables
+from chess_ratings_spark import ingest, staging, tables
 from chess_ratings_spark.functions import scalar
 from chess_ratings_spark.operators import validate
 from chess_ratings_spark.registry import register
@@ -527,15 +527,13 @@ def val_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tier-r", "sink"),
 )
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from chess_ratings_spark.sources import io as cio
 
     pre = ingest.preprocess(_raw_fide(spark, sf_dir), 2024, 6, "standard")
     two_months = pre.unionByName(
         ingest.preprocess(_raw_fide(spark, sf_dir), 2024, 7, "rapid")
     )
-    out = tempfile.mkdtemp(prefix="crs_sink_") + "/fide_ratings"
+    out = staging.new_dir("crs_sink_") + "/fide_ratings"
     cio.sink_parquet_partitioned(two_months, out, mode="overwrite")
     cio.sink_parquet_partitioned(two_months, out, mode="ignore")  # idempotent no-op
     back = cio.scan_parquet(spark, out)

@@ -13,14 +13,14 @@ literal rows first, the same hygiene as scale.py::join_bucketed.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_ratings_spark import tables
+from chess_ratings_spark import staging, tables
 from chess_ratings_spark.registry import register
+from chess_ratings_spark.session import conf_scope
 
 
 def _qe_plan(df: DataFrame) -> str | None:
@@ -61,7 +61,7 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "crs_wh_orders_src"
     )
     name = f"crs_ctas_{uuid.uuid4().hex[:8]}"
-    path = tempfile.mkdtemp(prefix="crs_ctas_") + "/t"
+    path = staging.new_dir("crs_ctas_") + "/t"
     try:
         spark.sql(
             f"""
@@ -207,11 +207,9 @@ def sql_analyze_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    base = tempfile.mkdtemp(prefix="crs_cbo_")
+    base = staging.new_dir("crs_cbo_")
     sfx = uuid.uuid4().hex[:8]
     on, ln = f"crs_cbo_o_{sfx}", f"crs_cbo_l_{sfx}"
-    confs = ("spark.sql.cbo.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    prev = {k: spark.conf.get(k, None) for k in confs}
     try:
         o.write.option("path", f"{base}/o").saveAsTable(on)
         li.write.option("path", f"{base}/l").saveAsTable(ln)
@@ -222,10 +220,6 @@ def sql_analyze_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in fs
         )
         lo = int(spark.table(on).agg(F.max("o_orderkey")).collect()[0][0]) // 100
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(max(1024, fsize // 20))
-        )
         q = f"""
             SELECT CAST(count(*) AS BIGINT) AS n_match,
                    CAST(sum(CAST(floor(l.l_extendedprice * 100) AS BIGINT))
@@ -233,43 +227,43 @@ def sql_analyze_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM {ln} l JOIN {on} o ON l.l_orderkey = o.o_orderkey
             WHERE o.o_orderkey < {lo}
         """
-        p1 = _qe_plan(spark.sql(q))
-        r1 = spark.sql(q).collect()[0]
-        # compute only the statistics the plan flip actually consumes:
-        # CBO's FilterEstimation reads o_orderkey's min/max (plus the
-        # row count ANALYZE FOR COLUMNS also records) to estimate the
-        # 1% post-filter build side — the probe side's column stats and
-        # the other orders columns never enter the broadcast decision
-        # (the join projects orders to o_orderkey alone), so the old
-        # ALL COLUMNS pass over BOTH tables paid two full ndv scans for
-        # numbers nothing read (guide §1.2: don't compute things you
-        # throw away). Same outputs, same SMJ->BHJ proof.
-        spark.sql(
-            f"ANALYZE TABLE {on} COMPUTE STATISTICS FOR COLUMNS o_orderkey"
-        )
-        p2 = _qe_plan(spark.sql(q))
-        r2 = spark.sql(q).collect()[0]
-        answers_stable = (
-            r1["n_match"] == r2["n_match"]
-            and r1["price_centi"] == r2["price_centi"]
-        )
-        smj_before = (
-            p1 is None  # plan unreachable: certification withheld
-            or ("SortMergeJoin" in p1 and "BroadcastHashJoin" not in p1)
-        )
-        bhj_after = p2 is None or "BroadcastHashJoin" in p2
-        return tables.local_row(
-            spark,
-            ("n_match", int(r2["n_match"]), "bigint"),
-            ("price_centi", int(r2["price_centi"]), "bigint"),
-            ("smj_without_stats", bool(smj_before and answers_stable), "boolean"),
-            ("bhj_with_stats", bool(bhj_after and answers_stable), "boolean"),
-        )
+        cbo = {
+            "spark.sql.cbo.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": str(max(1024, fsize // 20)),
+        }
+        with conf_scope(spark, cbo):
+            p1 = _qe_plan(spark.sql(q))
+            r1 = spark.sql(q).collect()[0]
+            # compute only the statistics the plan flip actually consumes:
+            # CBO's FilterEstimation reads o_orderkey's min/max (plus the
+            # row count ANALYZE FOR COLUMNS also records) to estimate the
+            # 1% post-filter build side — the probe side's column stats and
+            # the other orders columns never enter the broadcast decision
+            # (the join projects orders to o_orderkey alone), so the old
+            # ALL COLUMNS pass over BOTH tables paid two full ndv scans for
+            # numbers nothing read (guide §1.2: don't compute things you
+            # throw away). Same outputs, same SMJ->BHJ proof.
+            spark.sql(
+                f"ANALYZE TABLE {on} COMPUTE STATISTICS FOR COLUMNS o_orderkey"
+            )
+            p2 = _qe_plan(spark.sql(q))
+            r2 = spark.sql(q).collect()[0]
+            answers_stable = (
+                r1["n_match"] == r2["n_match"]
+                and r1["price_centi"] == r2["price_centi"]
+            )
+            smj_before = (
+                p1 is None  # plan unreachable: certification withheld
+                or ("SortMergeJoin" in p1 and "BroadcastHashJoin" not in p1)
+            )
+            bhj_after = p2 is None or "BroadcastHashJoin" in p2
+            return tables.local_row(
+                spark,
+                ("n_match", int(r2["n_match"]), "bigint"),
+                ("price_centi", int(r2["price_centi"]), "bigint"),
+                ("smj_without_stats", bool(smj_before and answers_stable), "boolean"),
+                ("bhj_with_stats", bool(bhj_after and answers_stable), "boolean"),
+            )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {on}")
         spark.sql(f"DROP TABLE IF EXISTS {ln}")
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)

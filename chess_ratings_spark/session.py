@@ -1,13 +1,16 @@
-"""SparkSession construction for tests and benchmarks.
+"""SparkSession construction for tests and benchmarks, and the one
+scope for temporary session confs.
 
 The driver supplies its own session to ``__spark_entry__`` functions, so
 engine code must never *require* this builder — queries set any
-runtime-settable conf they need themselves (see ``tables.load_events``).
+runtime-settable conf they need themselves, inside :func:`conf_scope`,
+so the driver's session is left as it was.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -35,3 +38,22 @@ def get_spark(app_name: str = "chess-ratings-spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime ``confs`` for the body; on exit (also on an
+    exception) restore each key's previous value, or unset it again if
+    it was unset before. The driver runs queries serially, so no other
+    query plans while a scoped value is in force."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

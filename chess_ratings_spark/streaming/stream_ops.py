@@ -3,26 +3,31 @@
 Each operator here actually runs a streaming query: the normalized
 events frame is staged to a parquet directory, consumed with
 ``readStream`` (declared schema — streaming sources never infer),
-processed with watermarks/state, and drained synchronously into a
-memory sink via ``processAllAvailable``. That is the standard local
-replay harness; on a cluster the same code points at Kafka/files and a
-real sink.
+processed with watermarks/state, and written to a memory sink or a
+``foreachBatch`` function. That is the standard local replay harness;
+on a cluster the same code points at Kafka/files and a real sink.
 
-Late-data and dedup semantics are multi-batch phenomena, so those
-harnesses stage two files and drain between writes — watermark advances
-on batch 1, batch 2's late rows get dropped.
+Every query starts and waits in :func:`_run`, the one run path: it
+owns the state-partition scope, the query name, the sink, the trigger
+and the wait. A plain run drains with ``availableNow`` and
+``awaitTermination``. Late-data, dedup and sink harnesses are
+multi-batch phenomena, so they pass ``between`` steps (land another
+file, run an OPTIMIZE): the query then runs on a ``0 seconds`` trigger
+and each step runs between ``processAllAvailable`` rounds — watermark
+advances on batch 1, batch 2's late rows get dropped.
 """
 
 from __future__ import annotations
 
-import tempfile
 import uuid
-from contextlib import contextmanager
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from chess_ratings_spark import staging
+from chess_ratings_spark.session import conf_scope
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
@@ -63,7 +68,7 @@ def _land_slice(df: DataFrame, dest_dir: str) -> None:
 def _stage_mutable(ev: DataFrame, prefix: str) -> str:
     """A PRIVATE hardlinked copy of :func:`_stage`, for harnesses that
     append sentinel/late files mid-run."""
-    path = tempfile.mkdtemp(prefix=prefix) + "/in"
+    path = staging.new_dir(prefix) + "/in"
     staging.land(ev.select(*_EVENT_COLS), path)
     return path
 
@@ -71,7 +76,6 @@ def _stage_mutable(ev: DataFrame, prefix: str) -> str:
 STATE_PARTITIONS = 4
 
 
-@contextmanager
 def _state_partitions(spark: SparkSession):
     """A stateful streaming query instantiates one state store per
     shuffle partition per micro-batch, so the partition count read at
@@ -91,12 +95,43 @@ def _state_partitions(spark: SparkSession):
     so no batch query plans concurrently while the conf is lowered. If
     concurrent use ever appears, scope this via a cloned session
     (spark.newSession()) instead of the shared conf."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)})
+
+
+def _run(
+    spark: SparkSession,
+    df: DataFrame,
+    mode: str = "append",
+    *,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+    between: Sequence[Callable[[StreamingQuery], None]] = (),
+) -> StreamingQuery:
+    """Run the stream ``df`` to completion; the one place a stream here
+    starts and waits. Output goes to a fresh memory sink named
+    ``q.name`` (the caller snapshots or drops it) or, given ``sink``,
+    to that ``foreachBatch`` function. With no ``between`` steps the
+    query drains with ``availableNow``; otherwise it runs on a
+    ``0 seconds`` trigger, each step runs between
+    ``processAllAvailable`` rounds, and the query then stops."""
+    with _state_partitions(spark):
+        w = df.writeStream.outputMode(mode).queryName("snk_" + uuid.uuid4().hex[:12])
+        w = w.foreachBatch(sink) if sink is not None else w.format("memory")
+        if checkpoint is not None:
+            w = w.option("checkpointLocation", checkpoint)
+        if not between:
+            q = w.trigger(availableNow=True).start()
+            q.awaitTermination()
+            return q
+        q = w.trigger(processingTime="0 seconds").start()
+        try:
+            q.processAllAvailable()
+            for step in between:
+                step(q)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        return q
 
 
 def _snapshot_sink(spark: SparkSession, name: str) -> DataFrame:
@@ -116,19 +151,13 @@ def _snapshot_sink(spark: SparkSession, name: str) -> DataFrame:
     return out
 
 
-def _drain(spark: SparkSession, stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Run the stream to completion (availableNow) into a memory sink."""
-    with _state_partitions(spark):
-        name = "snk_" + uuid.uuid4().hex[:12]
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _snapshot_sink(spark, name)
+def _drain(
+    spark: SparkSession, stream_df: DataFrame, output_mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Run the stream to completion (availableNow) and snapshot its
+    memory sink."""
+    q = _run(spark, stream_df, output_mode, checkpoint=checkpoint)
+    return _snapshot_sink(spark, q.name)
 
 
 #: Zone-free TIMESTAMP_NTZ -> epoch micros (same derivation as
@@ -257,7 +286,7 @@ def late_data_stream(spark: SparkSession, ev: DataFrame, split_frac: float = 0.5
     # µs; interval/2 in SQL engines may integer-divide the days field)
     span_us = (stats.hi - stats.lo) // _dt.timedelta(microseconds=1)
     cutoff = stats.lo + _dt.timedelta(microseconds=int(span_us * split_frac))
-    base = tempfile.mkdtemp(prefix="crs_late_") + "/in"
+    base = staging.new_dir("crs_late_") + "/in"
     new_half = ev.filter(F.col("ts") >= _ntz_lit(cutoff))
     old_half = ev.filter(F.col("ts") < _ntz_lit(cutoff))
 
@@ -274,30 +303,17 @@ def late_data_stream(spark: SparkSession, ev: DataFrame, split_frac: float = 0.5
             "n",
         )
     )
-    name = "late_" + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()  # batch 1: watermark advances near hi
-        _land_slice(sel(old_half), base)
-        q.processAllAvailable()  # batch 2: all rows below watermark -> dropped
-        q.stop()
-    return _snapshot_sink(spark, name)
+    # batch 1 advances the watermark near hi; batch 2's rows all fall
+    # below it and are dropped
+    q = _run(spark, agg, "append", between=[lambda _: _land_slice(sel(old_half), base)])
+    return _snapshot_sink(spark, q.name)
 
 
-def stateful_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> DataFrame:
-    """Custom per-key state via applyInPandasWithState: per user, carry
-    (running_total, n_events, n_over_threshold) across batches and emit
-    the final state per user."""
+def _per_user_state(src: DataFrame, threshold: float) -> DataFrame:
+    """Per user, carry (running_total, n_events, n_over_threshold)
+    across batches in applyInPandasWithState and emit the state."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
 
     def track(key, pdf_iter, state: GroupState):
         total, n, n_over = state.get if state.exists else (0.0, 0, 0)
@@ -310,14 +326,21 @@ def stateful_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0
             {"user_id": [key[0]], "total_value": [round(total, 2)], "n_events": [n], "n_over": [n_over]}
         )
 
-    out = src.groupBy("user_id").applyInPandasWithState(
+    return src.groupBy("user_id").applyInPandasWithState(
         track,
         outputStructType="user_id bigint, total_value double, n_events bigint, n_over bigint",
         stateStructType="total double, n bigint, n_over bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain(spark, out, "update")
+
+
+def stateful_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> DataFrame:
+    """Custom per-key state via applyInPandasWithState: per user, carry
+    (running_total, n_events, n_over_threshold) across batches and emit
+    the final state per user."""
+    src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
+    return _drain(spark, _per_user_state(src, threshold), "update")
 
 
 def stateful_stream_tws(
@@ -374,33 +397,10 @@ def stateful_stream_rocksdb(
     :data:`last_rocksdb_proof` from the explicit checkpoint dir."""
     import os
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     global last_rocksdb_proof
     last_rocksdb_proof = None
 
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
-
-    def track(key, pdf_iter, state: GroupState):
-        total, n, n_over = state.get if state.exists else (0.0, 0, 0)
-        for pdf in pdf_iter:
-            total += float(pdf["value"].sum())
-            n += int(len(pdf))
-            n_over += int((pdf["value"] > threshold).sum())
-        state.update((total, n, n_over))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "total_value": [round(total, 2)], "n_events": [n], "n_over": [n_over]}
-        )
-
-    out = src.groupBy("user_id").applyInPandasWithState(
-        track,
-        outputStructType="user_id bigint, total_value double, n_events bigint, n_over bigint",
-        stateStructType="total double, n bigint, n_over bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
     confs = {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state."
@@ -409,28 +409,9 @@ def stateful_stream_rocksdb(
         "spark.sql.streaming.stateStore.rocksdb"
         ".changelogCheckpointing.enabled": "true",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="crs_rocks_") + "/ckpt"
-    try:
-        with _state_partitions(spark):
-            name = "snk_" + uuid.uuid4().hex[:12]
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    ckpt = staging.new_dir("crs_rocks_") + "/ckpt"
+    with conf_scope(spark, confs):
+        q = _run(spark, _per_user_state(src, threshold), "update", checkpoint=ckpt)
 
     state_files = [
         f
@@ -440,7 +421,7 @@ def stateful_stream_rocksdb(
     last_rocksdb_proof = any(
         f.endswith((".changelog", ".zip")) for f in state_files
     ) and not any(f.endswith(".delta") for f in state_files)
-    return _snapshot_sink(spark, name)
+    return _snapshot_sink(spark, q.name)
 
 
 def static_join_stream(spark: SparkSession, ev: DataFrame, weights: DataFrame) -> DataFrame:
@@ -499,6 +480,37 @@ def sliding_stream(
     return _drain(spark, agg, "append")
 
 
+def _interval_join(
+    spark: SparkSession, source: str, delay: str, how: str, lookback: str
+) -> DataFrame:
+    """Purchases joined to the same user's views within ``lookback``
+    BEFORE the purchase: two streams over the parquet dir ``source``,
+    each watermarked by ``delay``, joined with ``how`` under the range
+    condition that bounds the buffered state."""
+
+    def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
+        src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(source))
+        return (
+            src.filter(F.col("event_type") == name)
+            .withWatermark("ts", delay)
+            .select(
+                F.col("event_id").alias(id_alias),
+                F.col("user_id").alias(f"{id_alias}_user"),
+                F.col("ts").alias(ts_alias),
+            )
+        )
+
+    p = side("purchase", "p_ts", "purchase_id")
+    v = side("view", "v_ts", "view_id")
+    return p.join(
+        v,
+        (F.col("purchase_id_user") == F.col("view_id_user"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("v_ts") <= F.col("p_ts")),
+        how,
+    )
+
+
 def interval_join_stream(
     spark: SparkSession, ev: DataFrame, lookback: str = "1 hour"
 ) -> DataFrame:
@@ -516,29 +528,8 @@ def interval_join_stream(
     out-delay the arrival skew (here: 35 days vs the fixture span).
     Output is id pairs only — the batch inner join is the exact
     oracle."""
-    staged = _stage(ev)
-
-    def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
-        src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(staged))
-        return (
-            src.filter(F.col("event_type") == name)
-            .withWatermark("ts", "35 days")
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(f"{id_alias}_user"),
-                F.col("ts").alias(ts_alias),
-            )
-        )
-
-    p = side("purchase", "p_ts", "purchase_id")
-    v = side("view", "v_ts", "view_id")
-    joined = p.join(
-        v,
-        (F.col("purchase_id_user") == F.col("view_id_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-    ).select("purchase_id", "view_id")
-    return _drain(spark, joined, "append")
+    joined = _interval_join(spark, _stage(ev), "35 days", "inner", lookback)
+    return _drain(spark, joined.select("purchase_id", "view_id"), "append")
 
 
 def join_then_window_stream(
@@ -574,27 +565,7 @@ def join_then_window_stream(
     # hardlinks to the shared staged copy — no second staging write
     base = _stage_mutable(ev, "crs_msop_")
     sentinel = ev.filter(F.col("event_type") == "error").orderBy("ts").limit(1)
-
-    def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
-        src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(base))
-        return (
-            src.filter(F.col("event_type") == name)
-            .withWatermark("ts", delay)
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(f"{id_alias}_user"),
-                F.col("ts").alias(ts_alias),
-            )
-        )
-
-    p = side("purchase", "p_ts", "purchase_id")
-    v = side("view", "v_ts", "view_id")
-    joined = p.join(
-        v,
-        (F.col("purchase_id_user") == F.col("view_id_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-    )
+    joined = _interval_join(spark, base, delay, "inner", lookback)
     agg = (
         joined.groupBy(F.window("p_ts", width))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -604,20 +575,10 @@ def join_then_window_stream(
             "n_pairs",
         )
     )
-    name = "msop_" + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()  # batch 1: all data; watermark set at end
-        _land_slice(sel(sentinel), base)
-        q.processAllAvailable()  # batch 2: finalized windows emit
-        q.stop()
-    out = _snapshot_sink(spark, name)
+    # batch 1: all data, the watermark set at its end; batch 2 (the
+    # sentinel): finalized windows emit
+    q = _run(spark, agg, "append", between=[lambda _: _land_slice(sel(sentinel), base)])
+    out = _snapshot_sink(spark, q.name)
     hi = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row scalar
     horizon = hi - _dt.timedelta(hours=4)  # delay 2h + lookback 1h + width 1h
     return (
@@ -635,7 +596,7 @@ def foreach_batch_merge_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     maxFilesPerTrigger=1, so cross-batch accumulation is actually
     exercised; the final state must equal the whole-input batch GROUP
     BY (the SQL oracle)."""
-    base = tempfile.mkdtemp(prefix="crs_fbm_")
+    base = staging.new_dir("crs_fbm_")
     sel = ev.select("event_id", "ts", "user_id", "event_type", "value", "props")
     # read-only 4-file source: session-cached, never mutated
     src_dir = _slice_stage(sel.repartition(4))
@@ -674,14 +635,7 @@ def foreach_batch_merge_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
         state["df"] = batch.sparkSession.read.parquet(path)
 
     src = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src_dir)
-    with _state_partitions(spark):
-        q = (
-            src.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", base + "/ckpt")
-            .start()
-        )
-        q.awaitTermination()
+    _run(spark, src, sink=merge_batch, checkpoint=base + "/ckpt")
     final = state["df"]
     return final.select(
         "user_id",
@@ -710,7 +664,7 @@ def checkpoint_recovery_stream(
     """
     stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     cutoff = stats.lo + (stats.hi - stats.lo) * split_frac
-    base = tempfile.mkdtemp(prefix="crs_ckpt_")
+    base = staging.new_dir("crs_ckpt_")
     src_dir, ckpt_dir = base + "/in", base + "/ckpt"
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
     _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cutoff))), src_dir)
@@ -718,18 +672,7 @@ def checkpoint_recovery_stream(
     def run_instance() -> DataFrame:
         src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
         agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-        name = "ckpt_" + uuid.uuid4().hex[:12]
-        with _state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return _snapshot_sink(spark, name)
+        return _drain(spark, agg, "complete", ckpt_dir)
 
     run_instance()  # first instance: oldest half, then terminates
     _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)
@@ -804,12 +747,8 @@ def tws_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> 
     # transformWithState requires the RocksDB state store (the HDFS-
     # backed default doesn't support the new state API); read at query
     # start, so a runtime conf set suffices
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
         out = src.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=Tracker(),
@@ -818,11 +757,6 @@ def tws_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> 
             timeMode="None",
         )
         return _drain(spark, out, "update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -846,7 +780,7 @@ def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
 
     stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     cutoff = stats.lo + (stats.hi - stats.lo) * 0.5
-    base = tempfile.mkdtemp(prefix="crs_logsink_")
+    base = staging.new_dir("crs_logsink_")
     src_dir = base + "/in"
     log = TableLog(base + "/table")
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
@@ -873,18 +807,15 @@ def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
         )
         committed_batches.add(batch_id)
 
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
-    with _state_partitions(spark):
-        q = (
-            src.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()  # micro-batch 0 -> manifest version 0
-        _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)
-        q.processAllAvailable()  # micro-batch 1 -> manifest version 1
-        q.stop()
+    # micro-batch 0 -> manifest version 0; the newer half lands, then
+    # micro-batch 1 -> manifest version 1
+    _run(
+        spark,
+        spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
+        sink=commit_batch,
+        checkpoint=base + "/ckpt",
+        between=[lambda _: _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)],
+    )
 
     table = log.snapshot(spark)
     agg = table.agg(
@@ -938,30 +869,8 @@ def outer_interval_join_stream(
     have; matched pairs appear in both regions. The boundary band is
     excluded on BOTH engine and oracle sides, making the remaining
     set exactly replayable."""
-    staged = _stage(ev)
-
-    def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
-        src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(staged))
-        return (
-            src.filter(F.col("event_type") == name)
-            .withWatermark("ts", delay)
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(f"{id_alias}_user"),
-                F.col("ts").alias(ts_alias),
-            )
-        )
-
-    p = side("purchase", "p_ts", "purchase_id")
-    v = side("view", "v_ts", "view_id")
-    joined = p.join(
-        v,
-        (F.col("purchase_id_user") == F.col("view_id_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("purchase_id", "view_id", "p_ts")
-    out = _drain(spark, joined, "append")
+    joined = _interval_join(spark, _stage(ev), delay, "left_outer", lookback)
+    out = _drain(spark, joined.select("purchase_id", "view_id", "p_ts"), "append")
     hi = ev.agg(F.max("ts").alias("hi")).collect()[0]["hi"]  # bounded scalar
     import datetime as _dt
 
@@ -997,18 +906,9 @@ def progress_metrics_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     Driver state: the bounded progress JSON list (O(batches))."""
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
     agg = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    name = "prog_" + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progresses = list(q.recentProgress)
-    _snapshot_sink(spark, name)  # drop the temp view; content unused
+    q = _run(spark, agg, "complete")
+    progresses = list(q.recentProgress)
+    spark.catalog.dropTempView(q.name)  # sink content unused
     input_rows = sum(int(p["numInputRows"]) for p in progresses)
     state_rows = max(
         (
@@ -1173,28 +1073,17 @@ def session_timeout_stream(
             }
         )
 
-    with _state_partitions(spark):
-        name = "snk_" + uuid.uuid4().hex[:12]
-        q = (
-            src.groupBy("user_id")
-            .applyInPandasWithState(
-                track,
-                outputStructType=out_schema,
-                stateStructType=(
-                    "start_us bigint, end_us bigint, end_ltz_us bigint,"
-                    " n bigint, vc bigint"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _snapshot_sink(spark, name)
+    sessions = src.groupBy("user_id").applyInPandasWithState(
+        track,
+        outputStructType=out_schema,
+        stateStructType=(
+            "start_us bigint, end_us bigint, end_ltz_us bigint,"
+            " n bigint, vc bigint"
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    return _drain(spark, sessions, "append")
 
 
 def ttl_state_stream(
@@ -1250,7 +1139,7 @@ def ttl_state_stream(
     ttl_ms = ttl_us // 1000
 
     staged = _stage(ev)
-    ckpt = tempfile.mkdtemp(prefix="crs_ttlstate_") + "/ckpt"
+    ckpt = staging.new_dir("crs_ttlstate_") + "/ckpt"
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
         .parquet(staged)
@@ -1308,27 +1197,14 @@ def ttl_state_stream(
         state.setTimeoutTimestamp(last // 1000 + ttl_ms)
         yield pd.DataFrame({"user_id": pd.Series([], dtype="int64")})
 
-    name = "snk_" + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            src.groupBy("user_id")
-            .applyInPandasWithState(
-                track,
-                outputStructType="user_id bigint",
-                stateStructType=(
-                    "last_us bigint, n bigint, vc bigint, gens bigint"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    live = src.groupBy("user_id").applyInPandasWithState(
+        track,
+        outputStructType="user_id bigint",
+        stateStructType="last_us bigint, n bigint, vc bigint, gens bigint",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    q = _run(spark, live, "append", checkpoint=ckpt)
     # The access-time reset set is deterministic only if ALL data lands
     # in one micro-batch (documented above) — enforce it loudly instead
     # of letting a future maxFilesPerTrigger/regression produce silently
@@ -1342,7 +1218,7 @@ def ttl_state_stream(
             f"ttl_state_stream: input split across {data_batches} "
             "micro-batches — single-batch determinism contract broken"
         )
-    spark.catalog.dropTempView(name)  # sink is empty by design
+    spark.catalog.dropTempView(q.name)  # sink is empty by design
     return (
         spark.read.format("statestore")
         .load(ckpt)
@@ -1368,32 +1244,8 @@ def semi_join_stream(
     must know when a purchase can stop waiting for a view); state stays
     range-bounded. Emits purchase ids only; the batch EXISTS is the
     exact oracle."""
-    staged = _stage(ev)
-
-    def side(name: str, ts_alias: str, id_alias: str) -> DataFrame:
-        src = _with_event_time(
-            spark.readStream.schema(EVENT_SCHEMA).parquet(staged)
-        )
-        return (
-            src.filter(F.col("event_type") == name)
-            .withWatermark("ts", "35 days")
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(f"{id_alias}_user"),
-                F.col("ts").alias(ts_alias),
-            )
-        )
-
-    p = side("purchase", "p_ts", "purchase_id")
-    v = side("view", "v_ts", "view_id")
-    joined = p.join(
-        v,
-        (F.col("purchase_id_user") == F.col("view_id_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_semi",
-    ).select("purchase_id")
-    return _drain(spark, joined, "append")
+    joined = _interval_join(spark, _stage(ev), "35 days", "left_semi", lookback)
+    return _drain(spark, joined.select("purchase_id"), "append")
 
 
 def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -1429,7 +1281,7 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
     stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     cut1 = stats.lo + (stats.hi - stats.lo) * 0.34
     cut2 = stats.lo + (stats.hi - stats.lo) * 0.67
-    base = tempfile.mkdtemp(prefix="crs_shardsink_")
+    base = staging.new_dir("crs_shardsink_")
     src_dir = base + "/in"
     log = TableLog(base + "/table")
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
@@ -1453,47 +1305,42 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
             op=f"stream-batch-{batch_id}",
         )
 
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
-    with _state_partitions(spark):
-        q = (
-            src.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()  # batch 0 -> v0 (2 files, 1 shard)
-        _land_slice(
-            sel(
-                ev.filter(
-                    (F.col("ts") >= _ntz_lit(cut1))
-                    & (F.col("ts") < _ntz_lit(cut2))
-                )
-            ),
-            src_dir,
-        )
-        q.processAllAvailable()  # batch 1 -> v1 (4 files, 2 shards)
+    files_before = n_preopt = v_pre_opt = v_opt = files_after = pre_opt_batches = None
 
+    def land_middle(q: StreamingQuery) -> None:
+        mid = (F.col("ts") >= _ntz_lit(cut1)) & (F.col("ts") < _ntz_lit(cut2))
+        _land_slice(sel(ev.filter(mid)), src_dir)
+
+    def optimize_then_land_last(q: StreamingQuery) -> None:
+        nonlocal files_before, n_preopt, v_pre_opt, v_opt, files_after, pre_opt_batches
         files_before = len(log.resolve_files())
         n_preopt = log.snapshot(spark).count()
         v_pre_opt = log.latest_version()
         v_opt = log.optimize(spark, target_rows_per_file=500_000)  # v2
         files_after = len(log.resolve_files())
         pre_opt_batches = {p["batchId"] for p in q.recentProgress}
-
         _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cut2))), src_dir)
-        q.processAllAvailable()  # batch 2 -> v3, appends onto compacted
-        # ground truth for the batch/version relationships: the batch
-        # ids the STREAM actually fired (recentProgress), not an
-        # assumption about which staged drops produce batches — a
-        # 0-row drop can still fire a data batch for its new file, so
-        # "non-empty thirds" under-counts (round-11 review)
-        fired = {p["batchId"] for p in q.recentProgress}
-        rows_after_opt = sum(
-            int(p["numInputRows"])
-            for p in q.recentProgress
-            if p["batchId"] not in pre_opt_batches
-        )
-        q.stop()
+
+    # batch 0 -> v0 (2 files, 1 shard); batch 1 -> v1 (4 files, 2
+    # shards); OPTIMIZE -> v2; batch 2 -> v3, appends onto compacted
+    q = _run(
+        spark,
+        spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
+        sink=commit_batch,
+        checkpoint=base + "/ckpt",
+        between=[land_middle, optimize_then_land_last],
+    )
+    # ground truth for the batch/version relationships: the batch
+    # ids the STREAM actually fired (recentProgress), not an
+    # assumption about which staged drops produce batches — a
+    # 0-row drop can still fire a data batch for its new file, so
+    # "non-empty thirds" under-counts (round-11 review)
+    fired = {p["batchId"] for p in q.recentProgress}
+    rows_after_opt = sum(
+        int(p["numInputRows"])
+        for p in q.recentProgress
+        if p["batchId"] not in pre_opt_batches
+    )
 
     agg = log.snapshot(spark).agg(
         F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
@@ -1547,6 +1394,36 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
     )
 
 
+def _parity_rounds(
+    spark: SparkSession, ev: DataFrame, mid: Callable[[str], None] | None = None
+) -> str:
+    """The two-round replay the state readers check: the even-user_id
+    slice (event_type, vc = floor(value*100)) drains through a grouped
+    count ``n`` / sum ``s`` (round 1), ``mid(ckpt)`` runs, then the odd
+    slice lands in the same source dir and a second query instance
+    resumes the SAME checkpoint (round 2). Returns the checkpoint dir."""
+    root = staging.new_dir("crs_state_")
+    indir, ckpt = root + "/in", root + "/ckpt"
+    for parity in (0, 1):
+        _land_slice(
+            ev.filter(f"user_id % 2 = {parity}").select(
+                "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
+            ),
+            indir,
+        )
+        agg = (
+            spark.readStream.schema("event_type string, vc bigint")
+            .parquet(indir)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s"))
+        )
+        q = _run(spark, agg, "complete", checkpoint=ckpt)
+        spark.catalog.dropTempView(q.name)
+        if parity == 0 and mid is not None:
+            mid(ckpt)
+    return ckpt
+
+
 def state_reader_snapshot(spark: SparkSession, ev: DataFrame) -> DataFrame:
     """Spark 4 state data source (``spark.read.format("statestore")``):
     read a streaming checkpoint's state store as a plain DataFrame —
@@ -1570,38 +1447,8 @@ def state_reader_snapshot(spark: SparkSession, ev: DataFrame) -> DataFrame:
     checkpoint's OWN partitioning — no shuffle; the in-stream
     aggregation runs at the harness state-partition floor like every
     other stateful query here."""
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="crs_stateread_")
-    indir = root + "/in"
-    ckpt = root + "/ckpt"
-    slice_a = ev.filter("user_id % 2 = 0").select(
-        "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
-    )
-    slice_b = ev.filter("user_id % 2 = 1").select(
-        "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
-    )
-    _land_slice(slice_a, indir)
-
-    def drain_round() -> None:
-        with _state_partitions(spark):
-            name = "snk_" + uuid.uuid4().hex[:12]
-            q = (
-                spark.readStream.schema("event_type string, vc bigint")
-                .parquet(indir)
-                .groupBy("event_type")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s"))
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        spark.catalog.dropTempView(name)
-
-    def state_now(n_name: str, s_name: str) -> DataFrame:
+    def state_now(ckpt: str, n_name: str, s_name: str) -> DataFrame:
         return (
             spark.read.format("statestore")
             .load(ckpt)
@@ -1612,17 +1459,20 @@ def state_reader_snapshot(spark: SparkSession, ev: DataFrame) -> DataFrame:
             )
         )
 
-    drain_round()
-    # offline mid-stream snapshot: only slice A has been aggregated.
-    # Materialize NOW — the frame is lazy, and round 2 advances the
-    # store underneath a late read.
-    mid = spark.createDataFrame(
-        state_now("n_mid", "vc_mid").collect(),
-        schema="event_type string, n_mid bigint, vc_mid bigint",
-    )
-    _land_slice(slice_b, indir)
-    drain_round()
-    fin = state_now("n_final", "vc_final")
+    mid = None
+
+    def read_mid(ckpt: str) -> None:
+        # offline mid-stream snapshot: only slice A has been aggregated.
+        # Materialize NOW — the frame is lazy, and round 2 advances the
+        # store underneath a late read.
+        nonlocal mid
+        mid = spark.createDataFrame(
+            state_now(ckpt, "n_mid", "vc_mid").collect(),
+            schema="event_type string, n_mid bigint, vc_mid bigint",
+        )
+
+    ckpt = _parity_rounds(spark, ev, read_mid)
+    fin = state_now(ckpt, "n_final", "vc_final")
     return (
         fin.join(F.broadcast(mid), "event_type", "left")
         .select(
@@ -1667,10 +1517,8 @@ def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
     evicts against the final watermark. The state read uses the
     checkpoint's own partitioning — no shuffle; output is two tiny
     census rows plus the emitted-pair census the memory sink saw."""
-    import tempfile
-
     staged = _stage(ev)
-    ckpt = tempfile.mkdtemp(prefix="crs_jstate_") + "/ckpt"
+    ckpt = staging.new_dir("crs_jstate_") + "/ckpt"
 
     def side(name: str, pfx: str) -> DataFrame:
         src = _with_event_time(
@@ -1694,18 +1542,7 @@ def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("v_vc", "p_vc")
-    name = "jsr_" + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = _snapshot_sink(spark, name)
+    out = _drain(spark, joined, "append", ckpt)
     pairs = out.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum(F.col("v_vc") + F.col("p_vc")), F.lit(0))
@@ -1759,7 +1596,6 @@ def pyds_stream_sink_census(spark: SparkSession, ev: DataFrame) -> DataFrame:
     message per task per epoch, and idempotent epoch commits make
     crash-replay safe by construction."""
     import json as _json
-    import tempfile
     from pathlib import Path
 
     from chess_ratings_spark.sources.jsonl_sink import (
@@ -1771,7 +1607,7 @@ def pyds_stream_sink_census(spark: SparkSession, ev: DataFrame) -> DataFrame:
         spark.dataSource.register(JsonlManifestSink)
     except Exception:
         pass  # already registered in this session
-    root = tempfile.mkdtemp(prefix="crs_pydsw_")
+    root = staging.new_dir("crs_pydsw_")
     indir = root + "/in"
     ckpt = root + "/ckpt"
     out = str(Path(root) / "out")
@@ -1846,37 +1682,7 @@ def state_changefeed(spark: SparkSession, ev: DataFrame) -> DataFrame:
     the state-debugging/audit surface: which keys a batch touched and
     what they became, read offline from the checkpoint's own
     partitioning without re-running the stream."""
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="crs_statecf_")
-    indir = root + "/in"
-    ckpt = root + "/ckpt"
-    slice_of = lambda parity: ev.filter(f"user_id % 2 = {parity}").select(  # noqa: E731
-        "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
-    )
-    _land_slice(slice_of(0), indir)
-
-    def drain_round() -> None:
-        with _state_partitions(spark):
-            name = "cf_" + uuid.uuid4().hex[:12]
-            q = (
-                spark.readStream.schema("event_type string, vc bigint")
-                .parquet(indir)
-                .groupBy("event_type")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s"))
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        spark.catalog.dropTempView(name)
-
-    drain_round()  # batch 0: even user_ids
-    _land_slice(slice_of(1), indir)
-    drain_round()  # batch 1: odd user_ids resume the same checkpoint
+    ckpt = _parity_rounds(spark, ev)  # batch 0: even user_ids; batch 1: odd
     feed = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")

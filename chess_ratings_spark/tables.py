@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chess_ratings_spark import staging
+from chess_ratings_spark.session import conf_scope
 
 TABLES = (
     "region",
@@ -154,15 +155,8 @@ def _events_from_nanos_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan, so it can be restored immediately — later parquet reads on
     the shared session see the caller's original behavior.
     """
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         raw = spark.read.parquet(path_of(sf_dir, "events"))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return _events_rebuild_from_ns(raw)
 
 

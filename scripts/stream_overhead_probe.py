@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import sys
 import time
-import uuid
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parents[1])
@@ -35,25 +34,16 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def probe(spark, label: str, stream_df, output_mode: str) -> dict:
-    from chess_ratings_spark.streaming.stream_ops import _state_partitions
+    from chess_ratings_spark.streaming.stream_ops import _run
 
-    name = "probe_" + uuid.uuid4().hex[:10]
     t0 = time.perf_counter()
-    with _state_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = _run(spark, stream_df, output_mode)
     wall = time.perf_counter() - t0
     batches = []
     for p in q.recentProgress:
         d = p["durationMs"] if isinstance(p, dict) else json.loads(p.json)["durationMs"]
         batches.append(d)
-    spark.catalog.dropTempView(name)
+    spark.catalog.dropTempView(q.name)
     agg: dict[str, int] = {}
     for b in batches:
         for k, v in b.items():

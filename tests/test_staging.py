@@ -13,18 +13,27 @@ from chess_ratings_spark.streaming import stream_ops
 from .conftest import SF_SMOKE
 
 
-def test_purge_removes_every_kind_of_staged_dir(spark, tmp_path):
+def test_purge_removes_every_kind_of_staged_dir(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "src")
     spark.range(30).selectExpr("id AS k", "id % 3 AS m").write.parquet(src)
     fx = spark.read.parquet(src)
 
     TableLog(str(tmp_path / "t")).append(fx.filter("m = 1"), n_files=2, tag="s")
+    made: list[str] = []
+    new_dir = staging.new_dir
+    monkeypatch.setattr(staging, "new_dir", lambda p: made.append(new_dir(p)) or made[-1])
+    stream_ops.checkpoint_recovery_stream(spark, tables.load(spark, SF_SMOKE, "events"))
+    monkeypatch.undo()
+    (base,) = [d for d in made if os.path.basename(d).startswith("crs_ckpt_")]
+    ckpt = base + "/ckpt"
+    assert ckpt.startswith(staging._root + os.sep)
     dirs = {
         "stream events": stream_ops._stage(tables.load(spark, SF_SMOKE, "events")),
         "stream slice": stream_ops._slice_stage(fx.filter("m = 0")),
         "tablelog landing": staging.stage_dir(fx.filter("m = 1"), 2),
         "mor fixture": lakehouse._mor_base_prestaged(spark, SF_SMOKE)[0],
         "lsh index": llm_tier._history_lsh_index(spark, SF_SMOKE),
+        "stream checkpoint": ckpt,
     }
     assert all(os.path.isdir(d) for d in dirs.values())
 
