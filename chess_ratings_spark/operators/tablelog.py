@@ -38,6 +38,13 @@ two mechanisms that give snapshot isolation):
   ``dataChange`` flag / Iceberg's replace-snapshot exclusion), so
   :meth:`changes_between` can replay exactly the rows added and
   deleted between two versions while skipping compaction churn.
+- **Schema on the log**: every manifest carries its table's schema
+  (``StructType.json()``, Delta's ``metaData.schemaString``). Verbs
+  that land data record the landed DataFrame's schema, every other
+  commit inherits its parent's, and a first commit that names none
+  infers it once from its files. Reads of committed data files pass it
+  to Spark, so no snapshot read launches a parquet footer-inference
+  job. Delete-vector sidecars still infer theirs.
 
 At 100 TB none of this touches the driver with data: manifests carry
 file names and stats (bytes here; per-column min/max in a production
@@ -57,6 +64,7 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from chess_ratings_spark import staging
 
@@ -172,6 +180,41 @@ def _apply_delete_vectors(spark: SparkSession, df: DataFrame, dvs) -> DataFrame:
         keys = spark.read.parquet(dv)
         df = df.join(F.broadcast(keys), keys.columns, "left_anti")
     return df
+
+
+def _infer_schema(files: list[str]) -> str | None:
+    """Schema JSON of a first commit that names none, inferred ONCE
+    from its files' footers at commit time (the same inference the
+    readers ran on every read before the schema was recorded). Without
+    a running session, or when the files are not readable parquet, the
+    version records no schema and its readers infer it as they always
+    did."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    if not files:
+        return None
+    try:
+        return SparkSession.active().read.parquet(*sorted(files)).schema.json()
+    except (PySparkException, Py4JJavaError):
+        return None
+
+
+def _with_schema(
+    extra: dict | None, schema: StructType | None, prev: dict | None,
+    files: list[str],
+) -> dict | None:
+    """``extra`` with the version's ``schema`` key, by the precedence
+    :meth:`TableLog.commit` documents."""
+    if extra and "schema" in extra:
+        return extra
+    if schema is not None:
+        s = schema.json()
+    elif prev is not None:
+        s = prev.get("schema")
+    else:
+        s = _infer_schema(files)
+    return extra if s is None else {**(extra or {}), "schema": s}
 
 
 def _require_dv_artifact(dv_path: str, verb: str) -> None:
@@ -300,9 +343,18 @@ class TableLog:
         extra: dict | None = None,
         max_retries: int = 10,
         build: BuildFn | None = None,
+        *,
+        schema: StructType | None = None,
     ) -> int:
         """Optimistic-concurrency commit loop: read latest, attempt the
         next version, on conflict re-read and retry.
+
+        The new version's ``schema`` key is decided here and nowhere
+        else: an explicit ``schema`` key in the payload wins (restore,
+        branch and publish carry an older version's), then the
+        ``schema`` argument (verbs that land data pass the landed
+        DataFrame's), then the parent's, and a first commit with none
+        infers it once from its files.
 
         Two modes:
 
@@ -326,7 +378,7 @@ class TableLog:
             nxt = 0 if latest is None else latest + 1
             prev = self.read_manifest(latest) if latest is not None else None
             self._require_new_files_exist(files, prev, op)
-            self.try_commit(nxt, files, op, extra)
+            self.try_commit(nxt, files, op, _with_schema(extra, schema, prev, files))
             return nxt
         for _ in range(max_retries + 1):
             latest = self.latest_version()
@@ -336,7 +388,9 @@ class TableLog:
             bfiles, bextra = built if isinstance(built, tuple) else (built, extra)
             self._require_new_files_exist(bfiles, prev, op)
             try:
-                self.try_commit(nxt, bfiles, op, bextra)
+                self.try_commit(
+                    nxt, bfiles, op, _with_schema(bextra, schema, prev, bfiles)
+                )
                 return nxt
             except CommitConflict:
                 continue
@@ -424,7 +478,7 @@ class TableLog:
             }
             return files, carry
 
-        return self.commit(op="append", build=rebase)
+        return self.commit(op="append", build=rebase, schema=df.schema)
 
     def optimize(self, spark: SparkSession, target_rows_per_file: int = 50_000) -> int:
         """Committed OPTIMIZE: read the live snapshot, rewrite it into
@@ -503,7 +557,7 @@ class TableLog:
             ]
             return new + survivors, ({"delete_vectors": dvs} if dvs else None)
 
-        return self.commit(op="optimize", build=rebase)
+        return self.commit(op="optimize", build=rebase, schema=df.schema)
 
     def _optimize_sharded(
         self,
@@ -608,7 +662,7 @@ class TableLog:
             return [], carry
 
         try:
-            return self.commit(op="optimize", build=rebase)
+            return self.commit(op="optimize", build=rebase, schema=df.schema)
         except BaseException:
             _unlink_all(pending_attempt)
             raise
@@ -617,7 +671,19 @@ class TableLog:
         """Snapshot read (time travel when ``version`` is given):
         resolve ONE manifest (plus its shard files when the table uses
         the sharded protocol), scan exactly its files."""
-        return spark.read.parquet(*self.resolve_files(version))
+        m = self.read_manifest(version)
+        return self._scan(spark, self.manifest_files(m), m)
+
+    @staticmethod
+    def _scan(spark: SparkSession, files: list[str], m: dict) -> DataFrame:
+        """The one reader of committed data files: scan ``files`` with
+        the schema recorded in manifest ``m``, so Spark launches no
+        footer-inference job. A manifest without one (a log written
+        before schemas were recorded) is read with inference."""
+        reader = spark.read
+        if "schema" in m:
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(*files)
 
     # -- sharded-manifest protocol (Iceberg manifest-list shape) ----------
 
@@ -670,7 +736,7 @@ class TableLog:
                 carry["delete_vectors"] = prev["delete_vectors"]
             return [], carry
 
-        return self.commit(op=op, build=rebase)
+        return self.commit(op=op, build=rebase, schema=df.schema)
 
     def compact_shards(self, max_entries_per_shard: int = 1024) -> int:
         """Iceberg ``rewrite_manifests``: merge the accumulated
@@ -749,9 +815,9 @@ class TableLog:
     def restore(self, version: int) -> int:
         """RESTORE TABLE ... TO VERSION (Delta RESTORE / Iceberg
         rollback): commit the OLD snapshot's exact content — file list
-        plus its sidecar metadata (delete vectors, stats, shard refs)
-        — as the NEXT version. History is never rewritten (the bad
-        versions stay time-travelable for forensics); the restore is
+        plus its sidecar metadata (delete vectors, stats, shard refs,
+        schema) — as the NEXT version. History is never rewritten (the
+        bad versions stay time-travelable for forensics); the restore is
         itself an auditable, CAS-published commit, and it is a data
         change: the change feed replays it as deletes of the rows the
         bad versions added and inserts of any rows they had removed.
@@ -775,7 +841,8 @@ class TableLog:
             carry = {
                 k: old[k]
                 for k in ("delete_vectors", "delete_vectors_scoped",
-                          "file_stats", "manifest_shards", "sharded")
+                          "file_stats", "manifest_shards", "sharded",
+                          "schema")
                 if k in old
             }
             carry["restored_from"] = int(old["version"])
@@ -802,7 +869,7 @@ class TableLog:
         carry = {
             k: m[k]
             for k in ("delete_vectors", "delete_vectors_scoped",
-                      "file_stats", "manifest_shards", "sharded")
+                      "file_stats", "manifest_shards", "sharded", "schema")
             if k in m
         }
         carry["forked_from"] = int(m["version"])
@@ -845,7 +912,7 @@ class TableLog:
         carry: dict = {
             k: m[k]
             for k in ("delete_vectors", "delete_vectors_scoped",
-                      "manifest_shards", "sharded")
+                      "manifest_shards", "sharded", "schema")
             if k in m
         }
         carry["clone_source"] = str(self.base)
@@ -936,7 +1003,8 @@ class TableLog:
             carry = {
                 k: head[k]
                 for k in ("delete_vectors", "delete_vectors_scoped",
-                          "file_stats", "manifest_shards", "sharded")
+                          "file_stats", "manifest_shards", "sharded",
+                          "schema")
                 if k in head
             }
             carry["published_branch"] = name
@@ -983,7 +1051,7 @@ class TableLog:
                 added = sorted(m_files - prev_files)
                 if added:
                     feeds.append(
-                        spark.read.parquet(*added)
+                        self._scan(spark, added, m)
                         .withColumn("_change_type", F.lit("insert"))
                         .withColumn("_commit_version", F.lit(v).cast("int"))
                     )
@@ -995,7 +1063,7 @@ class TableLog:
                     # OPTIMIZE also drops files but is data_change=
                     # false and never reaches this branch.)
                     feeds.append(
-                        spark.read.parquet(*removed)
+                        self._scan(spark, removed, prev)
                         .withColumn("_change_type", F.lit("delete"))
                         .withColumn("_commit_version", F.lit(v).cast("int"))
                     )
@@ -1006,7 +1074,7 @@ class TableLog:
                 for dv in dv_added:
                     keys = spark.read.parquet(dv)
                     deleted = (
-                        spark.read.parquet(*sorted(prev_files))
+                        self._scan(spark, sorted(prev_files), prev)
                         .join(F.broadcast(keys), keys.columns, "left_semi")
                         .withColumn("_change_type", F.lit("delete"))
                         .withColumn("_commit_version", F.lit(v).cast("int"))
@@ -1025,7 +1093,7 @@ class TableLog:
                         c for c in pairs.columns if c != "_dv_file"
                     ]
                     deleted = (
-                        spark.read.parquet(*sorted(prev_files))
+                        self._scan(spark, sorted(prev_files), prev)
                         .withColumn("_dv_file", F.expr(self._NORM_FILE))
                         .join(F.broadcast(pairs), on, "left_semi")
                         .drop("_dv_file")
@@ -1142,7 +1210,7 @@ class TableLog:
                     carry[k] = prev[k]
             return pfiles + files, carry
 
-        return self.commit(op="append", build=rebase)
+        return self.commit(op="append", build=rebase, schema=df.schema)
 
     def update_cow(
         self,
@@ -1282,7 +1350,7 @@ class TableLog:
                 carry["delete_vectors_scoped"] = prev["delete_vectors_scoped"]
             return files, carry
 
-        v = self.commit(op="update-cow", build=rebase)
+        v = self.commit(op="update-cow", build=rebase, schema=out.schema)
         return {
             "version": int(v),
             "files_rewritten": len(touched),
@@ -1307,7 +1375,7 @@ class TableLog:
         as ``_dv_file``. Callers drop the column when done."""
         from pyspark.sql import functions as F
 
-        base = spark.read.parquet(*sorted(files)).withColumn(
+        base = self._scan(spark, sorted(files), m).withColumn(
             "_dv_file", F.expr(self._NORM_FILE)
         )
         scoped = m.get("delete_vectors_scoped", [])
@@ -1331,7 +1399,7 @@ class TableLog:
         MOR-aware readers use this."""
         m = self.read_manifest(version)
         df = self._with_scoped_dvs_applied(
-            spark, self.resolve_files(version), m
+            spark, self.manifest_files(m), m
         ).drop("_dv_file")
         return _apply_delete_vectors(spark, df, m.get("delete_vectors", []))
 
@@ -1465,7 +1533,7 @@ class TableLog:
             return sorted(pfiles | set(new)), carry
 
         try:
-            v = self.commit(op="update-mor", build=rebase)
+            v = self.commit(op="update-mor", build=rebase, schema=out.schema)
         except CommitConflict:
             # the loser's DV artifact is referenced by no manifest —
             # unlink it eagerly so the orphan doesn't wait for the next
@@ -1739,7 +1807,13 @@ class TableLog:
             return sorted(read_files | set(new)), carry
 
         try:
-            v = self.commit(op="merge-mor", build=rebase)
+            # the type guard above makes the source the table's schema
+            # (up to column order), so a MERGE into a table with files
+            # keeps the table's; only a first MERGE names one
+            v = self.commit(
+                op="merge-mor", build=rebase,
+                schema=None if read_files else source.schema,
+            )
         except CommitConflict:
             import shutil
 
@@ -1778,10 +1852,21 @@ class TableLog:
             p for p in m["files"]
             if p not in stats or (stats[p][0] <= hi and stats[p][1] >= lo)
         ]
-        df = spark.read.parquet(*keep).filter(F.col(col).between(lo, hi))
+        df = self._scan(spark, keep, m).filter(F.col(col).between(lo, hi))
         return df, len(m["files"]), len(keep)
 
     # -- log checkpoints (metadata-as-data) --------------------------------
+
+    #: A checkpoint's columns: one row per (path, stat column).
+    #: :meth:`write_checkpoint` derives its pyarrow schema from this and
+    #: both checkpoint readers hand it to Spark, so no checkpoint read
+    #: infers a schema from the footer.
+    _CHECKPOINT_SCHEMA = StructType([
+        StructField("path", StringType(), nullable=False),
+        StructField("stat_col", StringType()),
+        StructField("mn", LongType()),
+        StructField("mx", LongType()),
+    ])
 
     def write_checkpoint(self, spark: SparkSession, version: int | None = None) -> dict:
         """Materialize a snapshot's RESOLVED file inventory as parquet
@@ -1822,6 +1907,7 @@ class TableLog:
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         m = self.read_manifest(version)
         v = int(m["version"])
@@ -1835,12 +1921,6 @@ class TableLog:
                 cols["stat_col"].append(c)
                 cols["mn"].append(None if mn is None else int(mn))
                 cols["mx"].append(None if mx is None else int(mx))
-        schema = pa.schema([
-            pa.field("path", pa.string(), nullable=False),
-            pa.field("stat_col", pa.string()),
-            pa.field("mn", pa.int64()),
-            pa.field("mx", pa.int64()),
-        ])
         # one IMMUTABLE uniquely-named file per checkpoint write, and
         # the pointer references that exact file — two racing
         # checkpointers therefore never rewrite a path a reader may be
@@ -1854,7 +1934,10 @@ class TableLog:
         ckpt_root = self.log_dir / "_checkpoints"
         ckpt_root.mkdir(parents=True, exist_ok=True)
         ckpt_file = ckpt_root / f"{v:020d}-{uuid.uuid4().hex[:12]}.parquet"
-        pq.write_table(pa.table(cols, schema=schema), ckpt_file)
+        pq.write_table(
+            pa.table(cols, schema=to_arrow_schema(self._CHECKPOINT_SCHEMA)),
+            ckpt_file,
+        )
         pointer = {
             "version": v,
             "path": str(ckpt_file),
@@ -1929,10 +2012,8 @@ class TableLog:
             or not set(lc["covered_shards"]) <= set(shards)
         ):
             return self.resolve_files(version), census
-        base = [
-            r["path"]
-            for r in spark.read.parquet(lc["path"]).select("path").distinct().collect()
-        ]
+        ckpt = spark.read.schema(self._CHECKPOINT_SCHEMA).parquet(lc["path"])
+        base = [r["path"] for r in ckpt.select("path").distinct().collect()]
         tail = [s for s in shards if s not in set(lc["covered_shards"])]
         out = list(base)
         for s in tail:
@@ -1964,7 +2045,7 @@ class TableLog:
                 f" version (have {lc and lc['version']}, latest {latest});"
                 " call write_checkpoint() first"
             )
-        ckpt = spark.read.parquet(lc["path"])
+        ckpt = spark.read.schema(self._CHECKPOINT_SCHEMA).parquet(lc["path"])
         prunable = ckpt.filter(
             (F.col("stat_col") == col)
             & ~((F.col("mn") <= F.lit(hi)) & (F.col("mx") >= F.lit(lo)))
@@ -1975,7 +2056,9 @@ class TableLog:
             .join(prunable, "path", "left_anti")
             .collect()
         ]
-        df = spark.read.parquet(*sorted(keep)).filter(F.col(col).between(lo, hi))
+        df = self._scan(spark, sorted(keep), self.read_manifest(latest)).filter(
+            F.col(col).between(lo, hi)
+        )
         return df, int(lc["n_files"]), len(keep)
 
     # -- retention --------------------------------------------------------

@@ -851,20 +851,12 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_v1 = list(log.read_manifest(v1)["files"])
         metadata_only = sorted(files_v1) == sorted(files_v0)
 
-        def mor_read(version: int):
-            mm = log.read_manifest(version)
-            df = spark.read.parquet(*mm["files"])
-            for dv in mm.get("delete_vectors", []):
-                dead = spark.read.parquet(dv)
-                df = df.join(F.broadcast(dead), "event_id", "left_anti")
-            return df
-
-        mor = mor_read(v1).agg(
+        mor = log.snapshot_mor(spark, v1).agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
         ).collect()[0]
 
         # -- v2: OPTIMIZE materializes the deletes, sidecar dropped --
-        live = mor_read(v1)
+        live = log.snapshot_mor(spark, v1)
         n_out = max(1, (int(mor["n"]) + 49_999) // 50_000)
         new_files = log._land(live, n_out, tag="materialized")
         v2 = log.commit(new_files, op="optimize-materialize-deletes")
@@ -1119,12 +1111,10 @@ def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "error").select("event_id").coalesce(
             1
         ).write.mode("overwrite").parquet(dv_dir)
-        log.commit(files_v1, op="delete-mor", extra={"delete_vectors": [dv_dir]})
-        dead = spark.read.parquet(dv_dir)
-        mor = (
-            spark.read.parquet(*files_v1)
-            .join(F.broadcast(dead), "event_id", "left_anti")
+        v2 = log.commit(
+            files_v1, op="delete-mor", extra={"delete_vectors": [dv_dir]}
         )
+        mor = log.snapshot_mor(spark, v2)
         mor_stats = mor.agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
         ).collect()[0]
@@ -1370,12 +1360,7 @@ def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # source truth = live merge-on-read state at v_latest
-        m = log.read_manifest(v_latest)
-        src = spark.read.parquet(*m["files"])
-        for dv in m.get("delete_vectors", []):
-            src = src.join(
-                F.broadcast(spark.read.parquet(dv)), "event_id", "left_anti"
-            )
+        src = log.snapshot_mor(spark, v_latest)
 
         r = applied.agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
@@ -1936,13 +1921,7 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         n_v0 = fmt(version=0).count()
         # reference read: the log's own snapshot + DV anti-join
-        m = log.read_manifest()
-        snap = spark.read.parquet(*m["files"])
-        for d in m.get("delete_vectors", []):
-            snap = snap.join(
-                F.broadcast(spark.read.parquet(d)), "event_id", "left_anti"
-            )
-        ref = snap.agg(
+        ref = log.snapshot_mor(spark).agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
         ).collect()[0]
         return tables.local_row(
@@ -2610,7 +2589,9 @@ def lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ev.filter(F.col("event_id") % 8 == i), n_files=2, tag=f"l{i}"
             )
         files, census = log.resolve_files_via_checkpoint(spark)
-        chk = spark.read.parquet(*files).agg(
+        # the checkpoint-resolved list is what is under test, so it is
+        # scanned as is, with the schema the log recorded
+        chk = log._scan(spark, files, log.read_manifest()).agg(
             F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
         ).collect()[0]
         ref = log.snapshot(spark).agg(
@@ -2618,7 +2599,7 @@ def lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         log.compact_shards()  # rewrites the shard list -> checkpoint stale
         files2, census2 = log.resolve_files_via_checkpoint(spark)
-        n2 = spark.read.parquet(*files2).count()
+        n2 = log._scan(spark, files2, log.read_manifest()).count()
         return tables.local_row(
             spark,
             ("shards_total", int(census["shards_total"]), "int"),
@@ -2847,7 +2828,7 @@ def lake_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         # the old bytes are untouched: raw scan of v0's files still
         # sums to the PRE-update checksum
-        raw = spark.read.parquet(*m0["files"]).agg(
+        raw = log.snapshot(spark, m0["version"]).agg(
             F.sum("vc").alias("s")
         ).collect()[0]
         if res["n_matched"]:

@@ -801,15 +801,7 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cdf_drain(spark, str(a.base), ckpt, apply_batch)  # round 2: resumes, applies delta
 
         def mor_live(log: TableLog):
-            m = log.read_manifest()
-            df = spark.read.parquet(*m["files"])
-            for dv in m.get("delete_vectors", []):
-                df = df.join(
-                    F.broadcast(spark.read.parquet(dv)),
-                    "event_id",
-                    "left_anti",
-                )
-            return df.agg(
+            return log.snapshot_mor(spark).agg(
                 F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
             ).collect()[0]
 
@@ -961,13 +953,7 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.append(ev.filter(F.col("user_id") % 3 == 2), n_files=4, tag="m2")
         _cdf_drain(spark, str(a.base), ckpt, apply_batch)
 
-        m = a.read_manifest()
-        src = spark.read.parquet(*m["files"])
-        for dv in m.get("delete_vectors", []):
-            src = src.join(
-                F.broadcast(spark.read.parquet(dv)), "event_id", "left_anti"
-            )
-        direct = src.groupBy("event_type").agg(
+        direct = a.snapshot_mor(spark).groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_d"), F.sum("vc").alias("vc_d")
         )
         out = (

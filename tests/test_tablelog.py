@@ -2316,6 +2316,8 @@ def test_object_store_concurrent_writer_soak(base, spark):
     assert store.n_conflicts > 0, (
         "no conditional PUT was ever refused — the soak never raced"
     )
+    # the first commit inferred the schema, every later one inherited it
+    assert all("schema" in logs[0].read_manifest(v) for v in range(total))
     assert logs[0].snapshot(spark).count() == 5 * total
 
 
@@ -2363,6 +2365,158 @@ def test_object_store_full_verb_lifecycle(base, spark):
     assert not list(Path(base).glob("_log/*.json")), (
         "a manifest leaked onto the filesystem past the store"
     )
+
+
+def _inferred_mor(spark, log, v):
+    """Reference merge-on-read of version ``v`` with the schema
+    inferred from the footers: scoped (file, key) pairs, then global
+    key lists, both anti-joined."""
+    m = log.read_manifest(v)
+    df = spark.read.parquet(*log.manifest_files(m)).withColumn(
+        "_dv_file", F.expr(TableLog._NORM_FILE)
+    )
+    for d in m.get("delete_vectors_scoped", []):
+        pairs = spark.read.parquet(d)
+        df = df.join(pairs, pairs.columns, "left_anti")
+    df = df.drop("_dv_file")
+    for d in m.get("delete_vectors", []):
+        keys = spark.read.parquet(d)
+        df = df.join(keys, keys.columns, "left_anti")
+    return df
+
+
+def _assert_recorded_read_equals_inferred(spark, log, v):
+    """``snapshot`` (and ``snapshot_mor`` when the version carries
+    delete vectors) read with the recorded schema give the same schema
+    and rows as an inference read of the version's files."""
+    m = log.read_manifest(v)
+    assert "schema" in m, f"v{v} ({m['op']}) recorded no schema"
+    inferred = spark.read.parquet(*log.resolve_files(v))
+    snap = log.snapshot(spark, v)
+    assert snap.schema == inferred.schema, m["op"]
+    assert sorted(snap.collect()) == sorted(inferred.collect()), m["op"]
+    if m.get("delete_vectors") or m.get("delete_vectors_scoped"):
+        mor = log.snapshot_mor(spark, v)
+        assert mor.schema == inferred.schema, m["op"]
+        want = sorted(_inferred_mor(spark, log, v).collect())
+        assert sorted(mor.collect()) == want, m["op"]
+
+
+def _kvs(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 4).alias("v"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+    )
+
+
+def test_recorded_schema_full_list_verbs(base, spark):
+    """Every full-list verb that lands data records a schema, and the
+    version's reads with it equal the inference reads."""
+    log = TableLog(base)
+    versions = [
+        log.append(_kvs(spark, 0, 20), n_files=2, tag="a"),
+        log.append_range_bucketed(_kvs(spark, 20, 40), "k", 10, tag="r"),
+        log.update_cow(spark, "v = 1", {"v": "v + 100"})["version"],
+        log.update_mor(spark, "v = 2", {"v": "v + 200"}, key_cols=["k"])[
+            "version"
+        ],
+        log.merge_mor(spark, _kvs(spark, 35, 45), ["k"])["version"],
+    ]
+    dv = str(Path(base) / "dv")
+    spark.range(5).select(F.col("id").alias("k")).write.parquet(dv)
+    versions.append(
+        log.commit(
+            log.read_manifest()["files"],
+            op="delete-mor",
+            extra={"delete_vectors": [dv]},
+        )
+    )
+    versions.append(log.optimize(spark, target_rows_per_file=1_000))
+    assert versions == list(range(len(versions)))
+    for v in versions:
+        _assert_recorded_read_equals_inferred(spark, log, v)
+    feed = log.changes_between(spark, 0, versions[-1])
+    assert feed.count() > 0
+
+
+def test_recorded_schema_sharded_verbs(base, spark):
+    """The sharded protocol records it too: sharded appends, sharded
+    OPTIMIZE and a shard rewrite (which inherits)."""
+    log = TableLog(base)
+    vs = [
+        log.append_manifest_sharded(_kvs(spark, 0, 15), n_files=2, tag="a"),
+        log.append_manifest_sharded(_kvs(spark, 15, 30), n_files=2, tag="b"),
+        log.compact_shards(),
+        log.optimize(spark, target_rows_per_file=1_000),
+    ]
+    for v in vs:
+        _assert_recorded_read_equals_inferred(spark, log, v)
+    assert log.read_manifest(vs[2])["schema"] == log.read_manifest(vs[1])["schema"]
+
+
+def test_restore_branch_clone_publish_carry_source_schema(base, spark, tmp_path):
+    """restore, create_branch and clone_to record the SOURCE version's
+    schema, and fast_forward the branch head's, not the schema of
+    main's latest version they would otherwise inherit."""
+    log = TableLog(base)
+    narrow = log.append(_kvs(spark, 0, 10).drop("s"), n_files=1, tag="a")
+    br = log.create_branch("b", version=narrow)
+    clone = log.clone_to(tmp_path / "clone", version=narrow)
+    wide = log.append(_kvs(spark, 10, 20), n_files=1, tag="b")
+    assert log.read_manifest(wide)["schema"] != log.read_manifest(narrow)["schema"]
+    restored = log.restore(narrow)
+    want = log.read_manifest(narrow)["schema"]
+    for t, v in ((log, restored), (br, br.latest_version()), (clone, 0)):
+        assert t.read_manifest(v)["schema"] == want
+        _assert_recorded_read_equals_inferred(spark, t, v)
+    # publish: a branch forked at the restored (narrow) head lands wide
+    # rows; main must take the branch head's schema on fast-forward
+    pub = log.create_branch("p")
+    pub.append(_kvs(spark, 20, 30), n_files=1, tag="w")
+    v = log.fast_forward(pub, "p")
+    assert log.read_manifest(v)["schema"] == pub.read_manifest()["schema"]
+    assert log.snapshot(spark, v).columns == ["k", "v", "s"]
+
+
+def test_static_commit_inherits_or_infers_schema(base, spark):
+    """A static-list commit takes its parent's schema; the first one
+    onto an empty log infers it once from its files."""
+    src = TableLog(base + "/src")
+    src.append(_kvs(spark, 0, 20), n_files=2, tag="a")
+    files = src.resolve_files()
+    log = TableLog(base + "/t")
+    v0 = log.commit(files, op="append")
+    inferred = spark.read.parquet(*files).schema
+    assert log.read_manifest(v0)["schema"] == inferred.json()
+    v1 = log.commit(files[:1], op="overwrite")
+    assert log.read_manifest(v1)["schema"] == inferred.json()
+    _assert_recorded_read_equals_inferred(spark, log, v1)
+
+
+def test_snapshot_of_data_only_version_launches_no_job(base, spark):
+    """Deterministic guard for the recorded schema: building the
+    snapshot / snapshot_mor DataFrame of a version without delete
+    vectors runs no Spark job (a footer-inference read runs one)."""
+    log = TableLog(base)
+    log.append(_kvs(spark, 0, 20), n_files=4, tag="a")
+    log.update_cow(spark, "v = 1", {"v": "v + 100"})
+    sc = spark.sparkContext
+    group = "tablelog-schema-guard"
+    before = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        n0 = len(sc.statusTracker().getJobIdsForGroup(group))
+        for v in log.versions():
+            log.snapshot(spark, v)
+            log.snapshot_mor(spark, v)
+        n1 = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.read.parquet(*log.resolve_files())  # control: inference runs a job
+        n2 = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
+    assert n1 - n0 == 0
+    assert n2 - n1 >= 1
 
 
 def test_land_stage_links_fixture_slices(base, spark):
