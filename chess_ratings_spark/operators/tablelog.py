@@ -44,7 +44,21 @@ two mechanisms that give snapshot isolation):
   commit inherits its parent's, and a first commit that names none
   infers it once from its files. Reads of committed data files pass it
   to Spark, so no snapshot read launches a parquet footer-inference
-  job. Delete-vector sidecars still infer theirs.
+  job.
+- **Delete vectors**: a DV is a dir of key parquet (global: the deleted
+  keys, masking every file; scoped: ``(_dv_file, keys)`` pairs under
+  ``_dvs/``) plus ``_schema.json``, the keys' ``StructType.json()``.
+  One writer, :func:`_write_dv`, lands the keys through
+  :func:`staging.land` (a key list derived from fixtures alone is
+  written once per session and hardlinked after that) and records the
+  schema; one reader, :func:`_read_dv`, passes it to Spark, so no MOR
+  read launches an inference job. A DV dir without ``_schema.json``,
+  written before it was recorded, is read with inference. :meth:`commit`
+  checks that every DV a version adds still exists before publishing.
+- **Observed UPDATE census**: :meth:`update_cow` counts its matched rows
+  with a ``DataFrame.observe`` metric on the rewrite it lands, not with
+  a separate count job; only a landing served from the stage (no write
+  ran, so the metric never fired) falls back to counting.
 
 At 100 TB none of this touches the driver with data: manifests carry
 file names and stats (bytes here; per-column min/max in a production
@@ -63,7 +77,7 @@ import math
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from chess_ratings_spark import staging
@@ -177,9 +191,47 @@ def _apply_delete_vectors(spark: SparkSession, df: DataFrame, dvs) -> DataFrame:
     from pyspark.sql import functions as F
 
     for dv in dvs:
-        keys = spark.read.parquet(dv)
+        keys = _read_dv(spark, dv)
         df = df.join(F.broadcast(keys), keys.columns, "left_anti")
     return df
+
+
+#: The key schema's file inside a delete-vector dir. Spark and pyarrow
+#: dataset readers skip ``_``-prefixed files, so it is never read as data.
+_DV_SCHEMA = "_schema.json"
+
+
+def _write_dv(keys: DataFrame, dest: str) -> str:
+    """The one delete-vector writer: land ``keys`` as one parquet file
+    in the new dir ``dest`` and record their schema beside it as
+    ``_schema.json``, so :func:`_read_dv` launches no footer-inference
+    job. The file goes through :func:`staging.land`, so a key list
+    derived from fixtures alone is written once per session and
+    hardlinked after that, like a data-file landing. ``coalesce(1)``,
+    not a repartition: a key list is small, and a shuffle would add a
+    stage to every fresh write. A DV dir is immutable once written; an
+    existing non-empty ``dest`` is refused. Returns ``dest``."""
+    d = Path(dest)
+    if d.exists() and any(d.iterdir()):
+        raise FileExistsError(f"delete vector {dest} already exists")
+    staging.land(keys.coalesce(1), d)
+    (d / _DV_SCHEMA).write_text(keys.schema.json())
+    return dest
+
+
+def _read_dv(spark: SparkSession, *paths: str) -> DataFrame:
+    """The one Spark reader of delete vectors: read ``paths`` with the
+    key schema :func:`_write_dv` recorded. Dirs with no recorded schema
+    (written before schemas were recorded) or with differing ones are
+    read with inference, as before."""
+    schemas = set()
+    for p in paths:
+        f = Path(p) / _DV_SCHEMA
+        schemas.add(f.read_text() if f.exists() else None)
+    reader = spark.read
+    if len(schemas) == 1 and None not in schemas:
+        reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+    return reader.parquet(*paths)
 
 
 def _infer_schema(files: list[str]) -> str | None:
@@ -215,26 +267,6 @@ def _with_schema(
     else:
         s = _infer_schema(files)
     return extra if s is None else {**(extra or {}), "schema": s}
-
-
-def _require_dv_artifact(dv_path: str, verb: str) -> None:
-    """Pre-publish guard (round-11 ADVICE): a scoped-DV artifact is
-    written BEFORE the commit that references it, so a concurrent
-    vacuum running with no grace window could sweep it as unreferenced
-    — and the writer would then publish a manifest pointing at a
-    missing artifact, breaking every MOR read of a commit that
-    "succeeded". Re-checked on every commit attempt, immediately before
-    the CAS publish; vacuum's mtime grace horizon on ``_dvs/`` closes
-    the remaining check-to-publish window for any grace period longer
-    than a commit attempt."""
-    if not Path(dv_path).exists():
-        raise RuntimeError(
-            f"{verb}'s scoped delete-vector artifact {dv_path} vanished"
-            " before publish (a concurrent vacuum with dv_grace_seconds=0"
-            " can sweep not-yet-referenced artifacts) — aborting the"
-            " commit instead of publishing a manifest that references a"
-            " missing artifact; re-run the verb"
-        )
 
 
 class CommitConflict(Exception):
@@ -378,6 +410,7 @@ class TableLog:
             nxt = 0 if latest is None else latest + 1
             prev = self.read_manifest(latest) if latest is not None else None
             self._require_new_files_exist(files, prev, op)
+            self._require_new_dvs_exist(extra, prev, op)
             self.try_commit(nxt, files, op, _with_schema(extra, schema, prev, files))
             return nxt
         for _ in range(max_retries + 1):
@@ -387,6 +420,7 @@ class TableLog:
             built = build(prev)
             bfiles, bextra = built if isinstance(built, tuple) else (built, extra)
             self._require_new_files_exist(bfiles, prev, op)
+            self._require_new_dvs_exist(bextra, prev, op)
             try:
                 self.try_commit(
                     nxt, bfiles, op, _with_schema(bextra, schema, prev, bfiles)
@@ -400,7 +434,7 @@ class TableLog:
         self, files: list[str], prev: dict | None, op: str
     ) -> None:
         """Pre-publish guard, the data-file twin of
-        :func:`_require_dv_artifact` (round-12 self-review #1): a verb
+        :meth:`_require_new_dvs_exist` (round-12 self-review #1): a verb
         lands its data files BEFORE the manifest that references them,
         so a concurrent vacuum with no grace window can sweep them as
         unreferenced — and the commit would then publish a manifest
@@ -425,9 +459,43 @@ class TableLog:
                 " files; re-run the verb"
             )
 
+    @staticmethod
+    def _require_new_dvs_exist(
+        extra: dict | None, prev: dict | None, op: str
+    ) -> None:
+        """Pre-publish guard for delete vectors (round-11 ADVICE), run
+        by :meth:`commit` on every attempt, right before the CAS
+        publish: each DV dir the version ADDS under ``delete_vectors``
+        or ``delete_vectors_scoped`` must still exist. DVs are written
+        before the manifest that references them, so a concurrent
+        vacuum with no grace window can sweep a scoped one, and a
+        caller-owned global one can be removed by its owner; publishing
+        then would break every MOR read of a version that "succeeded".
+        DVs carried from the parent are vacuum-live and not re-checked.
+        Vacuum's mtime grace horizon on ``_dvs/`` closes the remaining
+        check-to-publish window for any grace longer than one attempt."""
+        for k in ("delete_vectors", "delete_vectors_scoped"):
+            carried = set(prev.get(k, [])) if prev else set()
+            for d in (extra or {}).get(k, []):
+                if d not in carried and not Path(d).exists():
+                    raise RuntimeError(
+                        f"{op}: delete vector {d} vanished before publish"
+                        " (a concurrent vacuum with dv_grace_seconds=0 can"
+                        " sweep not-yet-referenced artifacts) — aborting"
+                        " the commit instead of publishing a manifest that"
+                        " references a missing delete vector; re-run the"
+                        " verb"
+                    )
+
     # -- table verbs ------------------------------------------------------
 
     def _land(self, df: DataFrame, n_files: int, tag: str) -> list[str]:
+        """The landed paths of :meth:`_land_wrote`."""
+        return self._land_wrote(df, n_files, tag)[0]
+
+    def _land_wrote(
+        self, df: DataFrame, n_files: int, tag: str
+    ) -> tuple[list[str], bool]:
         """Write ``df`` as exactly ``n_files`` parquet files into the
         data dir. Destination names carry a per-landing random token on
         top of the caller's tag: data files must be IMMUTABLE once
@@ -440,7 +508,9 @@ class TableLog:
         files, which snapshot isolation already ignores.
 
         Fixture slices are staged once per session and re-landed by
-        hardlink (:func:`staging.land`; guide §1.2)."""
+        hardlink (:func:`staging.land`; guide §1.2). Returns the landed
+        paths and whether a Spark write ran (False: served from the
+        stage)."""
         import uuid
 
         token = uuid.uuid4().hex[:12]
@@ -1072,7 +1142,7 @@ class TableLog:
                     if d not in set(prev.get("delete_vectors", []))
                 ]
                 for dv in dv_added:
-                    keys = spark.read.parquet(dv)
+                    keys = _read_dv(spark, dv)
                     deleted = (
                         self._scan(spark, sorted(prev_files), prev)
                         .join(F.broadcast(keys), keys.columns, "left_semi")
@@ -1088,7 +1158,7 @@ class TableLog:
                     # MOR update: the masked OLD row versions are the
                     # deletes (the appended files already fed as
                     # inserts above) — pair-joined on (file, keys)
-                    pairs = spark.read.parquet(dv)
+                    pairs = _read_dv(spark, dv)
                     on = ["_dv_file"] + [
                         c for c in pairs.columns if c != "_dv_file"
                     ]
@@ -1299,17 +1369,20 @@ class TableLog:
             m.get("delete_vectors", []),
         )
         cond = F.expr(predicate)
-        # two-pass shape, same as Delta's UPDATE: this count action is
-        # column-pruned to the predicate's columns only (cheap columnar
-        # scan for the metric), the rewrite below reads full rows
-        n_matched = src.filter(cond).count()
-        out = src
+        # one pass: the match census is an observed metric of the
+        # rewrite itself, collected inside its write tasks (as Delta
+        # collects write stats); no separate count action
+        census = Observation()
+        out = src.observe(census, F.count_if(cond).alias("n"))
         for col_name, expr in assign.items():
             out = out.withColumn(
                 col_name, F.when(cond, F.expr(expr)).otherwise(F.col(col_name))
             )
         _refuse_type_divergence(src.schema, out.schema, "UPDATE")
-        new = self._land(out, len(touched), tag=tag)
+        new, wrote = self._land_wrote(out, len(touched), tag=tag)
+        # a landing served from the stage ran no action, so the
+        # observation never fired: count instead of waiting on it
+        n_matched = census.get["n"] if wrote else src.filter(cond).count()
 
         def rebase(prev: dict | None) -> tuple[list[str], dict]:
             if prev is None or prev.get("sharded"):
@@ -1380,7 +1453,7 @@ class TableLog:
         )
         scoped = m.get("delete_vectors_scoped", [])
         if scoped:
-            pairs = spark.read.parquet(*scoped)
+            pairs = _read_dv(spark, *scoped)
             on = ["_dv_file"] + [c for c in pairs.columns if c != "_dv_file"]
             base = base.join(F.broadcast(pairs), on, "left_anti")
         return base
@@ -1478,12 +1551,11 @@ class TableLog:
         dv_dir = self.base / "_dvs"
         dv_dir.mkdir(parents=True, exist_ok=True)
         dv_path = str(dv_dir / f"{tag}-{uuid.uuid4().hex[:12]}.parquet")
-        pairs = matched.select("_dv_file", *key_cols)
-        pairs.coalesce(1).write.mode("errorifexists").parquet(dv_path)
+        _write_dv(matched.select("_dv_file", *key_cols), dv_path)
         # uniqueness guard: the pairs must mask exactly the matched
         # rows — a surplus means key_cols don't identify rows in-file
         # and an UNMATCHED row would be silently deleted
-        written = spark.read.parquet(dv_path)
+        written = _read_dv(spark, dv_path)
         on = ["_dv_file", *key_cols]
         n_masked = base.join(F.broadcast(written), on, "left_semi").count()
         if n_masked != n_matched:
@@ -1529,7 +1601,6 @@ class TableLog:
             for k in ("delete_vectors", "file_stats"):
                 if k in prev:
                     carry[k] = prev[k]
-            _require_dv_artifact(dv_path, "UPDATE")
             return sorted(pfiles | set(new)), carry
 
         try:
@@ -1751,9 +1822,7 @@ class TableLog:
                         dv_path = str(
                             dv_dir / f"{tag}-{uuid.uuid4().hex[:12]}.parquet"
                         )
-                        pairs.coalesce(1).write.mode(
-                            "errorifexists"
-                        ).parquet(dv_path)
+                        _write_dv(pairs, dv_path)
                 finally:
                     if doomed is not None:
                         doomed.unpersist()
@@ -1802,8 +1871,6 @@ class TableLog:
             for k in ("delete_vectors", "file_stats"):
                 if k in prev:
                     carry[k] = prev[k]
-            if dv_path is not None:
-                _require_dv_artifact(dv_path, "MERGE")
             return sorted(read_files | set(new)), carry
 
         try:
@@ -2121,7 +2188,7 @@ class TableLog:
         the mtime horizon here, plus the commit path re-checking that
         its new files and DV artifact still exist immediately before
         the CAS publish (``_require_new_files_exist`` /
-        ``_require_dv_artifact``), so even a grace-0 sweep produces a
+        ``_require_new_dvs_exist``), so even a grace-0 sweep produces a
         loud abort, never a corrupt table. ``data_grace_seconds``
         defaults to 0 because the local fixtures assert immediate
         reclamation (a production deployment sets it to hours, like

@@ -486,7 +486,7 @@ def lake_optimize_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_optimize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -506,10 +506,9 @@ def lake_optimize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # MOR delete vector: event_id % 7 == 0, committed carrying the
         # shard refs forward (sharded-protocol delete-mor shape)
-        dv_dir = base + "/dv"
-        ev.filter(F.col("event_id") % 7 == 0).select("event_id").write.mode(
-            "overwrite"
-        ).parquet(dv_dir)
+        dv_dir = _write_dv(
+            ev.filter(F.col("event_id") % 7 == 0).select("event_id"), base + "/dv"
+        )
 
         def add_dv(prev: dict) -> tuple[list, dict]:
             return [], {
@@ -827,7 +826,7 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -841,10 +840,10 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_v0 = list(log.read_manifest(0)["files"])
 
         # -- v1: DELETE WHERE event_type='error' as a sidecar commit --
-        dv_dir = str(Path(base) / "deletes" / "v1")
-        ev.filter(F.col("event_type") == "error").select("event_id").coalesce(
-            1
-        ).write.mode("overwrite").parquet(dv_dir)
+        dv_dir = _write_dv(
+            ev.filter(F.col("event_type") == "error").select("event_id"),
+            str(Path(base) / "deletes" / "v1"),
+        )
         v1 = log.commit(
             files_v0, op="delete-mor", extra={"delete_vectors": [dv_dir]}
         )
@@ -1090,7 +1089,7 @@ def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -1107,10 +1106,10 @@ def lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_v1 = list(log.read_manifest(1)["files"])
 
         # v2: merge-on-read DELETE via deletion-vector sidecar
-        dv_dir = str(Path(base) / "dv")
-        ev.filter(F.col("event_type") == "error").select("event_id").coalesce(
-            1
-        ).write.mode("overwrite").parquet(dv_dir)
+        dv_dir = _write_dv(
+            ev.filter(F.col("event_type") == "error").select("event_id"),
+            str(Path(base) / "dv"),
+        )
         v2 = log.commit(
             files_v1, op="delete-mor", extra={"delete_vectors": [dv_dir]}
         )
@@ -1209,7 +1208,7 @@ def lake_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -1221,15 +1220,11 @@ def lake_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         log.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
         # v2: MOR delete of the error rows present at v1 (sidecar keys)
-        dv_dir = str(Path(base) / "dv" / "v2")
-        (
+        dv_dir = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv_dir)
+            ).select("event_id"),
+            str(Path(base) / "dv" / "v2"),
         )
         log.commit(
             log.read_manifest()["files"],
@@ -1318,7 +1313,7 @@ def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -1329,15 +1324,11 @@ def lake_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         log.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
-        dv_dir = str(Path(base) / "dv" / "v2")
-        (
+        dv_dir = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv_dir)
+            ).select("event_id"),
+            str(Path(base) / "dv" / "v2"),
         )
         log.commit(
             log.read_manifest()["files"],
@@ -1871,7 +1862,7 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
     from chess_ratings_spark.sources.tablelog_batch import TableLogBatchSource
 
     try:
@@ -1887,15 +1878,11 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = TableLog(Path(base) / "t")
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         log.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
-        dv = str(Path(base) / "dv")
-        (
+        dv = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv)
+            ).select("event_id"),
+            str(Path(base) / "dv"),
         )
         log.commit(
             log.read_manifest()["files"],
@@ -2199,7 +2186,7 @@ def lake_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
 
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id",
@@ -2211,10 +2198,10 @@ def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.append(ev.filter(F.col("user_id") % 2 == 0), n_files=4, tag="a")
         log.append(ev.filter(F.col("user_id") % 2 == 1), n_files=4, tag="b")
         # MOR delete: drop user_id%5==0 via a delete-vector sidecar
-        dv = staging.new_dir("crs_hist_dv_") + "/keys"
-        ev.filter(F.col("user_id") % 5 == 0).select("event_id").coalesce(
-            1
-        ).write.parquet(dv)
+        dv = _write_dv(
+            ev.filter(F.col("user_id") % 5 == 0).select("event_id"),
+            staging.new_dir("crs_hist_dv_") + "/keys",
+        )
         log.commit(
             log.read_manifest()["files"],
             op="delete-mor",
@@ -2225,11 +2212,7 @@ def lake_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = []
         for v in log.versions():
             m = log.read_manifest(v)
-            snap = log.snapshot(spark, version=v)
-            for d in m.get("delete_vectors", []):
-                snap = snap.join(
-                    F.broadcast(spark.read.parquet(d)), "event_id", "left_anti"
-                )
+            snap = log.snapshot_mor(spark, version=v)
             op = m["op"].split("-to-")[0] if m["op"].startswith("restore") else m["op"]
             rows.append(
                 (

@@ -585,7 +585,7 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
     try:
@@ -601,15 +601,11 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = TableLog(base)
         log.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         log.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
-        dv = str(Path(base) / "dv" / "v2")
-        (
+        dv = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv)
+            ).select("event_id"),
+            str(Path(base) / "dv" / "v2"),
         )
         log.commit(
             log.read_manifest()["files"],
@@ -720,7 +716,7 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
     try:
@@ -762,8 +758,9 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("_change_type") == "delete"
                     ).select("event_id")
                     dv_counter["n"] += 1
-                    dv = str(Path(root) / "b_dv" / f"d{dv_counter['n']}")
-                    dels.coalesce(1).write.mode("overwrite").parquet(dv)
+                    dv = _write_dv(
+                        dels, str(Path(root) / "b_dv" / f"d{dv_counter['n']}")
+                    )
                     m = b.read_manifest()
                     b.commit(
                         m["files"],
@@ -781,15 +778,11 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
         _cdf_drain(spark, str(a.base), ckpt, apply_batch)
         # A moves on: MOR delete, OPTIMIZE (feed must skip), append
-        dv_a = str(Path(root) / "a_dv")
-        (
+        dv_a = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv_a)
+            ).select("event_id"),
+            str(Path(root) / "a_dv"),
         )
         a.commit(
             a.read_manifest()["files"],
@@ -872,7 +865,7 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
     try:
@@ -934,15 +927,11 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.append(ev.filter(F.col("user_id") % 3 == 0), n_files=4, tag="m0")
         a.append(ev.filter(F.col("user_id") % 3 == 1), n_files=4, tag="m1")
         _cdf_drain(spark, str(a.base), ckpt, apply_batch)
-        dv_a = str(Path(root) / "a_dv")
-        (
+        dv_a = _write_dv(
             ev.filter(
                 (F.col("event_type") == "error") & (F.col("user_id") % 3 != 2)
-            )
-            .select("event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv_a)
+            ).select("event_id"),
+            str(Path(root) / "a_dv"),
         )
         a.commit(
             a.read_manifest()["files"],

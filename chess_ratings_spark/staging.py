@@ -13,7 +13,9 @@ session shares nothing) and ``COUNTS``: ``{memo,dir}.{hit,miss}`` and
 What is keyed. A memo by the caller's tuple. A staged DataFrame by
 :func:`fingerprint`: its schema, its analyzed plan with expression ids
 (``#123``) stripped (a query function rebuilding the same frame mints
-new ones), four content confs, its sorted input files and ``n_files``.
+new ones), four content confs, its sorted input files with each one's
+size and mtime (an input rewritten in place under the same name is a
+new key, never a hit on the old bytes) and ``n_files``.
 
 Why some plans get no key. Plan text pins rows only when every leaf
 reads files: a local relation prints its attributes, not its rows; an
@@ -47,6 +49,7 @@ import tempfile
 from collections import Counter
 from pathlib import Path
 from typing import Any, Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -118,10 +121,19 @@ def per_session(fn: Callable) -> Callable:
     return once
 
 
+def _file_state(uri: str) -> tuple[str, int, int]:
+    """``(uri, size, mtime_ns)`` of a local input file."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        raise OSError(f"cannot stat {uri}")
+    st = os.stat(unquote(u.path))
+    return uri, st.st_size, st.st_mtime_ns
+
+
 def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
     """The store key of ``df`` written as ``n_files`` files, or None."""
     try:
-        files = tuple(sorted(df.inputFiles()))
+        files = tuple(_file_state(f) for f in sorted(df.inputFiles()))
         if not files:
             return None
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -137,17 +149,23 @@ def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
         return None
 
 
-def _stage(df: DataFrame, n_files: int | None) -> tuple[str, bool]:
+def _stage(df: DataFrame, n_files: int | None) -> tuple[str, bool, bool]:
+    """The staged dir of ``df``, whether it is keyed, and whether this
+    call wrote it."""
+    wrote = False
+
     def write() -> str:
+        nonlocal wrote
         path = new_dir("crs_stage_") + "/w"
         (df if n_files is None else df.repartition(n_files)).write.parquet(path)
+        wrote = True
         return path
 
     key = fingerprint(df, n_files)
     if key is None:
         COUNTS["dir.unkeyed"] += 1
-        return write(), False
-    return memo(df.sparkSession, key, write), True
+        return write(), False, True
+    return memo(df.sparkSession, key, write), True, wrote
 
 
 def stage_dir(df: DataFrame, n_files: int | None = None) -> str:
@@ -177,27 +195,31 @@ def _link_all(src: str, dest: Path, name) -> list[str]:
     return out
 
 
-def land(df: DataFrame, dest_dir, n_files: int | None = None, name=None) -> list[str]:
-    """Link ``df``'s staged parquet files into ``dest_dir`` and return
-    the landed paths. ``name(i)`` names the i-th file; by default it
+def land(
+    df: DataFrame, dest_dir, n_files: int | None = None, name=None
+) -> tuple[list[str], bool]:
+    """Link ``df``'s staged parquet files into ``dest_dir``. Returns the
+    landed paths and whether a Spark write ran: False when the files
+    came from the stage, so no action ran on ``df`` (an observation on
+    it never fires). ``name(i)`` names the i-th file; by default it
     keeps its staged name, which is unique per write job. A staged dir
     emptied after the hit check is dropped and written fresh, never
     landed empty; an unkeyed write is removed once linked."""
     dest = Path(dest_dir)
     dest.mkdir(parents=True, exist_ok=True)
-    src, keyed = _stage(df, n_files)
+    src, keyed, wrote = _stage(df, n_files)
     if keyed:
         try:
             out = _link_all(src, dest, name)
             if out:
-                return out
+                return out, wrote
         except OSError:
             pass
         # emptied or vanished after the hit check: drop it, write fresh
         shutil.rmtree(Path(src).parent, ignore_errors=True)
-        src, keyed = _stage(df, n_files)
+        src, keyed, wrote = _stage(df, n_files)
     try:
-        return _link_all(src, dest, name)
+        return _link_all(src, dest, name), wrote
     finally:
         if not keyed:
             shutil.rmtree(Path(src).parent, ignore_errors=True)

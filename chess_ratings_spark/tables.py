@@ -178,7 +178,7 @@ def local_table(
     spark: SparkSession, rows: list[tuple], cols: list[tuple[str, str]]
 ) -> DataFrame:
     """Small literal table as a pure JVM plan: explode of struct
-    literals over ``spark.range(1)``. ``createDataFrame(python_list)``
+    literals over :func:`_one_row`. ``createDataFrame(python_list)``
     is RDD-backed and pays a Python-worker round trip on EVERY action
     (measured ~4 s/action at local[32] — it made fn_format_string, a
     6-row parameter grid, the 4th-slowest query in the whole bench);
@@ -198,15 +198,23 @@ def local_table(
         for row in rows
     ]
     return (
-        spark.range(1)
+        _one_row(spark)
         .select(F.explode(F.array(*structs)).alias("r"))
         .select("r.*")
     )
 
 
+def _one_row(spark: SparkSession) -> DataFrame:
+    """``range(0, 1)`` in ONE partition. ``spark.range(1)`` takes the
+    default parallelism, so a sort or aggregate over a literal table
+    planned an exchange: a range-sampling job plus a shuffle to order
+    three rows. A single-partition plan needs none."""
+    return spark.range(0, 1, 1, 1)
+
+
 def local_row(spark: SparkSession, *cols: tuple[str, object, str]) -> DataFrame:
-    """One-row DataFrame of literals built on spark.range(1) — a pure
-    JVM LocalTableScan. `spark.createDataFrame([python_tuple])` is
+    """One-row DataFrame of literals over :func:`_one_row` — a pure
+    JVM plan. `spark.createDataFrame([python_tuple])` is
     RDD-backed and pays a Python-worker round trip on EVERY action
     (measured ~4 s/action at local[32] for a 72-row frame); literal
     expressions cost milliseconds. Use for self-certifying result rows.
@@ -214,6 +222,6 @@ def local_row(spark: SparkSession, *cols: tuple[str, object, str]) -> DataFrame:
     Each col is (name, value, spark_type); None values yield typed
     NULLs.
     """
-    return spark.range(1).select(
+    return _one_row(spark).select(
         *[F.lit(v).cast(t).alias(n) for (n, v, t) in cols]
     )

@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 import zipfile
+from pathlib import Path
 
 import pytest
 
@@ -379,3 +380,72 @@ def test_pyds_batch_reader_composite_key_scoped_dvs(spark, tmp_path):
     # buckets carry the artifact; the other 2 buckets AND the update's
     # own landed file carry none (5 partitions total)
     assert n_with == 2 and len(parts) == 5
+
+
+def test_pyds_readers_read_dv_dirs_with_recorded_schema(spark, tmp_path):
+    """DV dirs hold ``_schema.json`` beside the key parquet; the batch
+    and the CDF stream DataSources read them with pyarrow, which must
+    skip that file: the batch read equals snapshot_mor, and the stream
+    emits exactly the masked rows as deletes."""
+    from pyspark.sql import functions as F
+
+    from chess_ratings_spark.operators.tablelog import TableLog, _write_dv
+    from chess_ratings_spark.sources.tablelog_batch import TableLogBatchSource
+    from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
+
+    for src in (TableLogBatchSource, TableLogCdfSource):
+        try:
+            spark.dataSource.register(src)
+        except Exception:
+            pass
+    base = str(tmp_path / "t")
+    log = TableLog(base)
+    log.append_range_bucketed(
+        spark.range(40).select(
+            F.col("id").alias("k"), F.lit(0).cast("bigint").alias("v")
+        ),
+        "k", width=10, tag="r",
+    )
+    dv = _write_dv(
+        spark.range(0, 40, 9).select(F.col("id").alias("k")), str(tmp_path / "dv")
+    )
+    log.commit(
+        log.read_manifest()["files"], op="delete-mor",
+        extra={"delete_vectors": [dv]},
+    )
+    log.update_mor(spark, "k BETWEEN 11 AND 14", {"v": "v + 7"}, ["k"])
+    scoped = log.read_manifest()["delete_vectors_scoped"]
+    for d in (dv, *scoped):
+        assert (Path(d) / "_schema.json").is_file()
+
+    got = (
+        spark.read.format("crs_tablelog")
+        .option("path", base)
+        .option("schema", "k bigint, v bigint")
+        .option("key_col", "k")
+        .load()
+    )
+    assert sorted(got.collect()) == sorted(log.snapshot_mor(spark).collect())
+
+    out = str(tmp_path / "feed")
+    (
+        spark.readStream.format("crs_tablelog_cdf")
+        .option("path", base)
+        .option("schema", "k bigint, v bigint")
+        .option("key_col", "k")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    deletes = sorted(
+        (r._commit_version, r.k)
+        for r in spark.read.parquet(out).collect()
+        if r._change_type == "delete"
+    )
+    assert deletes == [(1, k) for k in range(0, 40, 9)] + [
+        (2, k) for k in range(11, 15)
+    ]

@@ -45,3 +45,22 @@ def test_purge_removes_every_kind_of_staged_dir(spark, tmp_path, monkeypatch):
     again = stream_ops._slice_stage(fx.filter("m = 0"))
     assert again != dirs["stream slice"]
     assert spark.read.parquet(again).count() == 10
+
+
+def test_input_rewritten_in_place_is_never_served_stale(spark, tmp_path):
+    """The stage key holds each input file's size and mtime, not only
+    its path: a parquet input rewritten in place (same path, other
+    rows) between two landings in one session lands the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "input.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(10), pa.int64())}), src)
+    log = TableLog(str(tmp_path / "t"))
+    log.append(spark.read.parquet(src), n_files=1, tag="a")
+
+    pq.write_table(pa.table({"k": pa.array(range(100, 125), pa.int64())}), src)
+    log.append(spark.read.parquet(src), n_files=1, tag="b")
+    new = sorted(set(log.read_manifest(1)["files"]) - set(log.read_manifest(0)["files"]))
+    got = sorted(r.k for r in spark.read.parquet(*new).collect())
+    assert got == list(range(100, 125))

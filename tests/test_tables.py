@@ -125,3 +125,38 @@ def test_load_events_real_fixture(spark):
         F.expr(tables._MICROS_FROM_NTZ.format(ts="ts") + " * 1000 != ts_ns")
     ).count()
     assert bad == 0
+
+
+def _jobs_and_plan(spark, df):
+    """Spark jobs one collect of ``df`` runs, and its executed plan."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"literal-{uuid.uuid4().hex}"
+    before = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group)), plan
+
+
+def test_literal_tables_are_single_partition(spark):
+    """local_table and local_row start from a one-partition range, so
+    ordering a literal table needs no range-sampling job and no
+    shuffle: each executes as one job with no Exchange in its plan."""
+    t = tables.local_table(
+        spark, [(3, "c"), (1, "a"), (2, "b")], [("k", "int"), ("s", "string")]
+    ).orderBy("k")
+    rows, n_jobs, plan = _jobs_and_plan(spark, t)
+    assert [(r.k, r.s) for r in rows] == [(1, "a"), (2, "b"), (3, "c")]
+    assert n_jobs == 1
+    assert "Exchange" not in plan, plan
+
+    r = tables.local_row(spark, ("n", 7, "bigint"), ("ok", True, "boolean"))
+    rows, n_jobs, plan = _jobs_and_plan(spark, r)
+    assert [tuple(x) for x in rows] == [(7, True)]
+    assert n_jobs == 1
+    assert "Exchange" not in plan, plan
