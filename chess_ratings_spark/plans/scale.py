@@ -293,7 +293,7 @@ def join_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE wraps the executed plan in query stages whose collectLeaves()
     # hides the scans' metrics; DPP is independent of AQE, so turn AQE
     # off for this one demo (conf restored; serial-driver assumption as
-    # documented for streaming's _state_partitions)
+    # documented for stream_ops._state_partitions' scope)
     try:
         with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
             ev.write.mode("overwrite").partitionBy("event_date").parquet(path)

@@ -629,7 +629,7 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum("vc").cast("bigint").alias("vc_sum"),
         )
-        q = stream_ops._run(spark, agg, "complete")
+        q = stream_ops._run(spark, ev, agg, "complete")
         rows = (
             spark.table(q.name)
             .orderBy("_commit_version", "_change_type")
@@ -653,9 +653,10 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cdf_drain(spark: SparkSession, table_dir: str, ckpt: str, apply_batch) -> None:
     """One availableNow round of the TableLog change feed at
     ``table_dir`` into the ``foreachBatch`` function ``apply_batch``,
-    resuming ``ckpt``. It runs outside ``stream_ops._run``'s
-    state-partition scope, so the batch plans ``apply_batch`` runs keep
-    the session's shuffle partitions."""
+    resuming ``ckpt``. It runs outside ``stream_ops._run``, so it
+    takes no state-partition scope: the feed is stateless, and the
+    batch plans ``apply_batch`` runs keep the session's shuffle
+    partitions."""
     (
         spark.readStream.format("crs_tablelog_cdf")
         .option("path", table_dir)

@@ -7,14 +7,18 @@ processed with watermarks/state, and written to a memory sink or a
 ``foreachBatch`` function. That is the standard local replay harness;
 on a cluster the same code points at Kafka/files and a real sink.
 
-Every query starts and waits in :func:`_run`, the one run path: it
-owns the state-partition scope, the query name, the sink, the trigger
-and the wait. A plain run drains with ``availableNow`` and
-``awaitTermination``. Late-data, dedup and sink harnesses are
-multi-batch phenomena, so they pass ``between`` steps (land another
-file, run an OPTIMIZE): the query then runs on a ``0 seconds`` trigger
-and each step runs between ``processAllAvailable`` rounds — watermark
-advances on batch 1, batch 2's late rows get dropped.
+Every query here starts and waits in :func:`_run`, the one run path,
+except the Python stream-sink census (:func:`pyds_stream_sink_census`),
+which writes through its own ``crs_jsonl_sink`` format and keeps no
+state. :func:`_run` owns the state-partition scope (sized from the
+batch frame the stream replays), the no-data-batch choice, the query
+name, the sink, the trigger and the wait. A plain run drains with
+``availableNow`` and ``awaitTermination``. Late-data, dedup and sink
+harnesses are multi-batch phenomena, so they pass ``between`` steps
+(land another file, run an OPTIMIZE): the query then runs on a
+``0 seconds`` trigger and each step runs between
+``processAllAvailable`` rounds — watermark advances on batch 1,
+batch 2's late rows get dropped.
 """
 
 from __future__ import annotations
@@ -73,48 +77,63 @@ def _stage_mutable(ev: DataFrame, prefix: str) -> str:
     return path
 
 
-STATE_PARTITIONS = 4
+def _state_partitions(spark: SparkSession, ev: DataFrame, settle: bool = True):
+    """Scope the confs a stream reads at query start.
 
+    ``spark.sql.shuffle.partitions`` becomes
+    ``ceil(sizeInBytes(ev) / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
+    clamped to ``[1, the session's spark.sql.shuffle.partitions]``.
+    ``ev`` is the batch frame the stream replays and ``sizeInBytes`` is
+    its optimized-plan statistic (file sizes for a parquet scan), which
+    launches no Spark job. This is AQE's own batch sizing rule applied
+    to state: a stateful micro-batch loads and commits one state store
+    per shuffle partition, so the count is a per-batch fixed cost, and
+    a partition only places state — results do not depend on it. The
+    fixtures (29 KB to 2.2 MB of events) get 1 partition; a 100 TB
+    input gets the cluster's own shuffle width. The count is baked into
+    each query's fresh checkpoint, so a resumed query keeps it.
 
-def _state_partitions(spark: SparkSession):
-    """A stateful streaming query instantiates one state store per
-    shuffle partition per micro-batch, so the partition count read at
-    query START is a per-batch fixed cost — size it to the stateful key
-    cardinality / executor count, not to the batch-side default
-    (measured ~2× on the local replay harness: 32 → 8 partitions;
-    round-11 probe, scripts/stream_overhead_probe.py: 8 → 4 shaves a
-    further ~0.2 s/query of pure state-store instantiation on the
-    windowed-agg shape — addBatch 759→542 ms warm — with results
-    byte-identical since partition count only places state). On a real
-    cluster this is sized UP to executor count; 4 is the local-harness
-    floor that still exceeds the fixture's hot key families. The
-    conf is restored afterwards; the count is baked into each query's
-    (fresh) checkpoint, so batch plans are unaffected.
+    ``settle=False`` also turns off the trailing no-data micro-batch
+    (``spark.sql.streaming.noDataMicroBatches.enabled``), which runs
+    only to advance the watermark. A caller declares it only where the
+    output cannot depend on that advance; it is never inferred.
 
     Serial-execution assumption: the driver runs queries one at a time,
-    so no batch query plans concurrently while the conf is lowered. If
+    so no batch query plans concurrently while the scope is in force. If
     concurrent use ever appears, scope this via a cloned session
     (spark.newSession()) instead of the shared conf."""
-    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)})
+    size = int(ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    confs = {"spark.sql.shuffle.partitions": str(max(1, min(cap, -(-size // advisory))))}
+    if not settle:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    return conf_scope(spark, confs)
 
 
 def _run(
     spark: SparkSession,
+    ev: DataFrame,
     df: DataFrame,
     mode: str = "append",
     *,
+    settle: bool = True,
     sink: Callable[[DataFrame, int], None] | None = None,
     checkpoint: str | None = None,
     between: Sequence[Callable[[StreamingQuery], None]] = (),
 ) -> StreamingQuery:
-    """Run the stream ``df`` to completion; the one place a stream here
-    starts and waits. Output goes to a fresh memory sink named
-    ``q.name`` (the caller snapshots or drops it) or, given ``sink``,
-    to that ``foreachBatch`` function. With no ``between`` steps the
-    query drains with ``availableNow``; otherwise it runs on a
-    ``0 seconds`` trigger, each step runs between
-    ``processAllAvailable`` rounds, and the query then stops."""
-    with _state_partitions(spark):
+    """Run the stream ``df``, a replay of the batch frame ``ev``, to
+    completion; the one place a stream here starts and waits. Its
+    state partitions are sized from ``ev``, and ``settle=False`` skips
+    the trailing no-data batch (see :func:`_state_partitions`). Output
+    goes to a fresh memory sink named ``q.name`` (the caller snapshots
+    or drops it) or, given ``sink``, to that ``foreachBatch`` function.
+    With no ``between`` steps the query drains with ``availableNow``;
+    otherwise it runs on a ``0 seconds`` trigger, each step runs
+    between ``processAllAvailable`` rounds, and the query then stops."""
+    with _state_partitions(spark, ev, settle):
         w = df.writeStream.outputMode(mode).queryName("snk_" + uuid.uuid4().hex[:12])
         w = w.foreachBatch(sink) if sink is not None else w.format("memory")
         if checkpoint is not None:
@@ -152,11 +171,17 @@ def _snapshot_sink(spark: SparkSession, name: str) -> DataFrame:
 
 
 def _drain(
-    spark: SparkSession, stream_df: DataFrame, output_mode: str, checkpoint: str | None = None
+    spark: SparkSession,
+    ev: DataFrame,
+    stream_df: DataFrame,
+    output_mode: str,
+    checkpoint: str | None = None,
+    *,
+    settle: bool = True,
 ) -> DataFrame:
-    """Run the stream to completion (availableNow) and snapshot its
+    """:func:`_run` to completion (availableNow), then snapshot the
     memory sink."""
-    q = _run(spark, stream_df, output_mode, checkpoint=checkpoint)
+    q = _run(spark, ev, stream_df, output_mode, settle=settle, checkpoint=checkpoint)
     return _snapshot_sink(spark, q.name)
 
 
@@ -240,7 +265,7 @@ def tumbling_stream(spark: SparkSession, ev: DataFrame, width: str = "1 hour") -
             "total_value",
         )
     )
-    return _drain(spark, agg, "append")
+    return _drain(spark, ev, agg, "append")
 
 
 def dedup_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -267,7 +292,9 @@ def dedup_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    return _drain(spark, deduped, "complete")
+    # complete mode over one availableNow data batch: the trailing
+    # watermark advance only evicts dedup state, never a count
+    return _drain(spark, ev, deduped, "complete", settle=False)
 
 
 def late_data_stream(spark: SparkSession, ev: DataFrame, split_frac: float = 0.5) -> DataFrame:
@@ -305,7 +332,7 @@ def late_data_stream(spark: SparkSession, ev: DataFrame, split_frac: float = 0.5
     )
     # batch 1 advances the watermark near hi; batch 2's rows all fall
     # below it and are dropped
-    q = _run(spark, agg, "append", between=[lambda _: _land_slice(sel(old_half), base)])
+    q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(old_half), base)])
     return _snapshot_sink(spark, q.name)
 
 
@@ -340,7 +367,7 @@ def stateful_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0
     (running_total, n_events, n_over_threshold) across batches and emit
     the final state per user."""
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
-    return _drain(spark, _per_user_state(src, threshold), "update")
+    return _drain(spark, ev, _per_user_state(src, threshold), "update")
 
 
 def stateful_stream_tws(
@@ -411,7 +438,7 @@ def stateful_stream_rocksdb(
     }
     ckpt = staging.new_dir("crs_rocks_") + "/ckpt"
     with conf_scope(spark, confs):
-        q = _run(spark, _per_user_state(src, threshold), "update", checkpoint=ckpt)
+        q = _run(spark, ev, _per_user_state(src, threshold), "update", checkpoint=ckpt)
 
     state_files = [
         f
@@ -438,7 +465,7 @@ def static_join_stream(spark: SparkSession, ev: DataFrame, weights: DataFrame) -
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("weighted_value"),
     )
-    return _drain(spark, agg, "complete")
+    return _drain(spark, ev, agg, "complete")
 
 
 def session_stream(spark: SparkSession, ev: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -457,7 +484,7 @@ def session_stream(spark: SparkSession, ev: DataFrame, gap: str = "30 minutes") 
             "total_value",
         )
     )
-    return _drain(spark, agg, "append")
+    return _drain(spark, ev, agg, "append")
 
 
 def sliding_stream(
@@ -477,7 +504,7 @@ def sliding_stream(
             "total_value",
         )
     )
-    return _drain(spark, agg, "append")
+    return _drain(spark, ev, agg, "append")
 
 
 def _interval_join(
@@ -529,7 +556,7 @@ def interval_join_stream(
     Output is id pairs only — the batch inner join is the exact
     oracle."""
     joined = _interval_join(spark, _stage(ev), "35 days", "inner", lookback)
-    return _drain(spark, joined.select("purchase_id", "view_id"), "append")
+    return _drain(spark, ev, joined.select("purchase_id", "view_id"), "append")
 
 
 def join_then_window_stream(
@@ -577,7 +604,7 @@ def join_then_window_stream(
     )
     # batch 1: all data, the watermark set at its end; batch 2 (the
     # sentinel): finalized windows emit
-    q = _run(spark, agg, "append", between=[lambda _: _land_slice(sel(sentinel), base)])
+    q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(sentinel), base)])
     out = _snapshot_sink(spark, q.name)
     hi = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row scalar
     horizon = hi - _dt.timedelta(hours=4)  # delay 2h + lookback 1h + width 1h
@@ -635,7 +662,7 @@ def foreach_batch_merge_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
         state["df"] = batch.sparkSession.read.parquet(path)
 
     src = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src_dir)
-    _run(spark, src, sink=merge_batch, checkpoint=base + "/ckpt")
+    _run(spark, ev, src, sink=merge_batch, checkpoint=base + "/ckpt")
     final = state["df"]
     return final.select(
         "user_id",
@@ -672,7 +699,7 @@ def checkpoint_recovery_stream(
     def run_instance() -> DataFrame:
         src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
         agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-        return _drain(spark, agg, "complete", ckpt_dir)
+        return _drain(spark, ev, agg, "complete", ckpt_dir)
 
     run_instance()  # first instance: oldest half, then terminates
     _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)
@@ -756,7 +783,7 @@ def tws_stream(spark: SparkSession, ev: DataFrame, threshold: float = 150.0) -> 
             outputMode="Update",
             timeMode="None",
         )
-        return _drain(spark, out, "update")
+        return _drain(spark, ev, out, "update")
 
 
 def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -811,6 +838,7 @@ def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     # micro-batch 1 -> manifest version 1
     _run(
         spark,
+        ev,
         spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
         sink=commit_batch,
         checkpoint=base + "/ckpt",
@@ -870,7 +898,7 @@ def outer_interval_join_stream(
     excluded on BOTH engine and oracle sides, making the remaining
     set exactly replayable."""
     joined = _interval_join(spark, _stage(ev), delay, "left_outer", lookback)
-    out = _drain(spark, joined.select("purchase_id", "view_id", "p_ts"), "append")
+    out = _drain(spark, ev, joined.select("purchase_id", "view_id", "p_ts"), "append")
     hi = ev.agg(F.max("ts").alias("hi")).collect()[0]["hi"]  # bounded scalar
     import datetime as _dt
 
@@ -906,7 +934,7 @@ def progress_metrics_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     Driver state: the bounded progress JSON list (O(batches))."""
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(_stage(ev))
     agg = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    q = _run(spark, agg, "complete")
+    q = _run(spark, ev, agg, "complete")
     progresses = list(q.recentProgress)
     spark.catalog.dropTempView(q.name)  # sink content unused
     input_rows = sum(int(p["numInputRows"]) for p in progresses)
@@ -1083,7 +1111,7 @@ def session_timeout_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return _drain(spark, sessions, "append")
+    return _drain(spark, ev, sessions, "append")
 
 
 def ttl_state_stream(
@@ -1204,7 +1232,7 @@ def ttl_state_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = _run(spark, live, "append", checkpoint=ckpt)
+    q = _run(spark, ev, live, "append", checkpoint=ckpt)
     # The access-time reset set is deterministic only if ALL data lands
     # in one micro-batch (documented above) — enforce it loudly instead
     # of letting a future maxFilesPerTrigger/regression produce silently
@@ -1245,7 +1273,7 @@ def semi_join_stream(
     range-bounded. Emits purchase ids only; the batch EXISTS is the
     exact oracle."""
     joined = _interval_join(spark, _stage(ev), "35 days", "left_semi", lookback)
-    return _drain(spark, joined.select("purchase_id"), "append")
+    return _drain(spark, ev, joined.select("purchase_id"), "append")
 
 
 def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -1325,6 +1353,7 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
     # shards); OPTIMIZE -> v2; batch 2 -> v3, appends onto compacted
     q = _run(
         spark,
+        ev,
         spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
         sink=commit_batch,
         checkpoint=base + "/ckpt",
@@ -1417,7 +1446,7 @@ def _parity_rounds(
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s"))
         )
-        q = _run(spark, agg, "complete", checkpoint=ckpt)
+        q = _run(spark, ev, agg, "complete", checkpoint=ckpt)
         spark.catalog.dropTempView(q.name)
         if parity == 0 and mid is not None:
             mid(ckpt)
@@ -1542,7 +1571,7 @@ def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("v_vc", "p_vc")
-    out = _drain(spark, joined, "append", ckpt)
+    out = _drain(spark, ev, joined, "append", ckpt)
     pairs = out.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum(F.col("v_vc") + F.col("p_vc")), F.lit(0))

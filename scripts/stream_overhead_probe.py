@@ -33,11 +33,11 @@ if REPO not in sys.path:
 SF_DIR = "/root/testdata/sf0.1"
 
 
-def probe(spark, label: str, stream_df, output_mode: str) -> dict:
+def probe(spark, label: str, ev, stream_df, output_mode: str) -> dict:
     from chess_ratings_spark.streaming.stream_ops import _run
 
     t0 = time.perf_counter()
-    q = _run(spark, stream_df, output_mode)
+    q = _run(spark, ev, stream_df, output_mode)
     wall = time.perf_counter() - t0
     batches = []
     for p in q.recentProgress:
@@ -81,7 +81,7 @@ def main() -> None:
     )
 
     # 1) stateless projection: the pure-machinery floor
-    probe(spark, "stateless_projection", src.select("event_id", "event_type"), "append")
+    probe(spark, "stateless_projection", ev, src.select("event_id", "event_type"), "append")
 
     # 2) windowed agg (one stateful op)
     agg = (
@@ -90,11 +90,11 @@ def main() -> None:
         .agg(F.count(F.lit(1)).alias("n"))
         .select("event_type", "n")
     )
-    probe(spark, "windowed_agg", agg, "append")
+    probe(spark, "windowed_agg", ev, agg, "append")
 
     # 3) the same windowed agg AGAIN (second query, same session):
     #    isolates per-query start cost now that everything is warm
-    probe(spark, "windowed_agg_warm", agg, "append")
+    probe(spark, "windowed_agg_warm", ev, agg, "append")
 
     # 4) stream-stream interval join (4 state stores/partition)
     purchases = src.filter(F.col("event_type") == "purchase").select(
@@ -114,7 +114,7 @@ def main() -> None:
         & (views.v_ts <= purchases.p_ts),
         "inner",
     ).select("purchase_id")
-    probe(spark, "interval_join", joined, "append")
+    probe(spark, "interval_join", ev, joined, "append")
 
 
 if __name__ == "__main__":

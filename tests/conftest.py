@@ -8,6 +8,8 @@ import datetime as _dt
 import decimal
 import math
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -50,6 +52,20 @@ def ducks():
     yield get
     for c in cons.values():
         c.close()
+
+
+@contextmanager
+def job_count(spark):
+    """Run the body under a fresh job group; yields a callable giving
+    the number of Spark jobs the group has launched so far."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    before = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
 
 
 def _norm(v):

@@ -4,12 +4,17 @@ stateful/late/dedup semantics must hold exactly."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+
+import pytest
 from pyspark.sql import functions as F
 
 from chess_ratings_spark import tables
+from chess_ratings_spark.session import conf_scope
 from chess_ratings_spark.streaming import batch_twins, stream_ops
 
-from .conftest import SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE, job_count
 
 
 def _as_set(df):
@@ -44,6 +49,78 @@ def test_dedup_stream_removes_exact_duplicates(spark):
         for r in ev.groupBy("event_type").agg(F.countDistinct("event_id").alias("n")).collect()
     }
     assert out == expected
+
+
+def test_state_partitions_sized_from_input(spark):
+    """State partitions are ceil(sizeInBytes(ev) / advisory size),
+    clamped to [1, spark.sql.shuffle.partitions], and sizing reads a
+    plan statistic without launching a Spark job."""
+    ev = tables.load(spark, SF_SMOKE, "events")  # a new plan: no statistics computed yet
+    with job_count(spark) as jobs:
+        with stream_ops._state_partitions(spark, ev):
+            pass
+        assert jobs() == 0
+
+    def state_partitions() -> int:
+        src = spark.readStream.schema(stream_ops.EVENT_SCHEMA).parquet(stream_ops._stage(ev))
+        q = stream_ops._run(spark, ev, src.groupBy("event_type").count(), "complete")
+        spark.catalog.dropTempView(q.name)
+        (op,) = q.lastProgress["stateOperators"]
+        return op["numShufflePartitions"]
+
+    assert state_partitions() == 1
+    size = ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cap, advisory = 8, 8 * 1024
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
+            "spark.sql.shuffle.partitions": str(cap),
+        },
+    ):
+        n = state_partitions()
+    assert 1 < n <= cap
+    assert n == min(cap, -(-size // advisory))
+
+
+#: Every harness that declares ``settle=False`` (skips the trailing
+#: no-data micro-batch), keyed by name; each is run both ways below.
+_SETTLE_FREE = {"dedup_stream": stream_ops.dedup_stream}
+
+
+def test_settle_free_sites_are_all_listed():
+    tree = ast.parse(inspect.getsource(stream_ops))
+    declared = {
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        for kw in call.keywords
+        if kw.arg == "settle" and isinstance(kw.value, ast.Constant) and kw.value.value is False
+    }
+    assert declared == set(_SETTLE_FREE)
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
+@pytest.mark.parametrize("site", sorted(_SETTLE_FREE))
+def test_settle_free_site_rows_equal_settled_run(spark, monkeypatch, site, sf_dir):
+    """A ``settle=False`` site returns the same rows as the same run
+    with its trailing no-data batch, in one batch fewer."""
+    ev = tables.load(spark, sf_dir, "events")
+    run, batches = stream_ops._run, []
+
+    def counted(*args, **kwargs):
+        q = run(*args, **kwargs)
+        batches.append(len(q.recentProgress))
+        return q
+
+    monkeypatch.setattr(stream_ops, "_run", counted)
+    skipped = sorted(tuple(r) for r in _SETTLE_FREE[site](spark, ev).collect())
+    monkeypatch.setattr(stream_ops, "_run", lambda *a, **kw: counted(*a, **{**kw, "settle": True}))
+    settled = sorted(tuple(r) for r in _SETTLE_FREE[site](spark, ev).collect())
+    assert skipped and skipped == settled
+    assert batches[1] == batches[0] + 1
 
 
 def test_late_data_dropped(spark):

@@ -8,7 +8,6 @@ import shutil
 import tempfile
 import threading
 import uuid
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -16,6 +15,8 @@ from pyspark.sql import functions as F
 
 from chess_ratings_spark import staging
 from chess_ratings_spark.operators.tablelog import CommitConflict, TableLog, _write_dv
+
+from .conftest import job_count
 
 
 @pytest.fixture()
@@ -2603,7 +2604,7 @@ def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch, path)
         def land_and_read(dest):
             stream_ops._land_slice(sl, dest)
             src = spark.readStream.schema("k bigint, m bigint").parquet(dest)
-            return sorted(r.k for r in stream_ops._drain(spark, src, "append").collect())
+            return sorted(r.k for r in stream_ops._drain(spark, sl, src, "append").collect())
 
     def sweep(d):
         for f in os.listdir(d):
@@ -2631,20 +2632,6 @@ def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch, path)
     assert staged() != second, "stale key kept"
 
 
-@contextmanager
-def _job_count(spark):
-    """Run the body under a fresh job group; yields a callable giving
-    the number of Spark jobs the group has launched so far."""
-    sc = spark.sparkContext
-    group = f"tablelog-jobs-{uuid.uuid4().hex}"
-    before = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", before)
-
-
 def _keys(spark, lo, hi, step=1):
     return spark.range(lo, hi, step).select(F.col("id").alias("k"))
 
@@ -2670,7 +2657,7 @@ def test_snapshot_of_dv_versions_launches_no_job(base, spark):
     assert scoped
     for d in (dv, *scoped):
         assert (Path(d) / "_schema.json").is_file()
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         for v in (v_global, v_scoped):
             log.snapshot_mor(spark, v)
         assert jobs() == 0
@@ -2680,7 +2667,7 @@ def test_snapshot_of_dv_versions_launches_no_job(base, spark):
 
     want = sorted(log.snapshot_mor(spark, v_global).collect())
     (Path(dv) / "_schema.json").unlink()
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         legacy = log.snapshot_mor(spark, v_global)
         assert jobs() >= 1
     assert sorted(legacy.collect()) == want
@@ -2743,18 +2730,18 @@ def test_update_cow_census_is_observed(base, spark, monkeypatch, dvs):
         if dvs:
             _with_dvs(log, spark, f"{base}/dv{i}")
     want = twins[0].snapshot_mor(spark).filter(pred).count()
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         assert twins[1].snapshot_mor(spark).filter(pred).count() == want
         n_count = jobs()
 
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         res = twins[0].update_cow(spark, pred, {"tag": "tag + 5"})
         n_observed = jobs()
     assert res["n_matched"] == want
 
     land = staging.land
     monkeypatch.setattr(staging, "land", lambda *a, **k: (land(*a, **k)[0], False))
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         res = twins[1].update_cow(spark, pred, {"tag": "tag + 5"})
         n_counted = jobs()
     assert res["n_matched"] == want
@@ -2816,8 +2803,25 @@ def test_warm_lake_mix_job_census(spark):
     census = {}
     for _ in range(2):  # the first pass warms the session's stage
         for name in _WARM_LAKE_JOBS:
-            with _job_count(spark) as jobs:
+            with job_count(spark) as jobs:
                 df = REGISTRY[name].fn(spark, SF_SMOKE)
                 df.write.format("noop").mode("overwrite").save()
                 census[name] = jobs()
     assert census == _WARM_LAKE_JOBS
+
+
+def test_lake_update_cow_rewrites_at_sf0_01(spark, ducks):
+    """sf0.001's user_ids (0-14) all fall below lake_update_cow's prune
+    range 40-59, so there its UPDATE takes the early exit; sf0.01
+    (user_ids 0-149) runs the rewrite itself against the oracle."""
+    import chess_ratings_spark.plans  # noqa: F401  (populates the registry)
+    from chess_ratings_spark.registry import REGISTRY
+
+    from .conftest import SF_CORRECT, compare_frames
+
+    q = REGISTRY["lake_update_cow"]
+    df = q.fn(spark, SF_CORRECT)
+    compare_frames(df, ducks(SF_CORRECT), q.oracle, qname=q.name)
+    (row,) = df.collect()
+    assert row["n_updated"] > 0
+    assert row["files_rewritten"] > 0
