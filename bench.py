@@ -254,7 +254,7 @@ def main() -> None:
 
     # Warm the JVM + parquet footers once so per-query numbers measure the
     # plans, not first-touch JIT.
-    from chess_ratings_spark import tables
+    from chess_ratings_spark import staging, tables
 
     # Guarded per table: one unreadable fixture must not zero out the
     # whole bench (round 4 lost all numbers to a single loader error).
@@ -475,6 +475,8 @@ def main() -> None:
             "queries": timings,  # the complete per-query map
             "n_samples": n_samples,  # per-query sample count
             "task_sec": task_secs,  # per-query task seconds
+            # staged links versus fresh writes over the whole run
+            "staging": dict(sorted(staging.COUNTS.items())),
         },
     )
     spark.stop()

@@ -57,8 +57,9 @@ two mechanisms that give snapshot isolation):
   checks that every DV a version adds still exists before publishing.
 - **Observed UPDATE census**: :meth:`update_cow` counts its matched rows
   with a ``DataFrame.observe`` metric on the rewrite it lands, not with
-  a separate count job; only a landing served from the stage (no write
-  ran, so the metric never fired) falls back to counting.
+  a separate count job. A landing served from the stage runs no write,
+  so the metric never fires; the stage returns the census its write
+  recorded instead.
 
 At 100 TB none of this touches the driver with data: manifests carry
 file names and stats (bytes here; per-column min/max in a production
@@ -490,33 +491,27 @@ class TableLog:
     # -- table verbs ------------------------------------------------------
 
     def _land(self, df: DataFrame, n_files: int, tag: str) -> list[str]:
-        """The landed paths of :meth:`_land_wrote`."""
-        return self._land_wrote(df, n_files, tag)[0]
-
-    def _land_wrote(
-        self, df: DataFrame, n_files: int, tag: str
-    ) -> tuple[list[str], bool]:
         """Write ``df`` as exactly ``n_files`` parquet files into the
-        data dir. Destination names carry a per-landing random token on
-        top of the caller's tag: data files must be IMMUTABLE once
-        named, and tag-only names break that under concurrency — two
-        OPTIMIZEs racing the same snapshot derive the same tag, and
-        their concurrent copies would interleave into the path the
-        conflict WINNER then commits (the loser's CommitConflict fires
-        at rebase time, after the bytes are already torn). With unique
-        names each landing owns its paths outright; losers only orphan
-        files, which snapshot isolation already ignores.
+        data dir, named by :meth:`_names`. Fixture slices are staged
+        once per session and re-landed by hardlink
+        (:func:`staging.land`; guide §1.2). Returns the landed paths."""
+        return staging.land(df, self.data_dir, n_files, self._names(tag))[0]
 
-        Fixture slices are staged once per session and re-landed by
-        hardlink (:func:`staging.land`; guide §1.2). Returns the landed
-        paths and whether a Spark write ran (False: served from the
-        stage)."""
+    @staticmethod
+    def _names(tag: str) -> Callable[[int], str]:
+        """Landed file names: the caller's tag plus a per-landing random
+        token. Data files must be IMMUTABLE once named, and tag-only
+        names break that under concurrency — two OPTIMIZEs racing the
+        same snapshot derive the same tag, and their concurrent copies
+        would interleave into the path the conflict WINNER then commits
+        (the loser's CommitConflict fires at rebase time, after the
+        bytes are already torn). With unique names each landing owns
+        its paths outright; losers only orphan files, which snapshot
+        isolation already ignores."""
         import uuid
 
         token = uuid.uuid4().hex[:12]
-        return staging.land(
-            df, self.data_dir, n_files, name=lambda i: f"{tag}-{token}-{i:05d}.parquet"
-        )
+        return lambda i: f"{tag}-{token}-{i:05d}.parquet"
 
     def append(self, df: DataFrame, n_files: int, tag: str) -> int:
         """Land new data files, then commit (latest snapshot at commit
@@ -589,9 +584,7 @@ class TableLog:
         consumed_scoped = set(read_manifest.get("delete_vectors_scoped", []))
         df = _apply_delete_vectors(
             spark,
-            self._with_scoped_dvs_applied(
-                spark, sorted(read_set), read_manifest
-            ).drop("_dv_file"),
+            self._with_scoped_dvs_applied(spark, sorted(read_set), read_manifest),
             consumed_dvs,
         )
         n_rows = df.count()
@@ -670,9 +663,7 @@ class TableLog:
         consumed_dvs = set(read_manifest.get("delete_vectors", []))
         df = _apply_delete_vectors(
             spark,
-            self._with_scoped_dvs_applied(
-                spark, sorted(read_set), read_manifest
-            ).drop("_dv_file"),
+            self._with_scoped_dvs_applied(spark, sorted(read_set), read_manifest),
             sorted(consumed_dvs),
         )
         n_rows = df.count()
@@ -1365,13 +1356,14 @@ class TableLog:
         read_scoped = set(m.get("delete_vectors_scoped", []))
         src = _apply_delete_vectors(
             spark,
-            self._with_scoped_dvs_applied(spark, sorted(touched), m).drop("_dv_file"),
+            self._with_scoped_dvs_applied(spark, sorted(touched), m),
             m.get("delete_vectors", []),
         )
         cond = F.expr(predicate)
         # one pass: the match census is an observed metric of the
         # rewrite itself, collected inside its write tasks (as Delta
-        # collects write stats); no separate count action
+        # collects write stats); no separate count action. A landing
+        # served from the stage returns the census its write recorded.
         census = Observation()
         out = src.observe(census, F.count_if(cond).alias("n"))
         for col_name, expr in assign.items():
@@ -1379,10 +1371,9 @@ class TableLog:
                 col_name, F.when(cond, F.expr(expr)).otherwise(F.col(col_name))
             )
         _refuse_type_divergence(src.schema, out.schema, "UPDATE")
-        new, wrote = self._land_wrote(out, len(touched), tag=tag)
-        # a landing served from the stage ran no action, so the
-        # observation never fired: count instead of waiting on it
-        n_matched = census.get["n"] if wrote else src.filter(cond).count()
+        new, seen = staging.land(
+            out, self.data_dir, len(touched), self._names(tag), census
+        )
 
         def rebase(prev: dict | None) -> tuple[list[str], dict]:
             if prev is None or prev.get("sharded"):
@@ -1428,7 +1419,7 @@ class TableLog:
             "version": int(v),
             "files_rewritten": len(touched),
             "files_carried": len(all_files) - len(touched),
-            "n_matched": int(n_matched),
+            "n_matched": int(seen["n"]),
         }
 
     # -- merge-on-read with file-scoped delete vectors ---------------------
@@ -1440,23 +1431,28 @@ class TableLog:
     _NORM_FILE = "regexp_replace(_metadata.file_path, '^file:/+', '/')"
 
     def _with_scoped_dvs_applied(
-        self, spark: SparkSession, files: list[str], m: dict
+        self, spark: SparkSession, files: list[str], m: dict, keep_file=False
     ):
         """Scan ``files`` with the manifest's FILE-SCOPED delete
         vectors applied (one scan + one anti-join on (file, keys) pairs
-        — never per-file reads) and the normalized physical path kept
-        as ``_dv_file``. Callers drop the column when done."""
+        — never per-file reads), keeping the normalized physical path
+        as ``_dv_file`` when ``keep_file``. The path is read only when
+        the manifest has scoped DVs or the caller keeps it: a plan that
+        reads ``_metadata`` keys the stage by path, so reading it
+        needlessly would keep a rewrite of hardlinked files from ever
+        hitting the stage."""
         from pyspark.sql import functions as F
 
-        base = self._scan(spark, sorted(files), m).withColumn(
-            "_dv_file", F.expr(self._NORM_FILE)
-        )
+        base = self._scan(spark, sorted(files), m)
         scoped = m.get("delete_vectors_scoped", [])
+        if not (scoped or keep_file):
+            return base
+        base = base.withColumn("_dv_file", F.expr(self._NORM_FILE))
         if scoped:
             pairs = _read_dv(spark, *scoped)
             on = ["_dv_file"] + [c for c in pairs.columns if c != "_dv_file"]
             base = base.join(F.broadcast(pairs), on, "left_anti")
-        return base
+        return base if keep_file else base.drop("_dv_file")
 
     def snapshot_mor(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Merge-on-read snapshot: the manifest's files with BOTH
@@ -1471,9 +1467,7 @@ class TableLog:
         materialized). Plain :meth:`snapshot` stays raw by design —
         MOR-aware readers use this."""
         m = self.read_manifest(version)
-        df = self._with_scoped_dvs_applied(
-            spark, self.manifest_files(m), m
-        ).drop("_dv_file")
+        df = self._with_scoped_dvs_applied(spark, self.manifest_files(m), m)
         return _apply_delete_vectors(spark, df, m.get("delete_vectors", []))
 
     def update_mor(
@@ -1540,7 +1534,9 @@ class TableLog:
         if not read_files:
             return {"version": int(m["version"]), "n_matched": 0,
                     "files_appended": 0, "files_rewritten": 0}
-        base = self._with_scoped_dvs_applied(spark, sorted(read_files), m)
+        base = self._with_scoped_dvs_applied(
+            spark, sorted(read_files), m, keep_file=True
+        )
         live = _apply_delete_vectors(spark, base, m.get("delete_vectors", []))
         matched = live.filter(F.expr(predicate))
         n_matched = matched.count()
@@ -1722,7 +1718,7 @@ class TableLog:
         n_deleted = 0
         if read_files:
             base = self._with_scoped_dvs_applied(
-                spark, sorted(read_files), m
+                spark, sorted(read_files), m, keep_file=True
             )
             live = _apply_delete_vectors(spark, base, read_global)
             # schema-on-WRITE check (Delta's MERGE contract): a source

@@ -352,14 +352,19 @@ def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = TableLog(base)
         for m in (0, 1, 2):
             log.append(ev.filter(F.col("user_id") % 3 == m), n_files=4, tag=f"m{m}")
-        out_rows = []
-        for v in (0, 1, 2):
-            snap = log.snapshot(spark, version=v)
-            agg = snap.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
-            ).collect()[0]
-            n_files = len(log.read_manifest(v)["files"])
-            out_rows.append((v, int(agg["n"]), int(agg["s"]), n_files))
+        # every version is read after the last append: one action
+        aggs = tables.collect_aggs(
+            *[
+                log.snapshot(spark, version=v).agg(
+                    F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
+                )
+                for v in (0, 1, 2)
+            ]
+        )
+        out_rows = [
+            (v, int(agg["n"]), int(agg["s"]), len(log.read_manifest(v)["files"]))
+            for v, agg in enumerate(aggs)
+        ]
         return tables.local_table(
             spark,
             out_rows,
@@ -859,10 +864,14 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_out = max(1, (int(mor["n"]) + 49_999) // 50_000)
         new_files = log._land(live, n_out, tag="materialized")
         v2 = log.commit(new_files, op="optimize-materialize-deletes")
-        mat = log.snapshot(spark, v2).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
-        ).collect()[0]
-        n_tt_v0 = log.snapshot(spark, 0).count()
+        # both read after the v2 commit: one action
+        mat, tt_v0 = tables.collect_aggs(
+            log.snapshot(spark, v2).agg(
+                F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
+            ),
+            log.snapshot(spark, 0).agg(F.count(F.lit(1)).alias("n")),
+        )
+        n_tt_v0 = tt_v0["n"]
 
         return tables.local_row(
             spark,
@@ -2686,12 +2695,15 @@ def lake_update_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
             prune_hi=59,
         )
         m1 = log.read_manifest()
-        after = log.snapshot(spark).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
-        ).collect()[0]
-        tt = log.snapshot(spark, 0).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
-        ).collect()[0]
+        # both read after the update's commit: one action
+        after, tt = tables.collect_aggs(
+            *[
+                log.snapshot(spark, v).agg(
+                    F.count(F.lit(1)).alias("n"), F.sum("vc").alias("s")
+                )
+                for v in (None, 0)
+            ]
+        )
 
         carried = set(m1["files"]) & set(m0["files"])
         untouched_expected = {

@@ -8,14 +8,29 @@ parquet, and :func:`land` hardlinks those files into a table or
 stream source dir. All share one store, one session key
 ``(applicationId, id(spark))`` (a restarted context or a sibling
 session shares nothing) and ``COUNTS``: ``{memo,dir}.{hit,miss}`` and
-``dir.unkeyed``, i.e. staged links versus fresh writes.
+``dir.unkeyed``, i.e. staged links versus fresh writes (a miss or an
+unkeyed landing is a Spark write).
 
 What is keyed. A memo by the caller's tuple. A staged DataFrame by
 :func:`fingerprint`: its schema, its analyzed plan with expression ids
-(``#123``) stripped (a query function rebuilding the same frame mints
-new ones), four content confs, its sorted input files with each one's
-size and mtime (an input rewritten in place under the same name is a
-new key, never a hit on the old bytes) and ``n_files``.
+(``#123``) and each Observation's per-call name and DataFrame id
+stripped (a query function rebuilding the same frame mints new ones;
+the metric expressions stay), four content confs, ``n_files`` and its
+input files by identity: ``(st_dev, st_ino, size, mtime_ns)`` each,
+sorted. A hardlinked copy of a staged file is then the same input, so
+a table a query rebuilds from staged files in a fresh dir on every
+run keys the same each run; an input rewritten in place (new size or
+mtime) is a new key, never a hit on the old bytes. ``ctime`` stays
+out: linking a file changes it. Two kinds of input keep their path in
+the key, because their rows depend on it: a file under a Hive-style
+``key=value`` dir (partition discovery turns the dir into a column)
+and every file of a plan that reads ``_metadata`` or
+``input_file_name``.
+
+What a hit returns. The staged files, and what the caller's census
+(an ``Observation`` on the staged frame) saw when they were written:
+a hit runs no action, so the census never fires and its record
+answers instead.
 
 Why some plans get no key. Plan text pins rows only when every leaf
 reads files: a local relation prints its attributes, not its rows; an
@@ -51,7 +66,7 @@ from pathlib import Path
 from typing import Any, Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _STORE: dict[tuple, Any] = {}
 COUNTS: Counter[str] = Counter()
@@ -121,27 +136,40 @@ def per_session(fn: Callable) -> Callable:
     return once
 
 
-def _file_state(uri: str) -> tuple[str, int, int]:
-    """``(uri, size, mtime_ns)`` of a local input file."""
+#: lower-cased analyzed-plan text of a read whose rows carry file paths
+_PATH_READERS = ("_metadata", "input_file_")
+#: an Observation's per-call name and DataFrame id around its metrics
+_OBSERVATION = re.compile(r"CollectMetrics .*?, (\[.*\]), \d+$", re.M)
+
+
+def _file_state(uri: str, by_path: bool) -> tuple:
+    """``(st_dev, st_ino, size, mtime_ns)`` of a local input file, plus
+    its ``uri`` when its rows depend on it (``by_path``, or a Hive-style
+    ``key=value`` dir above it)."""
     u = urlparse(uri)
     if u.scheme not in ("", "file"):
         raise OSError(f"cannot stat {uri}")
-    st = os.stat(unquote(u.path))
-    return uri, st.st_size, st.st_mtime_ns
+    path = unquote(u.path)
+    st = os.stat(path)
+    ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+    return ident + (uri,) if by_path or "=" in os.path.dirname(path) else ident
 
 
 def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
     """The store key of ``df`` written as ``n_files`` files, or None."""
     try:
-        files = tuple(_file_state(f) for f in sorted(df.inputFiles()))
+        plan = df._jdf.queryExecution().analyzed().toString()
+        low = plan.lower()
+        if any(m in low for m in _UNPINNED_MARKERS):
+            return None
+        by_path = any(m in low for m in _PATH_READERS)
+        files = tuple(sorted(_file_state(f, by_path) for f in df.inputFiles()))
         if not files:
             return None
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(m in plan.lower() for m in _UNPINNED_MARKERS):
-            return None
+        plan = _OBSERVATION.sub(r"CollectMetrics \1", re.sub(r"#\d+", "#", plan))
         conf = df.sparkSession.conf
         text = "\n".join(
-            [df.schema.simpleString(), re.sub(r"#\d+", "#", plan)]
+            [df.schema.simpleString(), plan]
             + [str(conf.get(k, None)) for k in _CONTENT_CONFS]
         )
         return (hashlib.md5(text.encode()).hexdigest(), files, n_files)
@@ -149,23 +177,22 @@ def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
         return None
 
 
-def _stage(df: DataFrame, n_files: int | None) -> tuple[str, bool, bool]:
-    """The staged dir of ``df``, whether it is keyed, and whether this
-    call wrote it."""
-    wrote = False
+def _stage(
+    df: DataFrame, n_files: int | None, census: Observation | None = None
+) -> tuple[str, dict, bool]:
+    """The staged dir of ``df``, what ``census`` saw when it was
+    written, and whether it is keyed."""
 
-    def write() -> str:
-        nonlocal wrote
+    def write() -> tuple[str, dict]:
         path = new_dir("crs_stage_") + "/w"
         (df if n_files is None else df.repartition(n_files)).write.parquet(path)
-        wrote = True
-        return path
+        return path, (census.get if census is not None else {})
 
     key = fingerprint(df, n_files)
     if key is None:
         COUNTS["dir.unkeyed"] += 1
-        return write(), False, True
-    return memo(df.sparkSession, key, write), True, wrote
+        return (*write(), False)
+    return (*memo(df.sparkSession, key, write), True)
 
 
 def stage_dir(df: DataFrame, n_files: int | None = None) -> str:
@@ -196,30 +223,35 @@ def _link_all(src: str, dest: Path, name) -> list[str]:
 
 
 def land(
-    df: DataFrame, dest_dir, n_files: int | None = None, name=None
-) -> tuple[list[str], bool]:
+    df: DataFrame,
+    dest_dir,
+    n_files: int | None = None,
+    name=None,
+    census: Observation | None = None,
+) -> tuple[list[str], dict]:
     """Link ``df``'s staged parquet files into ``dest_dir``. Returns the
-    landed paths and whether a Spark write ran: False when the files
-    came from the stage, so no action ran on ``df`` (an observation on
-    it never fires). ``name(i)`` names the i-th file; by default it
+    landed paths and what ``census``, an Observation on ``df``, saw
+    when the staged files were written (``{}`` without one): a hit runs
+    no action on ``df``, so the census never fires and its record
+    answers instead. ``name(i)`` names the i-th file; by default it
     keeps its staged name, which is unique per write job. A staged dir
     emptied after the hit check is dropped and written fresh, never
     landed empty; an unkeyed write is removed once linked."""
     dest = Path(dest_dir)
     dest.mkdir(parents=True, exist_ok=True)
-    src, keyed, wrote = _stage(df, n_files)
+    src, seen, keyed = _stage(df, n_files, census)
     if keyed:
         try:
             out = _link_all(src, dest, name)
             if out:
-                return out, wrote
+                return out, seen
         except OSError:
             pass
         # emptied or vanished after the hit check: drop it, write fresh
         shutil.rmtree(Path(src).parent, ignore_errors=True)
-        src, keyed, wrote = _stage(df, n_files)
+        src, seen, keyed = _stage(df, n_files, census)
     try:
-        return _link_all(src, dest, name), wrote
+        return _link_all(src, dest, name), seen
     finally:
         if not keyed:
             shutil.rmtree(Path(src).parent, ignore_errors=True)

@@ -16,7 +16,7 @@ its session.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from chess_ratings_spark import staging
@@ -225,3 +225,19 @@ def local_row(spark: SparkSession, *cols: tuple[str, object, str]) -> DataFrame:
     return _one_row(spark).select(
         *[F.lit(v).cast(t).alias(n) for (n, v, t) in cols]
     )
+
+
+def collect_aggs(*aggs: DataFrame) -> list[Row]:
+    """The one row of each single-row aggregate in ``aggs``, collected
+    in ONE Spark action: the aggregates are unioned under a tag column,
+    so AQE runs their map stages at the same time instead of one action
+    after another. Only for reads of one point in a query's timeline; a
+    read taken before a write must stay its own action."""
+    from functools import reduce
+
+    tagged = [a.select(F.lit(i).alias("_agg"), "*") for i, a in enumerate(aggs)]
+    union = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), tagged)
+    by_tag = {r["_agg"]: r for r in union.collect()}
+    return [
+        Row(**{c: by_tag[i][c] for c in a.columns}) for i, a in enumerate(aggs)
+    ]

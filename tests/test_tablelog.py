@@ -7,14 +7,18 @@ from __future__ import annotations
 import shutil
 import tempfile
 import threading
-import uuid
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from chess_ratings_spark import staging
-from chess_ratings_spark.operators.tablelog import CommitConflict, TableLog, _write_dv
+from chess_ratings_spark.operators.tablelog import (
+    CommitConflict,
+    TableLog,
+    _apply_delete_vectors,
+    _write_dv,
+)
 
 from .conftest import job_count
 
@@ -2622,7 +2626,7 @@ def test_land_stage_vanished_dir_is_a_cache_miss(base, spark, monkeypatch, path)
 
     def live_then_sweep(value):
         ok = real_live(value)
-        if ok and value == second:
+        if ok and staging._staged_path(value) == second:
             sweep(second)
         return ok
 
@@ -2717,12 +2721,11 @@ def _with_dvs(log, spark, base):
 
 
 @pytest.mark.parametrize("dvs", [False, True], ids=["plain", "dvs"])
-def test_update_cow_census_is_observed(base, spark, monkeypatch, dvs):
+def test_update_cow_census_is_observed(base, spark, dvs):
     """update_cow's n_matched equals the count of matching live rows,
     with and without delete vectors, and is an observed metric of the
-    rewrite: the same UPDATE on a twin table forced down the count
-    path (its landing reported as served from the stage) runs exactly
-    that count's jobs more."""
+    rewrite: the UPDATE runs exactly the jobs of landing the same
+    rewrite without the census, none for a count (which costs >= 1)."""
     pred = "k BETWEEN 20 AND 60"
     twins = [TableLog(f"{base}/t{i}") for i in (0, 1)]
     for i, log in enumerate(twins):
@@ -2734,48 +2737,59 @@ def test_update_cow_census_is_observed(base, spark, monkeypatch, dvs):
         assert twins[1].snapshot_mor(spark).filter(pred).count() == want
         n_count = jobs()
 
+    m = twins[1].read_manifest()
+    bare = _apply_delete_vectors(
+        spark,
+        twins[1]._with_scoped_dvs_applied(spark, m["files"], m),
+        m.get("delete_vectors", []),
+    ).withColumn(
+        "tag", F.when(F.expr(pred), F.expr("tag + 5")).otherwise(F.col("tag"))
+    )
+    with job_count(spark) as jobs:
+        twins[1]._land(bare, len(m["files"]), tag="bare")
+        n_bare = jobs()
+
     with job_count(spark) as jobs:
         res = twins[0].update_cow(spark, pred, {"tag": "tag + 5"})
         n_observed = jobs()
     assert res["n_matched"] == want
-
-    land = staging.land
-    monkeypatch.setattr(staging, "land", lambda *a, **k: (land(*a, **k)[0], False))
-    with job_count(spark) as jobs:
-        res = twins[1].update_cow(spark, pred, {"tag": "tag + 5"})
-        n_counted = jobs()
-    assert res["n_matched"] == want
     assert n_count >= 1
-    assert n_counted - n_observed == n_count
+    assert n_observed == n_bare
 
 
-def test_update_cow_stage_hit_counts_and_does_not_hang(base, spark, monkeypatch):
+def test_update_cow_stage_hit_counts_and_does_not_hang(base, spark, tmp_path):
     """A landing served from the stage runs no action, so the observed
-    census never fires; update_cow must fall back to counting, never
-    wait on it. Forced here by keying every landing alike: the second
-    of two identical UPDATEs on twin tables hits the first one's
-    staged files."""
+    census never fires; the stage returns the census its write recorded,
+    and update_cow never waits on the one that did not fire. Twin tables
+    landed from one parquet source share their files' inodes, so the
+    second of two identical UPDATEs hits the first one's staged rewrite:
+    it runs no Spark job at all and reports the live count."""
     pred = "k BETWEEN 20 AND 60"
+    src = str(tmp_path / "src")
+    _tiny(spark, n=100).write.parquet(src)
     twins = [TableLog(f"{base}/t{i}") for i in (0, 1)]
     for log in twins:
-        _bucketed(log, spark)
+        log.append(spark.read.parquet(src), n_files=4, tag="base")
     want = twins[0].snapshot(spark).filter(pred).count()
-    key = ("forced-stage-hit", uuid.uuid4().hex)
-    monkeypatch.setattr(staging, "fingerprint", lambda df, n=None: key)
-    hits = staging.COUNTS["dir.hit"]
     got: list = []
+
+    def update(log):
+        before = staging.COUNTS.copy()
+        with job_count(spark) as jobs:
+            n = log.update_cow(spark, pred, {"tag": "tag + 5"})["n_matched"]
+            got.append(
+                (n, jobs())
+                + tuple(staging.COUNTS[k] - before[k] for k in ("dir.hit", "dir.miss"))
+            )
+
     for log in twins:
-        t = threading.Thread(
-            target=lambda log=log: got.append(
-                log.update_cow(spark, pred, {"tag": "tag + 5"})["n_matched"]
-            ),
-            daemon=True,
-        )
+        t = threading.Thread(target=update, args=(log,), daemon=True)
         t.start()
         t.join(timeout=180)
         assert not t.is_alive(), "update_cow blocked on a census that never fired"
-    assert staging.COUNTS["dir.hit"] == hits + 1
-    assert got == [want, want]
+    (n0, jobs0, hit0, miss0), second = got
+    assert (n0, hit0, miss0) == (want, 0, 1) and jobs0 >= 1
+    assert second == (want, 0, 1, 0)
     rows = [sorted(log.snapshot(spark).collect()) for log in twins]
     assert rows[0] == rows[1]
 
@@ -2784,30 +2798,49 @@ def test_update_cow_stage_hit_counts_and_does_not_hang(base, spark, monkeypatch)
 #: the perfbench ``lake`` mix at sf0.001: a deterministic count that
 #: host noise cannot move, so a rise is a regression to explain, not
 #: noise. Recorded DV schemas, staged DV key lists and single-partition
-#: literal tables took it from 32 to 27. (At sf0.001 every user_id is
-#: below lake_update_cow's prune range, so its UPDATE touches no file;
-#: the observed census is pinned by test_update_cow_census_is_observed.)
+#: literal tables took it from 32 to 27; identity-keyed staging and one
+#: action per census took it to 19. (At sf0.001 every user_id is below
+#: lake_update_cow's prune range, so its UPDATE touches no file; the
+#: sf0.01 census below runs the rewrite.)
 _WARM_LAKE_JOBS = {
-    "lake_update_cow": 7,
-    "lake_delete_mor": 13,
-    "lake_time_travel": 7,
+    "lake_update_cow": 5,
+    "lake_delete_mor": 9,
+    "lake_time_travel": 5,
 }
 
 
-def test_warm_lake_mix_job_census(spark):
+def _warm_census(spark, sf_dir, names) -> tuple[dict, int]:
+    """Second-pass Spark jobs per query, and the fresh stage writes
+    (``dir.miss`` + ``dir.unkeyed``) of that pass."""
     import chess_ratings_spark.plans  # noqa: F401  (populates the registry)
     from chess_ratings_spark.registry import REGISTRY
 
-    from .conftest import SF_SMOKE
-
     census = {}
     for _ in range(2):  # the first pass warms the session's stage
-        for name in _WARM_LAKE_JOBS:
+        before = staging.COUNTS.copy()
+        for name in names:
             with job_count(spark) as jobs:
-                df = REGISTRY[name].fn(spark, SF_SMOKE)
+                df = REGISTRY[name].fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 census[name] = jobs()
-    assert census == _WARM_LAKE_JOBS
+    fresh = sum(staging.COUNTS[k] - before[k] for k in ("dir.miss", "dir.unkeyed"))
+    return census, fresh
+
+
+def test_warm_lake_mix_job_census(spark):
+    from .conftest import SF_SMOKE
+
+    assert _warm_census(spark, SF_SMOKE, _WARM_LAKE_JOBS) == (_WARM_LAKE_JOBS, 0)
+
+
+def test_warm_lake_update_cow_census_at_sf0_01(spark):
+    """At sf0.01 lake_update_cow's UPDATE rewrites files: a warm pass
+    lands that rewrite from the stage (a hardlinked table's files key by
+    inode) and runs 6 jobs, with no fresh stage write."""
+    from .conftest import SF_CORRECT
+
+    census = _warm_census(spark, SF_CORRECT, ["lake_update_cow"])
+    assert census == ({"lake_update_cow": 6}, 0)
 
 
 def test_lake_update_cow_rewrites_at_sf0_01(spark, ducks):
