@@ -27,6 +27,14 @@ the key, because their rows depend on it: a file under a Hive-style
 and every file of a plan that reads ``_metadata`` or
 ``input_file_name``.
 
+Keys that can never repeat. A file under the staging root outside a
+staged dir sits in a per-run dir, made fresh by every run of its
+query. Such a plan gets no key when its key would hold that run's
+path, or when the file is not a hardlink of a staged file (a file the
+run wrote itself has a new inode every run). Being conservative here
+only ever costs a write; a key that cannot repeat would leave a staged
+dir behind until exit.
+
 What a hit returns. The staged files, and what the caller's census
 (an ``Observation`` on the staged frame) saw when they were written:
 a hit runs no action, so the census never fires and its record
@@ -55,6 +63,7 @@ serially, so the store has no lock.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import hashlib
 import os
@@ -71,6 +80,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 _STORE: dict[tuple, Any] = {}
 COUNTS: Counter[str] = Counter()
 _root: str | None = None
+#: ``(st_dev, st_ino)`` of every file written into a staged dir
+_staged_files: set[tuple[int, int]] = set()
 
 _CONTENT_CONFS = (
     "spark.sql.session.timeZone",
@@ -93,6 +104,18 @@ def new_dir(prefix: str) -> str:
         _root = tempfile.mkdtemp(prefix="crs_staging_")
     os.makedirs(_root, exist_ok=True)
     return tempfile.mkdtemp(prefix=prefix, dir=_root)
+
+
+@contextlib.contextmanager
+def run_dir(prefix: str):
+    """A fresh dir under the staging root for one run of a query,
+    removed when the body exits: whatever the body returns must not
+    read it lazily."""
+    path = new_dir(prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @atexit.register
@@ -121,6 +144,10 @@ def memo(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
     if k not in _STORE or not _live(value):
         value, outcome = build(), "miss"
         _STORE[k] = value
+        if (p := _staged_path(value)) is not None:
+            for f in Path(p).rglob("*"):
+                st = f.stat()
+                _staged_files.add((st.st_dev, st.st_ino))
     COUNTS[("dir." if _staged_path(value) else "memo.") + outcome] += 1
     return value
 
@@ -142,17 +169,31 @@ _PATH_READERS = ("_metadata", "input_file_")
 _OBSERVATION = re.compile(r"CollectMetrics .*?, (\[.*\]), \d+$", re.M)
 
 
-def _file_state(uri: str, by_path: bool) -> tuple:
+class _PerRun(Exception):
+    """An input whose key no later run can repeat."""
+
+
+def _file_state(uri: str, by_path: bool, staged: tuple[str, ...]) -> tuple:
     """``(st_dev, st_ino, size, mtime_ns)`` of a local input file, plus
     its ``uri`` when its rows depend on it (``by_path``, or a Hive-style
-    ``key=value`` dir above it)."""
+    ``key=value`` dir above it). Raises :class:`_PerRun` for a file in a
+    per-run dir (under the staging root, outside the ``staged`` dirs)
+    whose key would hold its path or that is no link of a staged file."""
     u = urlparse(uri)
     if u.scheme not in ("", "file"):
         raise OSError(f"cannot stat {uri}")
     path = unquote(u.path)
     st = os.stat(path)
     ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
-    return ident + (uri,) if by_path or "=" in os.path.dirname(path) else ident
+    keep_uri = by_path or "=" in os.path.dirname(path)
+    if (
+        _root is not None
+        and path.startswith(_root + os.sep)
+        and not path.startswith(staged)
+        and (keep_uri or (st.st_dev, st.st_ino) not in _staged_files)
+    ):
+        raise _PerRun(uri)
+    return ident + (uri,) if keep_uri else ident
 
 
 def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
@@ -163,7 +204,10 @@ def fingerprint(df: DataFrame, n_files: int | None = None) -> tuple | None:
         if any(m in low for m in _UNPINNED_MARKERS):
             return None
         by_path = any(m in low for m in _PATH_READERS)
-        files = tuple(sorted(_file_state(f, by_path) for f in df.inputFiles()))
+        staged = tuple(
+            {p + os.sep for v in _STORE.values() if (p := _staged_path(v)) is not None}
+        )
+        files = tuple(sorted(_file_state(f, by_path, staged) for f in df.inputFiles()))
         if not files:
             return None
         plan = _OBSERVATION.sub(r"CollectMetrics \1", re.sub(r"#\d+", "#", plan))

@@ -69,12 +69,27 @@ def _land_slice(df: DataFrame, dest_dir: str) -> None:
     staging.land(df, dest_dir)
 
 
-def _stage_mutable(ev: DataFrame, prefix: str) -> str:
-    """A PRIVATE hardlinked copy of :func:`_stage`, for harnesses that
-    append sentinel/late files mid-run."""
-    path = staging.new_dir(prefix) + "/in"
+def _stage_mutable(ev: DataFrame, root: str) -> str:
+    """A PRIVATE hardlinked copy of :func:`_stage` in the run dir
+    ``root``, for harnesses that append sentinel/late files mid-run."""
+    path = root + "/in"
     staging.land(ev.select(*_EVENT_COLS), path)
     return path
+
+
+def _ts_span(ev: DataFrame) -> tuple:
+    """``(min(ts), max(ts))`` of ``ev``, the bounds the harnesses cut
+    their slices at: one action per session and input (memoised on
+    :func:`staging.fingerprint`), or one per call for a frame without
+    a key."""
+
+    def span() -> tuple:
+        return tuple(ev.agg(F.min("ts"), F.max("ts")).collect()[0])
+
+    key = staging.fingerprint(ev)
+    if key is None:
+        return span()
+    return staging.memo(ev.sparkSession, (__name__, "ts_span", key), span)
 
 
 def _state_partitions(spark: SparkSession, ev: DataFrame, settle: bool = True):
@@ -98,6 +113,19 @@ def _state_partitions(spark: SparkSession, ev: DataFrame, settle: bool = True):
     only to advance the watermark. A caller declares it only where the
     output cannot depend on that advance; it is never inferred.
 
+    ``spark.sql.streaming.maxBatchesToRetainInMemory`` becomes 0, the
+    setting Spark documents as disabling the state cache to save
+    memory. The HDFS-backed state store otherwise keeps the last two
+    committed versions of every state map in executor memory after the
+    query stops, until a later maintenance pass finds the query
+    inactive. With 0, every micro-batch after a query's first reads
+    the previous version from the checkpoint's checksum-verified
+    delta or snapshot files, and no committed version is cached. The
+    trade-off: a replay here runs 1-3 batches, so one file reload per
+    batch is cheap, and a finished replay holds no state in memory.
+    Results, checkpoints and recovery are unchanged; the RocksDB
+    provider ignores the key.
+
     Serial-execution assumption: the driver runs queries one at a time,
     so no batch query plans concurrently while the scope is in force. If
     concurrent use ever appears, scope this via a cloned session
@@ -107,7 +135,10 @@ def _state_partitions(spark: SparkSession, ev: DataFrame, settle: bool = True):
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    confs = {"spark.sql.shuffle.partitions": str(max(1, min(cap, -(-size // advisory))))}
+    confs = {
+        "spark.sql.shuffle.partitions": str(max(1, min(cap, -(-size // advisory)))),
+        "spark.sql.streaming.maxBatchesToRetainInMemory": "0",
+    }
     if not settle:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     return conf_scope(spark, confs)
@@ -305,35 +336,34 @@ def late_data_stream(spark: SparkSession, ev: DataFrame, split_frac: float = 0.5
     on-time half."""
     import datetime as _dt
 
-    stats = ev.agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
+    lo, hi = _ts_span(ev)
     # floor-microsecond cutoff arithmetic, pinned so the SQL oracle can
     # reproduce it exactly (timedelta * float rounds half-to-even at the
     # µs; interval/2 in SQL engines may integer-divide the days field)
-    span_us = (stats.hi - stats.lo) // _dt.timedelta(microseconds=1)
-    cutoff = stats.lo + _dt.timedelta(microseconds=int(span_us * split_frac))
-    base = staging.new_dir("crs_late_") + "/in"
+    span_us = (hi - lo) // _dt.timedelta(microseconds=1)
+    cutoff = lo + _dt.timedelta(microseconds=int(span_us * split_frac))
     new_half = ev.filter(F.col("ts") >= _ntz_lit(cutoff))
     old_half = ev.filter(F.col("ts") < _ntz_lit(cutoff))
 
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
-    _land_slice(sel(new_half), base)
+    with staging.run_dir("crs_late_") as root:
+        base = root + "/in"
+        _land_slice(sel(new_half), base)
 
-    src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(base))
-    agg = (
-        src.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            _wall_fmt("window.start").alias("window_start"),
-            "n",
+        src = _with_event_time(spark.readStream.schema(EVENT_SCHEMA).parquet(base))
+        agg = (
+            src.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                _wall_fmt("window.start").alias("window_start"),
+                "n",
+            )
         )
-    )
-    # batch 1 advances the watermark near hi; batch 2's rows all fall
-    # below it and are dropped
-    q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(old_half), base)])
-    return _snapshot_sink(spark, q.name)
+        # batch 1 advances the watermark near hi; batch 2's rows all fall
+        # below it and are dropped
+        q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(old_half), base)])
+        return _snapshot_sink(spark, q.name)
 
 
 def _per_user_state(src: DataFrame, threshold: float) -> DataFrame:
@@ -436,19 +466,20 @@ def stateful_stream_rocksdb(
         "spark.sql.streaming.stateStore.rocksdb"
         ".changelogCheckpointing.enabled": "true",
     }
-    ckpt = staging.new_dir("crs_rocks_") + "/ckpt"
-    with conf_scope(spark, confs):
-        q = _run(spark, ev, _per_user_state(src, threshold), "update", checkpoint=ckpt)
+    with staging.run_dir("crs_rocks_") as run_root:
+        ckpt = run_root + "/ckpt"
+        with conf_scope(spark, confs):
+            q = _run(spark, ev, _per_user_state(src, threshold), "update", checkpoint=ckpt)
 
-    state_files = [
-        f
-        for root, _, files in os.walk(os.path.join(ckpt, "state"))
-        for f in files
-    ]
-    last_rocksdb_proof = any(
-        f.endswith((".changelog", ".zip")) for f in state_files
-    ) and not any(f.endswith(".delta") for f in state_files)
-    return _snapshot_sink(spark, q.name)
+        state_files = [
+            f
+            for root, _, files in os.walk(os.path.join(ckpt, "state"))
+            for f in files
+        ]
+        last_rocksdb_proof = any(
+            f.endswith((".changelog", ".zip")) for f in state_files
+        ) and not any(f.endswith(".delta") for f in state_files)
+        return _snapshot_sink(spark, q.name)
 
 
 def static_join_stream(spark: SparkSession, ev: DataFrame, weights: DataFrame) -> DataFrame:
@@ -588,26 +619,26 @@ def join_then_window_stream(
     import datetime as _dt
 
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
-    # private dir (batch 2 appends a sentinel file) populated by
-    # hardlinks to the shared staged copy — no second staging write
-    base = _stage_mutable(ev, "crs_msop_")
     sentinel = ev.filter(F.col("event_type") == "error").orderBy("ts").limit(1)
-    joined = _interval_join(spark, base, delay, "inner", lookback)
-    agg = (
-        joined.groupBy(F.window("p_ts", width))
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .select(
-            _wall_fmt("window.start").alias("window_start"),
-            _wall_utc("window.end").alias("w_end"),
-            "n_pairs",
+    with staging.run_dir("crs_msop_") as root:
+        # private dir (batch 2 appends a sentinel file) populated by
+        # hardlinks to the shared staged copy — no second staging write
+        base = _stage_mutable(ev, root)
+        joined = _interval_join(spark, base, delay, "inner", lookback)
+        agg = (
+            joined.groupBy(F.window("p_ts", width))
+            .agg(F.count(F.lit(1)).alias("n_pairs"))
+            .select(
+                _wall_fmt("window.start").alias("window_start"),
+                _wall_utc("window.end").alias("w_end"),
+                "n_pairs",
+            )
         )
-    )
-    # batch 1: all data, the watermark set at its end; batch 2 (the
-    # sentinel): finalized windows emit
-    q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(sentinel), base)])
-    out = _snapshot_sink(spark, q.name)
-    hi = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row scalar
-    horizon = hi - _dt.timedelta(hours=4)  # delay 2h + lookback 1h + width 1h
+        # batch 1: all data, the watermark set at its end; batch 2 (the
+        # sentinel): finalized windows emit
+        q = _run(spark, ev, agg, "append", between=[lambda _: _land_slice(sel(sentinel), base)])
+        out = _snapshot_sink(spark, q.name)
+    horizon = _ts_span(ev)[1] - _dt.timedelta(hours=4)  # delay 2h + lookback 1h + width 1h
     return (
         out.filter(F.col("w_end") <= _ntz_lit(horizon))
         .select("window_start", "n_pairs")
@@ -623,7 +654,6 @@ def foreach_batch_merge_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     maxFilesPerTrigger=1, so cross-batch accumulation is actually
     exercised; the final state must equal the whole-input batch GROUP
     BY (the SQL oracle)."""
-    base = staging.new_dir("crs_fbm_")
     sel = ev.select("event_id", "ts", "user_id", "event_type", "value", "props")
     # read-only 4-file source: session-cached, never mutated
     src_dir = _slice_stage(sel.repartition(4))
@@ -662,13 +692,14 @@ def foreach_batch_merge_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
         state["df"] = batch.sparkSession.read.parquet(path)
 
     src = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src_dir)
-    _run(spark, ev, src, sink=merge_batch, checkpoint=base + "/ckpt")
-    final = state["df"]
-    return final.select(
-        "user_id",
-        "n_events",
-        F.round(F.col("cents") / 100.0, 2).alias("total_value"),
-    )
+    with staging.run_dir("crs_fbm_") as base:
+        _run(spark, ev, src, sink=merge_batch, checkpoint=base + "/ckpt")
+        # the state table lives in the run dir: snapshot it before removal
+        return state["df"].select(
+            "user_id",
+            "n_events",
+            F.round(F.col("cents") / 100.0, 2).alias("total_value"),
+        ).localCheckpoint(eager=True)
 
 
 def checkpoint_recovery_stream(
@@ -689,21 +720,21 @@ def checkpoint_recovery_stream(
     the plain batch GROUP BY, making recovery driver-falsifiable: a
     state-losing restart would report only the second half's counts.
     """
-    stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    cutoff = stats.lo + (stats.hi - stats.lo) * split_frac
-    base = staging.new_dir("crs_ckpt_")
-    src_dir, ckpt_dir = base + "/in", base + "/ckpt"
+    lo, hi = _ts_span(ev)
+    cutoff = lo + (hi - lo) * split_frac
     sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
-    _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cutoff))), src_dir)
+    with staging.run_dir("crs_ckpt_") as base:
+        src_dir, ckpt_dir = base + "/in", base + "/ckpt"
+        _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cutoff))), src_dir)
 
-    def run_instance() -> DataFrame:
-        src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
-        agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-        return _drain(spark, ev, agg, "complete", ckpt_dir)
+        def run_instance() -> DataFrame:
+            src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
+            agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+            return _drain(spark, ev, agg, "complete", ckpt_dir)
 
-    run_instance()  # first instance: oldest half, then terminates
-    _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)
-    return run_instance()  # second instance: resumes from the checkpoint
+        run_instance()  # first instance: oldest half, then terminates
+        _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)
+        return run_instance()  # second instance: resumes from the checkpoint
 
 
 def tws_available() -> bool:
@@ -805,62 +836,59 @@ def tablelog_sink_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
-    stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    cutoff = stats.lo + (stats.hi - stats.lo) * 0.5
-    base = staging.new_dir("crs_logsink_")
-    src_dir = base + "/in"
-    log = TableLog(base + "/table")
-    sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
-    _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cutoff))), src_dir)
+    lo, hi = _ts_span(ev)
+    cutoff = lo + (hi - lo) * 0.5
+    with staging.run_dir("crs_logsink_") as base:
+        src_dir = base + "/in"
+        log = TableLog(base + "/table")
+        sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
+        _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cutoff))), src_dir)
 
-    committed_batches: set[int] = set()
+        committed_batches: set[int] = set()
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        already = set()
-        for v in log.versions():
-            op = _json.loads(log._manifest_path(v).read_text()).get("op", "")
-            if op.startswith("stream-batch-"):
-                already.add(int(op.rsplit("-", 1)[1]))
-        if batch_id in already:  # replay after partial failure: skip
-            return
-        new = log._land(
-            batch_df.select("event_id", "user_id", "event_type", "value"),
-            n_files=2,
-            tag=f"b{batch_id}",
+        def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+            already = set()
+            for v in log.versions():
+                op = _json.loads(log._manifest_path(v).read_text()).get("op", "")
+                if op.startswith("stream-batch-"):
+                    already.add(int(op.rsplit("-", 1)[1]))
+            if batch_id in already:  # replay after partial failure: skip
+                return
+            new = log._land(
+                batch_df.select("event_id", "user_id", "event_type", "value"),
+                n_files=2,
+                tag=f"b{batch_id}",
+            )
+            log.commit(
+                op=f"stream-batch-{batch_id}",
+                build=lambda prev: (prev["files"] if prev is not None else []) + new,
+            )
+            committed_batches.add(batch_id)
+
+        # micro-batch 0 -> manifest version 0; the newer half lands, then
+        # micro-batch 1 -> manifest version 1
+        _run(
+            spark,
+            ev,
+            spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
+            sink=commit_batch,
+            checkpoint=base + "/ckpt",
+            between=[lambda _: _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)],
         )
-        log.commit(
-            op=f"stream-batch-{batch_id}",
-            build=lambda prev: (prev["files"] if prev is not None else []) + new,
-        )
-        committed_batches.add(batch_id)
 
-    # micro-batch 0 -> manifest version 0; the newer half lands, then
-    # micro-batch 1 -> manifest version 1
-    _run(
-        spark,
-        ev,
-        spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
-        sink=commit_batch,
-        checkpoint=base + "/ckpt",
-        between=[lambda _: _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cutoff))), src_dir)],
-    )
-
-    table = log.snapshot(spark)
-    agg = table.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("vc"),
-    ).collect()[0]
-    import shutil
-
-    out = [
-        (
-            len(log.versions()),
-            int(agg["n"]),
-            int(agg["vc"]),
-            bool(len(committed_batches) == len(log.versions())),
-        )
-    ]
-    shutil.rmtree(base, ignore_errors=True)
+        table = log.snapshot(spark)
+        agg = table.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("vc"),
+        ).collect()[0]
+        out = [
+            (
+                len(log.versions()),
+                int(agg["n"]),
+                int(agg["vc"]),
+                bool(len(committed_batches) == len(log.versions())),
+            )
+        ]
     from chess_ratings_spark import tables as _tables
 
     return _tables.local_table(
@@ -899,10 +927,9 @@ def outer_interval_join_stream(
     set exactly replayable."""
     joined = _interval_join(spark, _stage(ev), delay, "left_outer", lookback)
     out = _drain(spark, ev, joined.select("purchase_id", "view_id", "p_ts"), "append")
-    hi = ev.agg(F.max("ts").alias("hi")).collect()[0]["hi"]  # bounded scalar
     import datetime as _dt
 
-    w = hi - _dt.timedelta(hours=2)
+    w = _ts_span(ev)[1] - _dt.timedelta(hours=2)
     lo_band, hi_band = w - _dt.timedelta(hours=1), w + _dt.timedelta(hours=1)
     # p_ts is LTZ (watermarks require it); the band literals derive
     # from the NTZ source column. Compare in NTZ wall-clock space —
@@ -1167,7 +1194,6 @@ def ttl_state_stream(
     ttl_ms = ttl_us // 1000
 
     staged = _stage(ev)
-    ckpt = staging.new_dir("crs_ttlstate_") + "/ckpt"
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
         .parquet(staged)
@@ -1232,33 +1258,36 @@ def ttl_state_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = _run(spark, ev, live, "append", checkpoint=ckpt)
-    # The access-time reset set is deterministic only if ALL data lands
-    # in one micro-batch (documented above) — enforce it loudly instead
-    # of letting a future maxFilesPerTrigger/regression produce silently
-    # batch-dependent generations (trailing no-data batches are fine:
-    # they only advance the watermark and fire timers).
-    data_batches = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
-    if data_batches > 1:
-        raise AssertionError(
-            f"ttl_state_stream: input split across {data_batches} "
-            "micro-batches — single-batch determinism contract broken"
+    with staging.run_dir("crs_ttlstate_") as root:
+        ckpt = root + "/ckpt"
+        q = _run(spark, ev, live, "append", checkpoint=ckpt)
+        # The access-time reset set is deterministic only if ALL data lands
+        # in one micro-batch (documented above) — enforce it loudly instead
+        # of letting a future maxFilesPerTrigger/regression produce silently
+        # batch-dependent generations (trailing no-data batches are fine:
+        # they only advance the watermark and fire timers).
+        data_batches = sum(
+            1 for p in q.recentProgress if p["numInputRows"] > 0
         )
-    spark.catalog.dropTempView(q.name)  # sink is empty by design
-    return (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .select(
-            F.col("key.user_id").alias("user_id"),
-            F.col("value.groupState.gens").alias("gens"),
-            F.col("value.groupState.n").alias("n_live"),
-            F.col("value.groupState.vc").alias("vc_live"),
-            F.col("value.groupState.last_us").alias("last_us"),
+        if data_batches > 1:
+            raise AssertionError(
+                f"ttl_state_stream: input split across {data_batches} "
+                "micro-batches — single-batch determinism contract broken"
+            )
+        spark.catalog.dropTempView(q.name)  # sink is empty by design
+        return (
+            spark.read.format("statestore")
+            .load(ckpt)
+            .select(
+                F.col("key.user_id").alias("user_id"),
+                F.col("value.groupState.gens").alias("gens"),
+                F.col("value.groupState.n").alias("n_live"),
+                F.col("value.groupState.vc").alias("vc_live"),
+                F.col("value.groupState.last_us").alias("last_us"),
+            )
+            .orderBy("user_id")
+            .localCheckpoint(eager=True)
         )
-        .orderBy("user_id")
-    )
 
 
 def semi_join_stream(
@@ -1306,105 +1335,102 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
 
     from chess_ratings_spark.operators.tablelog import TableLog
 
-    stats = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    cut1 = stats.lo + (stats.hi - stats.lo) * 0.34
-    cut2 = stats.lo + (stats.hi - stats.lo) * 0.67
-    base = staging.new_dir("crs_shardsink_")
-    src_dir = base + "/in"
-    log = TableLog(base + "/table")
-    sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
-    _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cut1))), src_dir)
+    lo, hi = _ts_span(ev)
+    cut1 = lo + (hi - lo) * 0.34
+    cut2 = lo + (hi - lo) * 0.67
+    with staging.run_dir("crs_shardsink_") as base:
+        src_dir = base + "/in"
+        log = TableLog(base + "/table")
+        sel = lambda d: d.select("event_id", "ts", "user_id", "event_type", "value", "props")  # noqa: E731
+        _land_slice(sel(ev.filter(F.col("ts") < _ntz_lit(cut1))), src_dir)
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        already = set()
-        for v in log.versions():
-            op = _json.loads(log._manifest_path(v).read_text()).get("op", "")
-            if op.startswith("stream-batch-"):
-                already.add(int(op.rsplit("-", 1)[1]))
-        if batch_id in already:  # replay after partial failure: skip
-            return
-        log.append_manifest_sharded(
-            batch_df.select(
-                "event_id", "user_id", "event_type",
-                F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
-            ),
-            n_files=2,
-            tag=f"b{batch_id}",
-            op=f"stream-batch-{batch_id}",
+        def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+            already = set()
+            for v in log.versions():
+                op = _json.loads(log._manifest_path(v).read_text()).get("op", "")
+                if op.startswith("stream-batch-"):
+                    already.add(int(op.rsplit("-", 1)[1]))
+            if batch_id in already:  # replay after partial failure: skip
+                return
+            log.append_manifest_sharded(
+                batch_df.select(
+                    "event_id", "user_id", "event_type",
+                    F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
+                ),
+                n_files=2,
+                tag=f"b{batch_id}",
+                op=f"stream-batch-{batch_id}",
+            )
+
+        files_before = n_preopt = v_pre_opt = v_opt = files_after = pre_opt_batches = None
+
+        def land_middle(q: StreamingQuery) -> None:
+            mid = (F.col("ts") >= _ntz_lit(cut1)) & (F.col("ts") < _ntz_lit(cut2))
+            _land_slice(sel(ev.filter(mid)), src_dir)
+
+        def optimize_then_land_last(q: StreamingQuery) -> None:
+            nonlocal files_before, n_preopt, v_pre_opt, v_opt, files_after, pre_opt_batches
+            files_before = len(log.resolve_files())
+            n_preopt = log.snapshot(spark).count()
+            v_pre_opt = log.latest_version()
+            v_opt = log.optimize(spark, target_rows_per_file=500_000)  # v2
+            files_after = len(log.resolve_files())
+            pre_opt_batches = {p["batchId"] for p in q.recentProgress}
+            _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cut2))), src_dir)
+
+        # batch 0 -> v0 (2 files, 1 shard); batch 1 -> v1 (4 files, 2
+        # shards); OPTIMIZE -> v2; batch 2 -> v3, appends onto compacted
+        q = _run(
+            spark,
+            ev,
+            spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
+            sink=commit_batch,
+            checkpoint=base + "/ckpt",
+            between=[land_middle, optimize_then_land_last],
+        )
+        # ground truth for the batch/version relationships: the batch
+        # ids the STREAM actually fired (recentProgress), not an
+        # assumption about which staged drops produce batches — a
+        # 0-row drop can still fire a data batch for its new file, so
+        # "non-empty thirds" under-counts (round-11 review)
+        fired = {p["batchId"] for p in q.recentProgress}
+        rows_after_opt = sum(
+            int(p["numInputRows"])
+            for p in q.recentProgress
+            if p["batchId"] not in pre_opt_batches
         )
 
-    files_before = n_preopt = v_pre_opt = v_opt = files_after = pre_opt_batches = None
-
-    def land_middle(q: StreamingQuery) -> None:
-        mid = (F.col("ts") >= _ntz_lit(cut1)) & (F.col("ts") < _ntz_lit(cut2))
-        _land_slice(sel(ev.filter(mid)), src_dir)
-
-    def optimize_then_land_last(q: StreamingQuery) -> None:
-        nonlocal files_before, n_preopt, v_pre_opt, v_opt, files_after, pre_opt_batches
-        files_before = len(log.resolve_files())
-        n_preopt = log.snapshot(spark).count()
-        v_pre_opt = log.latest_version()
-        v_opt = log.optimize(spark, target_rows_per_file=500_000)  # v2
-        files_after = len(log.resolve_files())
-        pre_opt_batches = {p["batchId"] for p in q.recentProgress}
-        _land_slice(sel(ev.filter(F.col("ts") >= _ntz_lit(cut2))), src_dir)
-
-    # batch 0 -> v0 (2 files, 1 shard); batch 1 -> v1 (4 files, 2
-    # shards); OPTIMIZE -> v2; batch 2 -> v3, appends onto compacted
-    q = _run(
-        spark,
-        ev,
-        spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
-        sink=commit_batch,
-        checkpoint=base + "/ckpt",
-        between=[land_middle, optimize_then_land_last],
-    )
-    # ground truth for the batch/version relationships: the batch
-    # ids the STREAM actually fired (recentProgress), not an
-    # assumption about which staged drops produce batches — a
-    # 0-row drop can still fire a data batch for its new file, so
-    # "non-empty thirds" under-counts (round-11 review)
-    fired = {p["batchId"] for p in q.recentProgress}
-    rows_after_opt = sum(
-        int(p["numInputRows"])
-        for p in q.recentProgress
-        if p["batchId"] not in pre_opt_batches
-    )
-
-    agg = log.snapshot(spark).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
-    ).collect()[0]
-    files_final = len(log.resolve_files())
-    try:
-        log.changes_between(spark, v_pre_opt, v_opt)
-        cdf_invisible = False
-    except ValueError:
-        cdf_invisible = True
-    n_batches = sum(
-        1
-        for v in log.versions()
-        if _json.loads(log._manifest_path(v).read_text())["op"].startswith("stream-batch-")
-    )
-    expected_after = max(1, -(-int(n_preopt) // 500_000))  # ceil
-    out = [
-        (
-            int(agg["n"]),
-            int(agg["vc"]),
-            bool(len(log.versions()) == n_batches + 1),
-            bool(files_after == expected_after),
-            bool(files_after <= files_before),
-            bool(
-                files_final > files_after
-                if rows_after_opt > 0
-                else files_final >= files_after
-            ),
-            bool(cdf_invisible),
-            bool(n_batches == len(fired)),
+        agg = log.snapshot(spark).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
+        ).collect()[0]
+        files_final = len(log.resolve_files())
+        try:
+            log.changes_between(spark, v_pre_opt, v_opt)
+            cdf_invisible = False
+        except ValueError:
+            cdf_invisible = True
+        n_batches = sum(
+            1
+            for v in log.versions()
+            if _json.loads(log._manifest_path(v).read_text())["op"].startswith("stream-batch-")
         )
-    ]
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+        expected_after = max(1, -(-int(n_preopt) // 500_000))  # ceil
+        out = [
+            (
+                int(agg["n"]),
+                int(agg["vc"]),
+                bool(len(log.versions()) == n_batches + 1),
+                bool(files_after == expected_after),
+                bool(files_after <= files_before),
+                bool(
+                    files_final > files_after
+                    if rows_after_opt > 0
+                    else files_final >= files_after
+                ),
+                bool(cdf_invisible),
+                bool(n_batches == len(fired)),
+            )
+        ]
     from chess_ratings_spark import tables as _tables
 
     return _tables.local_table(
@@ -1424,14 +1450,17 @@ def sharded_sink_optimize_stream(spark: SparkSession, ev: DataFrame) -> DataFram
 
 
 def _parity_rounds(
-    spark: SparkSession, ev: DataFrame, mid: Callable[[str], None] | None = None
+    spark: SparkSession,
+    ev: DataFrame,
+    root: str,
+    mid: Callable[[str], None] | None = None,
 ) -> str:
-    """The two-round replay the state readers check: the even-user_id
-    slice (event_type, vc = floor(value*100)) drains through a grouped
-    count ``n`` / sum ``s`` (round 1), ``mid(ckpt)`` runs, then the odd
-    slice lands in the same source dir and a second query instance
-    resumes the SAME checkpoint (round 2). Returns the checkpoint dir."""
-    root = staging.new_dir("crs_state_")
+    """The two-round replay the state readers check, in the run dir
+    ``root``: the even-user_id slice (event_type, vc = floor(value*100))
+    drains through a grouped count ``n`` / sum ``s`` (round 1),
+    ``mid(ckpt)`` runs, then the odd slice lands in the same source dir
+    and a second query instance resumes the SAME checkpoint (round 2).
+    Returns the checkpoint dir."""
     indir, ckpt = root + "/in", root + "/ckpt"
     for parity in (0, 1):
         _land_slice(
@@ -1500,18 +1529,19 @@ def state_reader_snapshot(spark: SparkSession, ev: DataFrame) -> DataFrame:
             schema="event_type string, n_mid bigint, vc_mid bigint",
         )
 
-    ckpt = _parity_rounds(spark, ev, read_mid)
-    fin = state_now(ckpt, "n_final", "vc_final")
-    return (
-        fin.join(F.broadcast(mid), "event_type", "left")
-        .select(
-            "event_type",
-            F.coalesce("n_mid", F.lit(0)).cast("bigint").alias("n_mid"),
-            F.coalesce("vc_mid", F.lit(0)).cast("bigint").alias("vc_mid"),
-            F.col("n_final").cast("bigint"),
-            F.col("vc_final").cast("bigint"),
+    with staging.run_dir("crs_state_") as root:
+        fin = state_now(_parity_rounds(spark, ev, root, read_mid), "n_final", "vc_final")
+        return (
+            fin.join(F.broadcast(mid), "event_type", "left")
+            .select(
+                "event_type",
+                F.coalesce("n_mid", F.lit(0)).cast("bigint").alias("n_mid"),
+                F.coalesce("vc_mid", F.lit(0)).cast("bigint").alias("vc_mid"),
+                F.col("n_final").cast("bigint"),
+                F.col("vc_final").cast("bigint"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
 
 
 def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -1547,53 +1577,58 @@ def state_reader_join_sides(spark: SparkSession, ev: DataFrame) -> DataFrame:
     checkpoint's own partitioning — no shuffle; output is two tiny
     census rows plus the emitted-pair census the memory sink saw."""
     staged = _stage(ev)
-    ckpt = staging.new_dir("crs_jstate_") + "/ckpt"
+    with staging.run_dir("crs_jstate_") as root:
+        ckpt = root + "/ckpt"
 
-    def side(name: str, pfx: str) -> DataFrame:
-        src = _with_event_time(
-            spark.readStream.schema(EVENT_SCHEMA).parquet(staged)
-        )
-        return (
-            src.filter(F.col("event_type") == name)
-            .select(
-                F.col("user_id").alias(f"{pfx}_user"),
-                F.date_trunc("second", F.col("ts")).alias(f"{pfx}_ts"),
-                F.floor(F.col("value") * 100).cast("bigint").alias(f"{pfx}_vc"),
+        def side(name: str, pfx: str) -> DataFrame:
+            src = _with_event_time(
+                spark.readStream.schema(EVENT_SCHEMA).parquet(staged)
             )
-            .withWatermark(f"{pfx}_ts", "10 minutes")
-        )
+            return (
+                src.filter(F.col("event_type") == name)
+                .select(
+                    F.col("user_id").alias(f"{pfx}_user"),
+                    F.date_trunc("second", F.col("ts")).alias(f"{pfx}_ts"),
+                    F.floor(F.col("value") * 100).cast("bigint").alias(f"{pfx}_vc"),
+                )
+                .withWatermark(f"{pfx}_ts", "10 minutes")
+            )
 
-    v = side("view", "v")
-    p = side("purchase", "p")
-    joined = v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("v_vc", "p_vc")
-    out = _drain(spark, ev, joined, "append", ckpt)
-    pairs = out.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.coalesce(F.sum(F.col("v_vc") + F.col("p_vc")), F.lit(0))
-        .cast("bigint")
-        .alias("pair_vc"),
-    )
-
-    def buffered(join_side: str, vc_field: str) -> DataFrame:
-        st = (
-            spark.read.format("statestore")
-            .option("joinSide", join_side)
-            .load(ckpt)
-        )
-        return st.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_buffered"),
-            F.coalesce(F.sum(F.col(f"value.{vc_field}")), F.lit(0))
+        v = side("view", "v")
+        p = side("purchase", "p")
+        joined = v.join(
+            p,
+            (F.col("v_user") == F.col("p_user"))
+            & (F.col("p_ts") >= F.col("v_ts"))
+            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
+        ).select("v_vc", "p_vc")
+        out = _drain(spark, ev, joined, "append", ckpt)
+        pairs = out.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.coalesce(F.sum(F.col("v_vc") + F.col("p_vc")), F.lit(0))
             .cast("bigint")
-            .alias("vc_buffered"),
-        ).select(F.lit(join_side).alias("side"), "n_buffered", "vc_buffered")
+            .alias("pair_vc"),
+        )
 
-    sides = buffered("left", "v_vc").unionByName(buffered("right", "p_vc"))
-    return sides.crossJoin(F.broadcast(pairs)).orderBy("side")
+        def buffered(join_side: str, vc_field: str) -> DataFrame:
+            st = (
+                spark.read.format("statestore")
+                .option("joinSide", join_side)
+                .load(ckpt)
+            )
+            return st.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_buffered"),
+                F.coalesce(F.sum(F.col(f"value.{vc_field}")), F.lit(0))
+                .cast("bigint")
+                .alias("vc_buffered"),
+            ).select(F.lit(join_side).alias("side"), "n_buffered", "vc_buffered")
+
+        sides = buffered("left", "v_vc").unionByName(buffered("right", "p_vc"))
+        return (
+            sides.crossJoin(F.broadcast(pairs))
+            .orderBy("side")
+            .localCheckpoint(eager=True)
+        )
 
 
 def pyds_stream_sink_census(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -1636,59 +1671,59 @@ def pyds_stream_sink_census(spark: SparkSession, ev: DataFrame) -> DataFrame:
         spark.dataSource.register(JsonlManifestSink)
     except Exception:
         pass  # already registered in this session
-    root = staging.new_dir("crs_pydsw_")
-    indir = root + "/in"
-    ckpt = root + "/ckpt"
-    out = str(Path(root) / "out")
-    proj = ev.select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
-    )
-    _land_slice(proj.filter("event_id % 2 = 0"), indir)
-
-    def drain_round() -> None:
-        q = (
-            spark.readStream.schema("event_id bigint, event_type string, vc bigint")
-            .parquet(indir)
-            .writeStream.format("crs_jsonl_sink")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with staging.run_dir("crs_pydsw_") as root:
+        indir = root + "/in"
+        ckpt = root + "/ckpt"
+        out = str(Path(root) / "out")
+        proj = ev.select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
         )
-        q.awaitTermination()
+        _land_slice(proj.filter("event_id % 2 = 0"), indir)
 
-    drain_round()  # epoch: even slice
-    drain_round()  # restart, no new data: must publish nothing
-    _land_slice(proj.filter("event_id % 2 = 1"), indir)
-    drain_round()  # epoch: odd slice
-    (Path(out) / "part-orphan.jsonl").write_text(
-        _json.dumps({"event_id": -1, "event_type": "x", "vc": 0}) + "\n"
-    )
-    manifests = read_epoch_manifests(out)
-    data_epochs = [m for m in manifests if m["n_tasks"] > 0]
-    committed = [f["path"] for m in manifests for f in m["files"]]
-    schema = "event_id bigint, event_type string, vc bigint"
-    back = spark.read.schema(schema).json(committed)
-    r = back.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
-    ).collect()[0]
-    n_naive = spark.read.schema(schema).json(out + "/part-*.jsonl").count()
-    n_manifest = sum(f["n_rows"] for m in manifests for f in m["files"])
-    return spark.createDataFrame(
-        [
-            (
-                int(r["n"]),
-                int(r["vc"]),
-                len(data_epochs),
-                bool(n_naive == r["n"] + 1),
-                bool(n_manifest == r["n"]),
+        def drain_round() -> None:
+            q = (
+                spark.readStream.schema("event_id bigint, event_type string, vc bigint")
+                .parquet(indir)
+                .writeStream.format("crs_jsonl_sink")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        ],
-        schema="n_rows bigint, vc_sum bigint, n_data_epochs int,"
-        " orphan_excluded boolean, counts_consistent boolean",
-    )
+            q.awaitTermination()
+
+        drain_round()  # epoch: even slice
+        drain_round()  # restart, no new data: must publish nothing
+        _land_slice(proj.filter("event_id % 2 = 1"), indir)
+        drain_round()  # epoch: odd slice
+        (Path(out) / "part-orphan.jsonl").write_text(
+            _json.dumps({"event_id": -1, "event_type": "x", "vc": 0}) + "\n"
+        )
+        manifests = read_epoch_manifests(out)
+        data_epochs = [m for m in manifests if m["n_tasks"] > 0]
+        committed = [f["path"] for m in manifests for f in m["files"]]
+        schema = "event_id bigint, event_type string, vc bigint"
+        back = spark.read.schema(schema).json(committed)
+        r = back.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc")
+        ).collect()[0]
+        n_naive = spark.read.schema(schema).json(out + "/part-*.jsonl").count()
+        n_manifest = sum(f["n_rows"] for m in manifests for f in m["files"])
+        return spark.createDataFrame(
+            [
+                (
+                    int(r["n"]),
+                    int(r["vc"]),
+                    len(data_epochs),
+                    bool(n_naive == r["n"] + 1),
+                    bool(n_manifest == r["n"]),
+                )
+            ],
+            schema="n_rows bigint, vc_sum bigint, n_data_epochs int,"
+            " orphan_excluded boolean, counts_consistent boolean",
+        )
 
 
 def state_changefeed(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -1711,17 +1746,18 @@ def state_changefeed(spark: SparkSession, ev: DataFrame) -> DataFrame:
     the state-debugging/audit surface: which keys a batch touched and
     what they became, read offline from the checkpoint's own
     partitioning without re-running the stream."""
-    ckpt = _parity_rounds(spark, ev)  # batch 0: even user_ids; batch 1: odd
-    feed = (
-        spark.read.format("statestore")
-        .option("readChangeFeed", "true")
-        .option("changeStartBatchId", 0)
-        .load(ckpt)
-    )
-    return feed.select(
-        F.col("batch_id").cast("int").alias("batch_id"),
-        F.col("key.event_type").alias("event_type"),
-        F.col("change_type").alias("change_type"),
-        F.col("value.count").cast("bigint").alias("n"),
-        F.col("value.sum").cast("bigint").alias("vc"),
-    ).orderBy("batch_id", "event_type")
+    with staging.run_dir("crs_state_") as root:
+        ckpt = _parity_rounds(spark, ev, root)  # batch 0: even user_ids; batch 1: odd
+        feed = (
+            spark.read.format("statestore")
+            .option("readChangeFeed", "true")
+            .option("changeStartBatchId", 0)
+            .load(ckpt)
+        )
+        return feed.select(
+            F.col("batch_id").cast("int").alias("batch_id"),
+            F.col("key.event_type").alias("event_type"),
+            F.col("change_type").alias("change_type"),
+            F.col("value.count").cast("bigint").alias("n"),
+            F.col("value.sum").cast("bigint").alias("vc"),
+        ).orderBy("batch_id", "event_type").localCheckpoint(eager=True)

@@ -25,15 +25,14 @@ def test_purge_removes_every_kind_of_staged_dir(spark, tmp_path, monkeypatch):
     stream_ops.checkpoint_recovery_stream(spark, tables.load(spark, SF_SMOKE, "events"))
     monkeypatch.undo()
     (base,) = [d for d in made if os.path.basename(d).startswith("crs_ckpt_")]
-    ckpt = base + "/ckpt"
-    assert ckpt.startswith(staging._root + os.sep)
+    # a per-run checkpoint goes when its harness returns, before any purge
+    assert base.startswith(staging._root + os.sep) and not os.path.exists(base)
     dirs = {
         "stream events": stream_ops._stage(tables.load(spark, SF_SMOKE, "events")),
         "stream slice": stream_ops._slice_stage(fx.filter("m = 0")),
         "tablelog landing": staging.stage_dir(fx.filter("m = 1"), 2),
         "mor fixture": lakehouse._mor_base_prestaged(spark, SF_SMOKE)[0],
         "lsh index": llm_tier._history_lsh_index(spark, SF_SMOKE),
-        "stream checkpoint": ckpt,
     }
     assert all(os.path.isdir(d) for d in dirs.values())
 
@@ -133,3 +132,26 @@ def test_scoped_dv_read_misses_across_tables_naming_other_paths(spark, tmp_path)
     staged = [staging.stage_dir(log.snapshot_mor(spark)) for log in (t0, t1)]
     assert staged[0] != staged[1]
     assert [spark.read.parquet(d).count() for d in staged] == [90, 100]
+
+
+def test_landings_that_cannot_repeat_are_unkeyed(spark, tmp_path):
+    """In a per-run dir under the staging root, a hardlink of a staged
+    file keys by identity; a file the run wrote itself, or a read whose
+    key holds the per-run path, lands unkeyed and leaves no staged dir."""
+    _one_parquet(spark, str(tmp_path / "src"))
+    staged = staging.stage_dir(spark.read.parquet(str(tmp_path / "src")).filter("k < 30"))
+    run = staging.new_dir("crs_test_run_")
+    (f,) = [os.path.join(staged, f) for f in os.listdir(staged) if f.endswith(".parquet")]
+    _twin(f, run + "/linked")
+    spark.range(20).selectExpr("id AS k").write.parquet(run + "/fresh")
+    reads = {
+        "linked": spark.read.parquet(run + "/linked"),
+        "fresh": spark.read.parquet(run + "/fresh"),
+        "by path": spark.read.parquet(run + "/linked").select("k", "_metadata.file_path"),
+    }
+    unkeyed = {}
+    for kind, df in reads.items():
+        before = staging.COUNTS["dir.unkeyed"]
+        staging.land(df.filter("k > 4"), tmp_path / kind.replace(" ", "_"))
+        unkeyed[kind] = staging.COUNTS["dir.unkeyed"] - before
+    assert unkeyed == {"linked": 0, "fresh": 1, "by path": 1}

@@ -56,9 +56,13 @@ def test_state_partitions_sized_from_input(spark):
     clamped to [1, spark.sql.shuffle.partitions], and sizing reads a
     plan statistic without launching a Spark job."""
     ev = tables.load(spark, SF_SMOKE, "events")  # a new plan: no statistics computed yet
+    retain = "spark.sql.streaming.maxBatchesToRetainInMemory"
     with job_count(spark) as jobs:
-        with stream_ops._state_partitions(spark, ev):
-            pass
+        for prev in (None, "2"):
+            with conf_scope(spark, {retain: prev} if prev else {}):
+                with stream_ops._state_partitions(spark, ev):
+                    assert spark.conf.get(retain) == "0"
+                assert spark.conf.get(retain, None) == prev
         assert jobs() == 0
 
     def state_partitions() -> int:
@@ -81,6 +85,95 @@ def test_state_partitions_sized_from_input(spark):
         n = state_partitions()
     assert 1 < n <= cap
     assert n == min(cap, -(-size // advisory))
+
+
+@pytest.mark.parametrize("site", ["dedup_stream", "tumbling_stream"])
+def test_finished_replay_holds_no_state_in_memory(spark, monkeypatch, site):
+    """A stream run through ``_run`` caches no committed state version:
+    once it returns, every HDFS-backed state operator reports almost no
+    state memory while the state itself (``numRowsTotal``) is there.
+    ``dedup_stream`` runs one batch, ``tumbling_stream`` two."""
+    run, seen = stream_ops._run, []
+    monkeypatch.setattr(stream_ops, "_run", lambda *a, **kw: seen.append(run(*a, **kw)) or seen[-1])
+    assert getattr(stream_ops, site)(spark, tables.load(spark, SF_CORRECT, "events")).collect()
+    ops = [op for q in seen for op in q.lastProgress["stateOperators"]]
+    assert ops and all("loadedMapCacheMissCount" in op["customMetrics"] for op in ops)
+    for op in ops:
+        assert op["numRowsTotal"] > 0 and op["memoryUsedBytes"] < 4096, op
+
+
+def test_state_reload_verifies_delta_checksums(spark, tmp_path):
+    """With no state version cached, batch 2 reads batch 1's state from
+    its delta file, and that read is checksum-verified: a delta file
+    corrupted between the batches fails the query."""
+    from pyspark.errors import StreamingQueryException
+
+    ev = tables.load(spark, SF_SMOKE, "events")
+    indir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    stream_ops._land_slice(ev.filter("user_id % 2 = 0").select("event_type"), indir)
+
+    def corrupt_then_land(_q) -> None:
+        delta = tmp_path / "ckpt" / "state" / "0" / "0" / "1.delta"
+        raw = bytearray(delta.read_bytes())
+        raw[len(raw) // 2] ^= 0xFF
+        delta.write_bytes(bytes(raw))
+        stream_ops._land_slice(ev.filter("user_id % 2 = 1").select("event_type"), indir)
+
+    src = spark.readStream.schema("event_type string").parquet(indir)
+    # the checksum failure is the cause; str() shows it with the JVM trace
+    trace = {"spark.sql.pyspark.jvmStacktrace.enabled": "true"}
+    with conf_scope(spark, trace), pytest.raises(
+        StreamingQueryException, match="CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED"
+    ):
+        stream_ops._run(
+            spark,
+            ev,
+            src.groupBy("event_type").count(),
+            "complete",
+            checkpoint=ckpt,
+            between=[corrupt_then_land],
+        )
+
+
+#: Every harness that writes a per-run dir under the staging root.
+_RUN_DIR_HARNESSES = (
+    "late_data_stream",
+    "checkpoint_recovery_stream",
+    "stateful_stream_rocksdb",
+    "join_then_window_stream",
+    "foreach_batch_merge_stream",
+    "ttl_state_stream",
+    "state_reader_snapshot",
+    "state_changefeed",
+    "state_reader_join_sides",
+    "pyds_stream_sink_census",
+    "tablelog_sink_stream",
+    "sharded_sink_optimize_stream",
+)
+
+
+@pytest.mark.parametrize("site", _RUN_DIR_HARNESSES)
+def test_harness_leaves_no_per_run_dir(spark, site):
+    """Once a harness returns and its rows are collected, every dir it
+    added under the staging root is a staged dir the session holds."""
+    from pathlib import Path
+
+    from chess_ratings_spark import staging
+
+    ev = tables.load(spark, SF_SMOKE, "events")
+    stream_ops._stage(ev)  # the staging root exists before the run
+
+    def entries() -> set[str]:
+        return {e.name for e in Path(staging._root).iterdir()}
+
+    before = entries()
+    getattr(stream_ops, site)(spark, ev).collect()
+    held = {
+        Path(p).relative_to(staging._root).parts[0]
+        for v in staging._STORE.values()
+        if (p := staging._staged_path(v)) is not None
+    }
+    assert entries() - before <= held
 
 
 #: Every harness that declares ``settle=False`` (skips the trailing
